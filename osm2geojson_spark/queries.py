@@ -19,6 +19,7 @@ Cross-engine determinism rules used throughout (so value-hashes match):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1057,14 +1058,14 @@ FROM cl JOIN qual USING (id)
 
 
 def q_minhash_pairs(spark, sf_dir):
-    """MinHash+LSH candidate pairs (xxhash64 seeds — no DuckDB twin;
-    rows-only check; exactness pinned by pytest property tests)."""
+    """MinHash+LSH candidate pairs (xxhash64 seeds — DuckDB has no
+    builtin, so the twin is a pyref literal table)."""
     docs = _docs(spark, sf_dir)
     return DD.minhash_lsh_pairs(docs)
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """SimHash hamming≤3 near-dup pairs (rows-only; pytest-pinned)."""
+    """SimHash hamming≤3 near-dup pairs (pyref literal-table twin)."""
     docs = _docs(spark, sf_dir)
     return DD.simhash_near_dup_pairs(docs)
 
@@ -1636,7 +1637,7 @@ WHERE {lon_sql('c_custkey')} > (r_regionkey * 60 - 170.0000005)
 def q_knn_bruteforce(spark, sf_dir):
     """Exact kNN baseline, planar squared distance (mul/add only → oracle
     bit-exact; the ring-expansion G3 path is checked against this in
-    pytest and registered rows-only below)."""
+    pytest and has its own twin below)."""
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 20)
     supp = _t(spark, sf_dir, "supplier")
     q = cust.select(F.col("c_custkey").alias("query_id"),
@@ -1707,8 +1708,9 @@ SELECT query_id, corpus_id, dist2, CAST(rank AS INT) AS rank FROM (
 
 
 # --------------------------------------------------------------------------
-# image payload (input_hint table — synthesized deterministically, so these
-# register as rows-only checks; invariants are pinned in tests/test_images.py)
+# image payload (input_hint table — synthesized deterministically, so the
+# twins recompute the expected output from the seed formula or as pyref
+# literal tables; invariants are pinned in tests/test_images.py)
 
 
 def q_image_validate(spark, sf_dir):
@@ -11066,539 +11068,296 @@ _HEAD_50 = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    full = _queries_all()
-    ordered = {k: full[k] for k in _HEAD_50}
-    ordered.update((k, v) for k, v in full.items() if k not in ordered)
+    ordered = {k: _CATALOG[k][0] for k in _HEAD_50}
+    ordered.update((k, b) for k, (b, _) in _CATALOG.items()
+                   if k not in ordered)
     return ordered
-
-
-def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "pricing_summary": q_pricing_summary,
-        "star_join": q_star_join,
-        "cogroup_join": q_cogroup_join,
-        "way_assembly": q_way_assembly,
-        "way_bbox": q_way_bbox,
-        "way_geom_type": q_way_geom_type,
-        "window_topk": q_window_topk,
-        "sort_limit": q_sort_limit,
-        "semi_anti": q_semi_anti,
-        "outer_join": q_outer_join,
-        "collect_agg": q_collect_agg,
-        "set_ops": q_set_ops,
-        "rollup": q_rollup,
-        "grouping_sets": q_grouping_sets,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "pivot": q_pivot,
-        "percentiles": q_percentiles,
-        "cube": q_cube,
-        "dedup_kv": q_dedup_kv,
-        "running_sum": q_running_sum,
-        "lead_lag": q_lead_lag,
-        "string_scalar": q_string_scalar,
-        "events_hourly": q_events_hourly,
-        "json_props": q_json_props,
-        "sessionize": q_sessionize,
-        "text_stats": q_text_stats,
-        "exact_dedup": q_exact_dedup,
-        "repetition_stats": q_repetition_stats,
-        "vocab_topk": q_vocab_topk,
-        "term_salience": q_term_salience,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dup_clusters": q_dup_clusters,
-        "minhash_pairs": q_minhash_pairs,
-        "simhash_pairs": q_simhash_pairs,
-        "embedding_topk": q_embedding_topk,
-        "embedding_ann": q_embedding_ann,
-        "embedding_ivf": q_embedding_ivf,
-        "embedding_near_dup": q_embedding_near_dup,
-        "embedding_near_dup_exact": q_embedding_near_dup_exact,
-        "cell_encode": q_cell_encode,
-        "s2_cell_encode": q_s2_cell_encode,
-        "s2_histogram": q_s2_histogram,
-        "hex_encode": q_hex_encode,
-        "hex_smooth": q_hex_smooth,
-        "poly_overlap": q_poly_overlap,
-        "tile_histogram": q_tile_histogram,
-        "tile_pyramid": q_tile_pyramid,
-        "distance_join": q_distance_join,
-        "pip_join": q_pip_join,
-        "knn_bruteforce": q_knn_bruteforce,
-        "knn_ring": q_knn_ring,
-        "image_validate": q_image_validate,
-        "image_tile_join": q_image_tile_join,
-        "audio_validate": q_audio_validate,
-        "audio_probe": q_audio_probe,
-        "video_validate": q_video_validate,
-        "image_phash_dedup": q_image_phash_dedup,
-        "exif_extract": q_exif_extract,
-        "exif_tile_join": q_exif_tile_join,
-        "embedding_pq": q_embedding_pq,
-        "canonical_pick": q_canonical_pick,
-        "bpe_train": q_bpe_train,
-        "geojson_roundtrip": q_geojson_roundtrip,
-        "wkb_point_hex": q_wkb_point_hex,
-        "wkb_roundtrip": q_wkb_roundtrip,
-        "decontaminate": q_decontaminate,
-        "dup_spans": q_dup_spans,
-        "lm_score": q_lm_score,
-        "html_extract": q_html_extract,
-        "trajectory_stats": q_trajectory_stats,
-        "trip_segmentation": q_trip_segmentation,
-        "od_matrix": q_od_matrix,
-        "grid_cluster": q_grid_cluster,
-        "map_match": q_map_match,
-        "geofence": q_geofence,
-        "geohash_rollup": q_geohash_rollup,
-        "quadkey_rollup": q_quadkey_rollup,
-        "heatmap_tiles": q_heatmap_tiles,
-        "vector_tiles": q_vector_tiles,
-        "line_tiles": q_line_tiles,
-        "polygon_tiles": q_polygon_tiles,
-        "osm_polygon_tiles": q_osm_polygon_tiles,
-        "geom_measures": q_geom_measures,
-        "heatmap_pyramid": q_heatmap_pyramid,
-        "contours": q_contours,
-        "compact_cover": q_compact_cover,
-        "shortest_paths": q_shortest_paths,
-        "sssp_delta": q_sssp_delta,
-        "astar_route": q_astar_route,
-        "convex_hull": q_convex_hull,
-        "idw_smooth": q_idw_smooth,
-        "simplify_paths": q_simplify_paths,
-        "polyfill": q_polyfill,
-        "route_path": q_route_path,
-        "isochrone": q_isochrone,
-        "catchment": q_catchment,
-        "catchment_delta": q_catchment_delta,
-        "pagerank": q_pagerank,
-        "triangle_count": q_triangle_count,
-        "focal_sum": q_focal_sum,
-        "morph_raster": q_morph_raster,
-        "integral_image": q_integral_image,
-        "box_filter": q_box_filter,
-        "box_variance": q_box_variance,
-        "edit_distance_join": q_edit_distance_join,
-        "scd2_snapshot": q_scd2_snapshot,
-        "template_match": q_template_match,
-        "glcm": q_glcm,
-        "seq_patterns": q_seq_patterns,
-        "otsu_curve": q_otsu_curve,
-        "link_prediction": q_link_prediction,
-        "palette_quantize": q_palette_quantize,
-        "blob_moments": q_blob_moments,
-        "edge_histogram": q_edge_histogram,
-        "merge_intervals": q_merge_intervals,
-        "distance_transform": q_distance_transform,
-        "harris_corners": q_harris_corners,
-        "focal_mode": q_focal_mode,
-        "ols_trend": q_ols_trend,
-        "motion_vectors": q_motion_vectors,
-        "table_fingerprint": q_table_fingerprint,
-        "locf_resample": q_locf_resample,
-        "exact_quantiles": q_exact_quantiles,
-        "audio_dedup": q_audio_dedup,
-        "clustering_coeff": q_clustering_coeff,
-        "rake_keywords": q_rake_keywords,
-        "dt_update": q_dt_update,
-        "heading_hist": q_heading_hist,
-        "contact_sheet": q_contact_sheet,
-        "hillshade": q_hillshade,
-        "flow_dir": q_flow_dir,
-        "flow_accum": q_flow_accum,
-        "k_core": q_k_core,
-        "image_sharpness": q_image_sharpness,
-        "url_dedup": q_url_dedup,
-        "chunk_windows": q_chunk_windows,
-        "cost_distance": q_cost_distance,
-        "raster_pyramid": q_raster_pyramid,
-        "staypoints": q_staypoints,
-        "multimodal_dedup": q_multimodal_dedup,
-        "funnel": q_funnel,
-        "hits": q_hits,
-        "label_prop": q_label_prop,
-        "modularity": q_modularity,
-        "degree_assort": q_degree_assort,
-        "ks_test": q_ks_test,
-        "mwu_test": q_mwu_test,
-        "acf": q_acf,
-        "iqr_outliers": q_iqr_outliers,
-        "convoys": q_convoys,
-        "spearman": q_spearman,
-        "ab_ztest": q_ab_ztest,
-        "welch_ttest": q_welch_ttest,
-        "psi_drift": q_psi_drift,
-        "seasonal_profile": q_seasonal_profile,
-        "cusum": q_cusum,
-        "attribution": q_attribution,
-        "closeness": q_closeness,
-        "segment_intersections": q_segment_intersections,
-        "stress": q_stress,
-        "ohlc": q_ohlc,
-        "kendall": q_kendall,
-        "mann_kendall": q_mann_kendall,
-        "getis_hotspots": q_getis,
-        "eccentricity": q_eccentricity,
-        "trajectory_lcss": q_trajectory_lcss,
-        "geo_mosaic": q_geo_mosaic,
-        "kruskal": q_kruskal,
-        "compaction_plan": q_compaction_plan,
-        "tri_ruggedness": q_tri,
-        "harmonic": q_harmonic,
-        "seasonal_decompose": q_seasonal_decompose,
-        "areal_interp": q_areal_interp,
-        "effective_diameter": q_effective_diameter,
-        "mosaic_pyramid": q_mosaic_pyramid,
-        "diversity": q_diversity,
-        "randomization_test": q_randomization,
-        "gini": q_gini,
-        "lorenz": q_lorenz,
-        "median_mad": q_median_mad,
-        "dag_layers": q_dag_layers,
-        "interval_coverage": q_interval_coverage,
-        "runs_test": q_runs_test,
-        "weighted_median": q_weighted_median,
-        "group_mode": q_group_mode,
-        "trimmed_mean": q_trimmed_mean,
-        "inverted_index": q_inverted_index,
-        "phrase_search": q_phrase_search,
-        "bm25_topk": q_bm25_topk,
-        "collocations": q_collocations,
-        "image_resize": q_image_resize,
-        "image_mse_dedup": q_image_mse_dedup,
-        "color_histogram": q_color_histogram,
-        "str_pack": q_str_pack,
-        "hausdorff": q_hausdorff,
-        "line_densify": q_line_densify,
-        "trajectory_dtw": q_trajectory_dtw,
-        "dem_crosstab": q_dem_crosstab,
-        "kwic": q_kwic,
-        "equidepth_hist": q_equidepth_hist,
-        "snapshot_diff": q_snapshot_diff,
-        "compression_ratio": q_compression_ratio,
-        "copurchase": q_copurchase,
-        "line_dedup": q_line_dedup,
-        "fuzzy_join": q_fuzzy_join,
-        "event_transitions": q_event_transitions,
-        "link_predict": q_link_predict,
-        "ewma": q_ewma,
-        "gap_fill": q_gap_fill,
-        "image_blobs": q_image_blobs,
-        "image_borders": q_image_borders,
-        "dbscan": q_dbscan,
-        "bpe_encode": q_bpe_encode,
-        "anomaly_zscore": q_anomaly_zscore,
-        "line_merge": q_line_merge,
-        "colocation": q_colocation,
-        "dem_upsample": q_dem_upsample,
-        "skyline": q_skyline,
-        "shard_pack": q_shard_pack,
-        "scd2_build": q_scd2_build,
-        "twap": q_twap,
-        "scene_cuts": q_scene_cuts,
-        "shot_phash": q_shot_phash,
-        "video_dedup": q_video_dedup,
-        "moran": q_moran,
-        "viewshed": q_viewshed,
-        "gram_matrix": q_gram_matrix,
-        "pca_project": q_pca_project,
-        "chi2_assoc": q_chi2_assoc,
-        "cramers_v": q_cramers_v,
-        "polygonize": q_polygonize,
-        "polyline_roundtrip": q_polyline_roundtrip,
-        "audio_segments": q_audio_segments,
-        "hist_equalize": q_hist_equalize,
-        "scc": q_scc,
-        "als_factors": q_als_factors,
-        "bloom_prune": q_bloom_prune,
-        "cms_counters": q_cms_counters,
-        "cms_estimates": q_cms_estimates,
-        "table_profile": q_table_profile,
-        "isotonic": q_isotonic,
-        "setsim_join": q_setsim_join,
-        "retention_cohorts": q_retention_cohorts,
-        "union_area": q_union_area,
-        "watershed": q_watershed,
-        "strahler": q_strahler,
-        "dem_contours": q_dem_contours,
-        "wkt_roundtrip": q_wkt_roundtrip,
-        "isochrone_contour": q_isochrone_contour,
-        "pii_redact": q_pii_redact,
-        "sample_threshold": q_sample_threshold,
-        "sample_stratified": q_sample_stratified,
-        "boilerplate_strip": q_boilerplate_strip,
-        "zonal_stats": q_zonal_stats,
-    }
 
 
 def oracle_sql() -> dict[str, str]:
-    full = _oracle_sql_all()
-    ordered = {k: full[k] for k in _HEAD_50 if k in full}
-    ordered.update((k, v) for k, v in full.items() if k not in ordered)
-    return ordered
+    return {k: _twin_sql(k) for k in queries()}
 
 
-def _oracle_sql_all() -> dict[str, str]:
-    return {
-        "pricing_summary": _SQL_PRICING,
-        "star_join": _SQL_STAR,
-        "cogroup_join": _SQL_COGROUP,
-        "way_assembly": _SQL_WAY_ASSEMBLY,
-        "way_bbox": _SQL_WAY_BBOX,
-        "way_geom_type": _SQL_WAY_GEOM_TYPE,
-        "window_topk": _SQL_WINDOW_TOPK,
-        "sort_limit": _SQL_SORT_LIMIT,
-        "semi_anti": _SQL_SEMI_ANTI,
-        "outer_join": _SQL_OUTER_JOIN,
-        "collect_agg": _SQL_COLLECT_AGG,
-        "set_ops": _SQL_SET_OPS,
-        "rollup": _SQL_ROLLUP,
-        "grouping_sets": _SQL_GROUPING_SETS,
-        "asof_join": _SQL_ASOF_JOIN,
-        "interval_join": _SQL_INTERVAL_JOIN,
-        "pivot": _sql_pivot(),
-        "percentiles": _SQL_PERCENTILES,
-        "cube": _SQL_CUBE,
-        "dedup_kv": _SQL_DEDUP_KV,
-        "running_sum": _SQL_RUNNING_SUM,
-        "lead_lag": _SQL_LEAD_LAG,
-        "string_scalar": _SQL_STRING_SCALAR,
-        "events_hourly": _SQL_EVENTS_HOURLY,
-        "json_props": _SQL_JSON_PROPS,
-        "sessionize": _SQL_SESSIONIZE,
-        "text_stats": _sql_text_stats(),
-        "exact_dedup": _SQL_EXACT_DEDUP,
-        "repetition_stats": _SQL_REPETITION_STATS,
-        "vocab_topk": _SQL_VOCAB_TOPK,
-        "term_salience": _SQL_TERM_SALIENCE,
-        "ngram_jaccard": _SQL_NGRAM_JACCARD,
-        "dup_clusters": _sql_dup_clusters(),
-        "embedding_topk": _SQL_EMBEDDING_TOPK,
-        "embedding_ann": _sql_embedding_ann(),
-        "embedding_near_dup": _sql_embedding_near_dup(),
-        "image_tile_join": _sql_image_tile_join(),
-        "image_validate": _SQL_IMAGE_VALIDATE,
-        "audio_validate": _SQL_AUDIO_VALIDATE,
-        "audio_probe": _SQL_AUDIO_PROBE,
-        "video_validate": _SQL_VIDEO_VALIDATE,
-        "exif_extract": _SQL_EXIF_EXTRACT,
-        "exif_tile_join": _sql_exif_tile_join(),
-        "embedding_pq": _sql_embedding_pq(),
-        "canonical_pick": _sql_canonical_pick(),
-        "bpe_train": _sql_bpe_train(),
-        "geojson_roundtrip": _sql_geojson_roundtrip(),
-        "wkb_point_hex": _sql_wkb_point_hex(),
-        "wkb_roundtrip": _SQL_WKB_ROUNDTRIP,
-        "decontaminate": _SQL_DECONTAMINATE,
-        "dup_spans": _SQL_DUP_SPANS,
-        "lm_score": _SQL_LM_SCORE,
-        "html_extract": _SQL_HTML_EXTRACT,
-        "trajectory_stats": _sql_trajectory_stats(),
-        "trip_segmentation": _sql_trip_segmentation(),
-        "od_matrix": _sql_od_matrix(),
-        "grid_cluster": _sql_grid_cluster(),
-        "map_match": _sql_map_match(),
-        "geofence": _sql_geofence(),
-        "geohash_rollup": _sql_geohash_rollup(),
-        "quadkey_rollup": _sql_quadkey_rollup(),
-        "heatmap_tiles": _sql_heatmap_tiles(),
-        "vector_tiles": _sql_vector_tiles(),
-        "line_tiles": _sql_line_tiles(),
-        "polygon_tiles": _sql_polygon_tiles(),
-        "osm_polygon_tiles": _sql_osm_polygon_tiles(),
-        "geom_measures": _sql_geom_measures(),
-        "heatmap_pyramid": _sql_heatmap_pyramid(),
-        "contours": _sql_contours(),
-        "compact_cover": _sql_compact_cover(),
-        "shortest_paths": _sql_shortest_paths(),
-        "sssp_delta": _sql_shortest_paths(),
-        "astar_route": _sql_astar_route(),
-        "convex_hull": _sql_convex_hull(),
-        "idw_smooth": _sql_idw_smooth(),
-        "simplify_paths": _sql_simplify_paths(),
-        "polyfill": _sql_polyfill(),
-        "route_path": _sql_route_path(),
-        "isochrone": _sql_isochrone(),
-        "catchment": _sql_catchment(),
-        "catchment_delta": _sql_catchment(),
-        "pagerank": _sql_pagerank(),
-        "triangle_count": _sql_triangle_count(),
-        "focal_sum": _sql_focal_sum(),
-        "morph_raster": _sql_morph_raster(),
-        "integral_image": _sql_integral_image(),
-        "box_filter": _sql_box_filter(),
-        "box_variance": _sql_box_variance(),
-        "edit_distance_join": _sql_edit_distance_join(),
-        "scd2_snapshot": _sql_scd2_snapshot(),
-        "template_match": _sql_template_match(),
-        "glcm": _sql_glcm(),
-        "seq_patterns": _sql_seq_patterns(),
-        "otsu_curve": _sql_otsu_curve(),
-        "link_prediction": _sql_link_prediction(),
-        "palette_quantize": _sql_palette_quantize(),
-        "blob_moments": _sql_blob_moments(),
-        "edge_histogram": _sql_edge_histogram(),
-        "merge_intervals": _sql_merge_intervals(),
-        "distance_transform": _sql_distance_transform(),
-        "harris_corners": _sql_harris_corners(),
-        "focal_mode": _sql_focal_mode(),
-        "ols_trend": _sql_ols_trend(),
-        "motion_vectors": _sql_motion_vectors(),
-        "table_fingerprint": _sql_table_fingerprint(),
-        "locf_resample": _sql_locf_resample(),
-        "exact_quantiles": _sql_exact_quantiles(),
-        "audio_dedup": _sql_audio_dedup(),
-        "clustering_coeff": _sql_clustering_coeff(),
-        "rake_keywords": _sql_rake_keywords(),
-        "dt_update": _sql_dt_update(),
-        "heading_hist": _sql_heading_hist(),
-        "contact_sheet": _sql_contact_sheet(),
-        "hillshade": _sql_hillshade(),
-        "flow_dir": _sql_flow_dir(),
-        "flow_accum": _sql_flow_accum(),
-        "k_core": _sql_k_core(),
-        "image_sharpness": _sql_image_sharpness(),
-        "url_dedup": _sql_url_dedup(),
-        "chunk_windows": _sql_chunk_windows(),
-        "cost_distance": _sql_cost_distance(),
-        "raster_pyramid": _sql_raster_pyramid(),
-        "staypoints": _sql_staypoints(),
-        "multimodal_dedup": _sql_multimodal_dedup(),
-        "funnel": _sql_funnel(),
-        "hits": _sql_hits(),
-        "label_prop": _sql_label_prop(),
-        "modularity": _sql_modularity(),
-        "degree_assort": _sql_degree_assort(),
-        "ks_test": _sql_ks_test(),
-        "mwu_test": _sql_mwu_test(),
-        "acf": _sql_acf(),
-        "iqr_outliers": _sql_iqr_outliers(),
-        "convoys": _sql_convoys(),
-        "spearman": _sql_spearman(),
-        "ab_ztest": _sql_ab_ztest(),
-        "welch_ttest": _sql_welch_ttest(),
-        "psi_drift": _sql_psi_drift(),
-        "seasonal_profile": _sql_seasonal_profile(),
-        "cusum": _sql_cusum(),
-        "attribution": _sql_attribution(),
-        "closeness": _sql_closeness(),
-        "segment_intersections": _sql_segment_intersections(),
-        "stress": _sql_stress(),
-        "ohlc": _sql_ohlc(),
-        "kendall": _sql_kendall(),
-        "mann_kendall": _sql_mann_kendall(),
-        "getis_hotspots": _sql_getis(),
-        "eccentricity": _sql_eccentricity(),
-        "trajectory_lcss": _sql_trajectory_lcss(),
-        "geo_mosaic": _sql_geo_mosaic(),
-        "kruskal": _sql_kruskal(),
-        "compaction_plan": _sql_compaction_plan(),
-        "tri_ruggedness": _sql_tri(),
-        "harmonic": _sql_harmonic(),
-        "seasonal_decompose": _sql_seasonal_decompose(),
-        "areal_interp": _sql_areal_interp(),
-        "effective_diameter": _sql_effective_diameter(),
-        "mosaic_pyramid": _sql_mosaic_pyramid(),
-        "diversity": _sql_diversity(),
-        "randomization_test": _sql_randomization(),
-        "gini": _sql_gini(),
-        "lorenz": _sql_lorenz(),
-        "median_mad": _sql_median_mad(),
-        "dag_layers": _sql_dag_layers(),
-        "interval_coverage": _sql_interval_coverage(),
-        "runs_test": _sql_runs_test(),
-        "weighted_median": _sql_weighted_median(),
-        "group_mode": _sql_group_mode(),
-        "trimmed_mean": _sql_trimmed_mean(),
-        "inverted_index": _sql_inverted_index(),
-        "phrase_search": _sql_phrase_search(),
-        "bm25_topk": _sql_bm25_topk(),
-        "collocations": _sql_collocations(),
-        "image_resize": _sql_image_resize(),
-        "image_mse_dedup": _sql_image_mse_dedup(),
-        "color_histogram": _sql_color_histogram(),
-        "str_pack": _sql_str_pack(),
-        "hausdorff": _sql_hausdorff(),
-        "line_densify": _sql_line_densify(),
-        "trajectory_dtw": _sql_trajectory_dtw(),
-        "dem_crosstab": _sql_dem_crosstab(),
-        "kwic": _sql_kwic(),
-        "equidepth_hist": _sql_equidepth_hist(),
-        "snapshot_diff": _sql_snapshot_diff(),
-        "compression_ratio": _sql_compression_ratio(),
-        "copurchase": _sql_copurchase(),
-        "line_dedup": _sql_line_dedup(),
-        "fuzzy_join": _SQL_FUZZY_JOIN,
-        "event_transitions": _SQL_EVENT_TRANSITIONS,
-        "link_predict": _SQL_LINK_PREDICT,
-        "ewma": _SQL_EWMA,
-        "gap_fill": _SQL_GAP_FILL,
-        "image_blobs": _sql_image_blobs(),
-        "image_borders": _sql_image_borders(),
-        "dbscan": _SQL_DBSCAN,
-        "bpe_encode": _sql_bpe_encode(),
-        "anomaly_zscore": _SQL_ANOMALY_ZSCORE,
-        "line_merge": _SQL_LINE_MERGE,
-        "colocation": _SQL_COLOCATION,
-        "dem_upsample": _sql_dem_upsample(),
-        "skyline": _SQL_SKYLINE,
-        "shard_pack": _SQL_SHARD_PACK,
-        "scd2_build": _SQL_SCD2_BUILD,
-        "twap": _SQL_TWAP,
-        "scene_cuts": _sql_scene_cuts(),
-        "shot_phash": _sql_shot_phash(),
-        "video_dedup": _sql_video_dedup(),
-        "moran": _sql_moran(),
-        "viewshed": _sql_viewshed(),
-        "gram_matrix": _SQL_GRAM_MATRIX,
-        "pca_project": _sql_pca_project(),
-        "chi2_assoc": _SQL_CHI2_ASSOC,
-        "cramers_v": _SQL_CRAMERS_V,
-        "polygonize": _sql_polygonize(),
-        "polyline_roundtrip": _sql_polyline_roundtrip(),
-        "audio_segments": _sql_audio_segments(),
-        "hist_equalize": _sql_hist_equalize(),
-        "scc": _sql_scc(),
-        "als_factors": _sql_als_factors(),
-        "bloom_prune": _sql_bloom_prune(),
-        "cms_counters": _sql_cms_counters(),
-        "cms_estimates": _sql_cms_estimates(),
-        "table_profile": _sql_table_profile(),
-        "isotonic": _sql_isotonic(),
-        "setsim_join": _sql_setsim_join(),
-        "retention_cohorts": _sql_retention_cohorts(),
-        "union_area": _sql_union_area(),
-        "watershed": _sql_watershed(),
-        "strahler": _sql_strahler(),
-        "dem_contours": _sql_dem_contours(),
-        "wkt_roundtrip": _sql_wkt_roundtrip(),
-        "isochrone_contour": _sql_isochrone_contour(),
-        "pii_redact": _SQL_PII_REDACT,
-        "sample_threshold": _SQL_SAMPLE_THRESHOLD,
-        "sample_stratified": _SQL_SAMPLE_STRATIFIED,
-        "boilerplate_strip": _SQL_BOILERPLATE_STRIP,
-        "cell_encode": _sql_cell_encode(),
-        "s2_cell_encode": _sql_s2_cell_encode(),
-        "s2_histogram": _sql_s2_histogram(),
-        "hex_encode": _sql_hex_encode(),
-        "hex_smooth": _sql_hex_smooth(),
-        "poly_overlap": _sql_poly_overlap(),
-        "tile_histogram": _sql_tile_histogram(),
-        "tile_pyramid": _sql_tile_pyramid(),
-        "distance_join": _SQL_DISTANCE_JOIN,
-        "pip_join": _SQL_PIP,
-        "knn_bruteforce": _SQL_KNN_BRUTE,
-        "knn_ring": _SQL_KNN_RING,
-        "embedding_near_dup_exact": _SQL_EMBEDDING_NEAR_DUP_EXACT,
-        # round-3 upgrade: the seeded-xxhash64 / k-means operators DuckDB
-        # cannot express natively get LITERAL-TABLE oracles — the expected
-        # output recomputed by the Spark-free pure-Python/numpy references
-        # in pyref.py (the same ones the hash-parity/similarity pytest
-        # twins pin) and inlined as VALUES. Driver gate: value-exact.
-        "minhash_pairs": _sql_minhash_pairs(),
-        "simhash_pairs": _sql_simhash_pairs(),
-        "embedding_ivf": _sql_embedding_ivf(),
-        "image_phash_dedup": _sql_image_phash_dedup(),
-        "zonal_stats": _sql_zonal_stats(),
-    }
+@functools.cache
+def _twin_sql(name: str) -> str:
+    # memoized here, not on the _sql_* functions: tests call those twice
+    # to prove the literal-table twins are deterministic
+    twin = _CATALOG[name][1]
+    return twin if isinstance(twin, str) else twin()
+
+
+def _catalog(rows):
+    """``name -> (builder, twin)`` in row order. ``twin`` is the DuckDB
+    SQL string, or a zero-argument function that builds it on first
+    use. A repeated name raises; a dict literal would keep the last."""
+    table = {}
+    for name, builder, twin in rows:
+        if name in table:
+            raise ValueError(f"duplicate catalog entry {name!r}")
+        table[name] = (builder, twin)
+    return table
+
+
+# One row per entry: (name, DataFrame builder, DuckDB twin). Twins DuckDB
+# cannot express natively (seeded xxhash64, k-means, ...) are LITERAL
+# tables: the expected output recomputed by the Spark-free references in
+# pyref.py and inlined as VALUES, which is why twins are built lazily.
+_CATALOG = _catalog([
+    ("pricing_summary", q_pricing_summary, _SQL_PRICING),
+    ("star_join", q_star_join, _SQL_STAR),
+    ("cogroup_join", q_cogroup_join, _SQL_COGROUP),
+    ("way_assembly", q_way_assembly, _SQL_WAY_ASSEMBLY),
+    ("way_bbox", q_way_bbox, _SQL_WAY_BBOX),
+    ("way_geom_type", q_way_geom_type, _SQL_WAY_GEOM_TYPE),
+    ("window_topk", q_window_topk, _SQL_WINDOW_TOPK),
+    ("sort_limit", q_sort_limit, _SQL_SORT_LIMIT),
+    ("semi_anti", q_semi_anti, _SQL_SEMI_ANTI),
+    ("outer_join", q_outer_join, _SQL_OUTER_JOIN),
+    ("collect_agg", q_collect_agg, _SQL_COLLECT_AGG),
+    ("set_ops", q_set_ops, _SQL_SET_OPS),
+    ("rollup", q_rollup, _SQL_ROLLUP),
+    ("grouping_sets", q_grouping_sets, _SQL_GROUPING_SETS),
+    ("asof_join", q_asof_join, _SQL_ASOF_JOIN),
+    ("interval_join", q_interval_join, _SQL_INTERVAL_JOIN),
+    ("pivot", q_pivot, _sql_pivot),
+    ("percentiles", q_percentiles, _SQL_PERCENTILES),
+    ("cube", q_cube, _SQL_CUBE),
+    ("dedup_kv", q_dedup_kv, _SQL_DEDUP_KV),
+    ("running_sum", q_running_sum, _SQL_RUNNING_SUM),
+    ("lead_lag", q_lead_lag, _SQL_LEAD_LAG),
+    ("string_scalar", q_string_scalar, _SQL_STRING_SCALAR),
+    ("events_hourly", q_events_hourly, _SQL_EVENTS_HOURLY),
+    ("json_props", q_json_props, _SQL_JSON_PROPS),
+    ("sessionize", q_sessionize, _SQL_SESSIONIZE),
+    ("text_stats", q_text_stats, _sql_text_stats),
+    ("exact_dedup", q_exact_dedup, _SQL_EXACT_DEDUP),
+    ("repetition_stats", q_repetition_stats, _SQL_REPETITION_STATS),
+    ("vocab_topk", q_vocab_topk, _SQL_VOCAB_TOPK),
+    ("term_salience", q_term_salience, _SQL_TERM_SALIENCE),
+    ("ngram_jaccard", q_ngram_jaccard, _SQL_NGRAM_JACCARD),
+    ("dup_clusters", q_dup_clusters, _sql_dup_clusters),
+    ("minhash_pairs", q_minhash_pairs, _sql_minhash_pairs),
+    ("simhash_pairs", q_simhash_pairs, _sql_simhash_pairs),
+    ("embedding_topk", q_embedding_topk, _SQL_EMBEDDING_TOPK),
+    ("embedding_ann", q_embedding_ann, _sql_embedding_ann),
+    ("embedding_ivf", q_embedding_ivf, _sql_embedding_ivf),
+    ("embedding_near_dup", q_embedding_near_dup, _sql_embedding_near_dup),
+    ("embedding_near_dup_exact", q_embedding_near_dup_exact,
+     _SQL_EMBEDDING_NEAR_DUP_EXACT),
+    ("cell_encode", q_cell_encode, _sql_cell_encode),
+    ("s2_cell_encode", q_s2_cell_encode, _sql_s2_cell_encode),
+    ("s2_histogram", q_s2_histogram, _sql_s2_histogram),
+    ("hex_encode", q_hex_encode, _sql_hex_encode),
+    ("hex_smooth", q_hex_smooth, _sql_hex_smooth),
+    ("poly_overlap", q_poly_overlap, _sql_poly_overlap),
+    ("tile_histogram", q_tile_histogram, _sql_tile_histogram),
+    ("tile_pyramid", q_tile_pyramid, _sql_tile_pyramid),
+    ("distance_join", q_distance_join, _SQL_DISTANCE_JOIN),
+    ("pip_join", q_pip_join, _SQL_PIP),
+    ("knn_bruteforce", q_knn_bruteforce, _SQL_KNN_BRUTE),
+    ("knn_ring", q_knn_ring, _SQL_KNN_RING),
+    ("image_validate", q_image_validate, _SQL_IMAGE_VALIDATE),
+    ("image_tile_join", q_image_tile_join, _sql_image_tile_join),
+    ("audio_validate", q_audio_validate, _SQL_AUDIO_VALIDATE),
+    ("audio_probe", q_audio_probe, _SQL_AUDIO_PROBE),
+    ("video_validate", q_video_validate, _SQL_VIDEO_VALIDATE),
+    ("image_phash_dedup", q_image_phash_dedup, _sql_image_phash_dedup),
+    ("exif_extract", q_exif_extract, _SQL_EXIF_EXTRACT),
+    ("exif_tile_join", q_exif_tile_join, _sql_exif_tile_join),
+    ("embedding_pq", q_embedding_pq, _sql_embedding_pq),
+    ("canonical_pick", q_canonical_pick, _sql_canonical_pick),
+    ("bpe_train", q_bpe_train, _sql_bpe_train),
+    ("geojson_roundtrip", q_geojson_roundtrip, _sql_geojson_roundtrip),
+    ("wkb_point_hex", q_wkb_point_hex, _sql_wkb_point_hex),
+    ("wkb_roundtrip", q_wkb_roundtrip, _SQL_WKB_ROUNDTRIP),
+    ("decontaminate", q_decontaminate, _SQL_DECONTAMINATE),
+    ("dup_spans", q_dup_spans, _SQL_DUP_SPANS),
+    ("lm_score", q_lm_score, _SQL_LM_SCORE),
+    ("html_extract", q_html_extract, _SQL_HTML_EXTRACT),
+    ("trajectory_stats", q_trajectory_stats, _sql_trajectory_stats),
+    ("trip_segmentation", q_trip_segmentation, _sql_trip_segmentation),
+    ("od_matrix", q_od_matrix, _sql_od_matrix),
+    ("grid_cluster", q_grid_cluster, _sql_grid_cluster),
+    ("map_match", q_map_match, _sql_map_match),
+    ("geofence", q_geofence, _sql_geofence),
+    ("geohash_rollup", q_geohash_rollup, _sql_geohash_rollup),
+    ("quadkey_rollup", q_quadkey_rollup, _sql_quadkey_rollup),
+    ("heatmap_tiles", q_heatmap_tiles, _sql_heatmap_tiles),
+    ("vector_tiles", q_vector_tiles, _sql_vector_tiles),
+    ("line_tiles", q_line_tiles, _sql_line_tiles),
+    ("polygon_tiles", q_polygon_tiles, _sql_polygon_tiles),
+    ("osm_polygon_tiles", q_osm_polygon_tiles, _sql_osm_polygon_tiles),
+    ("geom_measures", q_geom_measures, _sql_geom_measures),
+    ("heatmap_pyramid", q_heatmap_pyramid, _sql_heatmap_pyramid),
+    ("contours", q_contours, _sql_contours),
+    ("compact_cover", q_compact_cover, _sql_compact_cover),
+    ("shortest_paths", q_shortest_paths, _sql_shortest_paths),
+    ("sssp_delta", q_sssp_delta, _sql_shortest_paths),
+    ("astar_route", q_astar_route, _sql_astar_route),
+    ("convex_hull", q_convex_hull, _sql_convex_hull),
+    ("idw_smooth", q_idw_smooth, _sql_idw_smooth),
+    ("simplify_paths", q_simplify_paths, _sql_simplify_paths),
+    ("polyfill", q_polyfill, _sql_polyfill),
+    ("route_path", q_route_path, _sql_route_path),
+    ("isochrone", q_isochrone, _sql_isochrone),
+    ("catchment", q_catchment, _sql_catchment),
+    ("catchment_delta", q_catchment_delta, _sql_catchment),
+    ("pagerank", q_pagerank, _sql_pagerank),
+    ("triangle_count", q_triangle_count, _sql_triangle_count),
+    ("focal_sum", q_focal_sum, _sql_focal_sum),
+    ("morph_raster", q_morph_raster, _sql_morph_raster),
+    ("integral_image", q_integral_image, _sql_integral_image),
+    ("box_filter", q_box_filter, _sql_box_filter),
+    ("box_variance", q_box_variance, _sql_box_variance),
+    ("edit_distance_join", q_edit_distance_join, _sql_edit_distance_join),
+    ("scd2_snapshot", q_scd2_snapshot, _sql_scd2_snapshot),
+    ("template_match", q_template_match, _sql_template_match),
+    ("glcm", q_glcm, _sql_glcm),
+    ("seq_patterns", q_seq_patterns, _sql_seq_patterns),
+    ("otsu_curve", q_otsu_curve, _sql_otsu_curve),
+    ("link_prediction", q_link_prediction, _sql_link_prediction),
+    ("palette_quantize", q_palette_quantize, _sql_palette_quantize),
+    ("blob_moments", q_blob_moments, _sql_blob_moments),
+    ("edge_histogram", q_edge_histogram, _sql_edge_histogram),
+    ("merge_intervals", q_merge_intervals, _sql_merge_intervals),
+    ("distance_transform", q_distance_transform, _sql_distance_transform),
+    ("harris_corners", q_harris_corners, _sql_harris_corners),
+    ("focal_mode", q_focal_mode, _sql_focal_mode),
+    ("ols_trend", q_ols_trend, _sql_ols_trend),
+    ("motion_vectors", q_motion_vectors, _sql_motion_vectors),
+    ("table_fingerprint", q_table_fingerprint, _sql_table_fingerprint),
+    ("locf_resample", q_locf_resample, _sql_locf_resample),
+    ("exact_quantiles", q_exact_quantiles, _sql_exact_quantiles),
+    ("audio_dedup", q_audio_dedup, _sql_audio_dedup),
+    ("clustering_coeff", q_clustering_coeff, _sql_clustering_coeff),
+    ("rake_keywords", q_rake_keywords, _sql_rake_keywords),
+    ("dt_update", q_dt_update, _sql_dt_update),
+    ("heading_hist", q_heading_hist, _sql_heading_hist),
+    ("contact_sheet", q_contact_sheet, _sql_contact_sheet),
+    ("hillshade", q_hillshade, _sql_hillshade),
+    ("flow_dir", q_flow_dir, _sql_flow_dir),
+    ("flow_accum", q_flow_accum, _sql_flow_accum),
+    ("k_core", q_k_core, _sql_k_core),
+    ("image_sharpness", q_image_sharpness, _sql_image_sharpness),
+    ("url_dedup", q_url_dedup, _sql_url_dedup),
+    ("chunk_windows", q_chunk_windows, _sql_chunk_windows),
+    ("cost_distance", q_cost_distance, _sql_cost_distance),
+    ("raster_pyramid", q_raster_pyramid, _sql_raster_pyramid),
+    ("staypoints", q_staypoints, _sql_staypoints),
+    ("multimodal_dedup", q_multimodal_dedup, _sql_multimodal_dedup),
+    ("funnel", q_funnel, _sql_funnel),
+    ("hits", q_hits, _sql_hits),
+    ("label_prop", q_label_prop, _sql_label_prop),
+    ("modularity", q_modularity, _sql_modularity),
+    ("degree_assort", q_degree_assort, _sql_degree_assort),
+    ("ks_test", q_ks_test, _sql_ks_test),
+    ("mwu_test", q_mwu_test, _sql_mwu_test),
+    ("acf", q_acf, _sql_acf),
+    ("iqr_outliers", q_iqr_outliers, _sql_iqr_outliers),
+    ("convoys", q_convoys, _sql_convoys),
+    ("spearman", q_spearman, _sql_spearman),
+    ("ab_ztest", q_ab_ztest, _sql_ab_ztest),
+    ("welch_ttest", q_welch_ttest, _sql_welch_ttest),
+    ("psi_drift", q_psi_drift, _sql_psi_drift),
+    ("seasonal_profile", q_seasonal_profile, _sql_seasonal_profile),
+    ("cusum", q_cusum, _sql_cusum),
+    ("attribution", q_attribution, _sql_attribution),
+    ("closeness", q_closeness, _sql_closeness),
+    ("segment_intersections", q_segment_intersections,
+     _sql_segment_intersections),
+    ("stress", q_stress, _sql_stress),
+    ("ohlc", q_ohlc, _sql_ohlc),
+    ("kendall", q_kendall, _sql_kendall),
+    ("mann_kendall", q_mann_kendall, _sql_mann_kendall),
+    ("getis_hotspots", q_getis, _sql_getis),
+    ("eccentricity", q_eccentricity, _sql_eccentricity),
+    ("trajectory_lcss", q_trajectory_lcss, _sql_trajectory_lcss),
+    ("geo_mosaic", q_geo_mosaic, _sql_geo_mosaic),
+    ("kruskal", q_kruskal, _sql_kruskal),
+    ("compaction_plan", q_compaction_plan, _sql_compaction_plan),
+    ("tri_ruggedness", q_tri, _sql_tri),
+    ("harmonic", q_harmonic, _sql_harmonic),
+    ("seasonal_decompose", q_seasonal_decompose, _sql_seasonal_decompose),
+    ("areal_interp", q_areal_interp, _sql_areal_interp),
+    ("effective_diameter", q_effective_diameter, _sql_effective_diameter),
+    ("mosaic_pyramid", q_mosaic_pyramid, _sql_mosaic_pyramid),
+    ("diversity", q_diversity, _sql_diversity),
+    ("randomization_test", q_randomization, _sql_randomization),
+    ("gini", q_gini, _sql_gini),
+    ("lorenz", q_lorenz, _sql_lorenz),
+    ("median_mad", q_median_mad, _sql_median_mad),
+    ("dag_layers", q_dag_layers, _sql_dag_layers),
+    ("interval_coverage", q_interval_coverage, _sql_interval_coverage),
+    ("runs_test", q_runs_test, _sql_runs_test),
+    ("weighted_median", q_weighted_median, _sql_weighted_median),
+    ("group_mode", q_group_mode, _sql_group_mode),
+    ("trimmed_mean", q_trimmed_mean, _sql_trimmed_mean),
+    ("inverted_index", q_inverted_index, _sql_inverted_index),
+    ("phrase_search", q_phrase_search, _sql_phrase_search),
+    ("bm25_topk", q_bm25_topk, _sql_bm25_topk),
+    ("collocations", q_collocations, _sql_collocations),
+    ("image_resize", q_image_resize, _sql_image_resize),
+    ("image_mse_dedup", q_image_mse_dedup, _sql_image_mse_dedup),
+    ("color_histogram", q_color_histogram, _sql_color_histogram),
+    ("str_pack", q_str_pack, _sql_str_pack),
+    ("hausdorff", q_hausdorff, _sql_hausdorff),
+    ("line_densify", q_line_densify, _sql_line_densify),
+    ("trajectory_dtw", q_trajectory_dtw, _sql_trajectory_dtw),
+    ("dem_crosstab", q_dem_crosstab, _sql_dem_crosstab),
+    ("kwic", q_kwic, _sql_kwic),
+    ("equidepth_hist", q_equidepth_hist, _sql_equidepth_hist),
+    ("snapshot_diff", q_snapshot_diff, _sql_snapshot_diff),
+    ("compression_ratio", q_compression_ratio, _sql_compression_ratio),
+    ("copurchase", q_copurchase, _sql_copurchase),
+    ("line_dedup", q_line_dedup, _sql_line_dedup),
+    ("fuzzy_join", q_fuzzy_join, _SQL_FUZZY_JOIN),
+    ("event_transitions", q_event_transitions, _SQL_EVENT_TRANSITIONS),
+    ("link_predict", q_link_predict, _SQL_LINK_PREDICT),
+    ("ewma", q_ewma, _SQL_EWMA),
+    ("gap_fill", q_gap_fill, _SQL_GAP_FILL),
+    ("image_blobs", q_image_blobs, _sql_image_blobs),
+    ("image_borders", q_image_borders, _sql_image_borders),
+    ("dbscan", q_dbscan, _SQL_DBSCAN),
+    ("bpe_encode", q_bpe_encode, _sql_bpe_encode),
+    ("anomaly_zscore", q_anomaly_zscore, _SQL_ANOMALY_ZSCORE),
+    ("line_merge", q_line_merge, _SQL_LINE_MERGE),
+    ("colocation", q_colocation, _SQL_COLOCATION),
+    ("dem_upsample", q_dem_upsample, _sql_dem_upsample),
+    ("skyline", q_skyline, _SQL_SKYLINE),
+    ("shard_pack", q_shard_pack, _SQL_SHARD_PACK),
+    ("scd2_build", q_scd2_build, _SQL_SCD2_BUILD),
+    ("twap", q_twap, _SQL_TWAP),
+    ("scene_cuts", q_scene_cuts, _sql_scene_cuts),
+    ("shot_phash", q_shot_phash, _sql_shot_phash),
+    ("video_dedup", q_video_dedup, _sql_video_dedup),
+    ("moran", q_moran, _sql_moran),
+    ("viewshed", q_viewshed, _sql_viewshed),
+    ("gram_matrix", q_gram_matrix, _SQL_GRAM_MATRIX),
+    ("pca_project", q_pca_project, _sql_pca_project),
+    ("chi2_assoc", q_chi2_assoc, _SQL_CHI2_ASSOC),
+    ("cramers_v", q_cramers_v, _SQL_CRAMERS_V),
+    ("polygonize", q_polygonize, _sql_polygonize),
+    ("polyline_roundtrip", q_polyline_roundtrip, _sql_polyline_roundtrip),
+    ("audio_segments", q_audio_segments, _sql_audio_segments),
+    ("hist_equalize", q_hist_equalize, _sql_hist_equalize),
+    ("scc", q_scc, _sql_scc),
+    ("als_factors", q_als_factors, _sql_als_factors),
+    ("bloom_prune", q_bloom_prune, _sql_bloom_prune),
+    ("cms_counters", q_cms_counters, _sql_cms_counters),
+    ("cms_estimates", q_cms_estimates, _sql_cms_estimates),
+    ("table_profile", q_table_profile, _sql_table_profile),
+    ("isotonic", q_isotonic, _sql_isotonic),
+    ("setsim_join", q_setsim_join, _sql_setsim_join),
+    ("retention_cohorts", q_retention_cohorts, _sql_retention_cohorts),
+    ("union_area", q_union_area, _sql_union_area),
+    ("watershed", q_watershed, _sql_watershed),
+    ("strahler", q_strahler, _sql_strahler),
+    ("dem_contours", q_dem_contours, _sql_dem_contours),
+    ("wkt_roundtrip", q_wkt_roundtrip, _sql_wkt_roundtrip),
+    ("isochrone_contour", q_isochrone_contour, _sql_isochrone_contour),
+    ("pii_redact", q_pii_redact, _SQL_PII_REDACT),
+    ("sample_threshold", q_sample_threshold, _SQL_SAMPLE_THRESHOLD),
+    ("sample_stratified", q_sample_stratified, _SQL_SAMPLE_STRATIFIED),
+    ("boilerplate_strip", q_boilerplate_strip, _SQL_BOILERPLATE_STRIP),
+    ("zonal_stats", q_zonal_stats, _sql_zonal_stats),
+])

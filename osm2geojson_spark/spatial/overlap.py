@@ -208,8 +208,10 @@ def rect_areal_interpolate(src: DataFrame, tgt: DataFrame,
     lists are bounded by overlap fan-in). Scale shape: cell-cover
     candidate equi-join (the segjoin discipline — a shared ``res``
     cell is a provable superset of bbox overlap), pair dedupe, one
-    target-keyed aggregate. Degenerate sources (zero area) are the
-    caller's bug and excluded."""
+    target-keyed aggregate. Degenerate or inverted rects (``x1 <= x0``
+    or ``y1 <= y0``) in either layer are the caller's bug and excluded:
+    an inverted pair's negative extents would multiply to a positive
+    area."""
     r = int(res)
 
     def cover(df, p):
@@ -229,7 +231,8 @@ def rect_areal_interpolate(src: DataFrame, tgt: DataFrame,
     t = cover(tgt.select(F.col("tid"), F.col("x0").alias("tx0"),
                          F.col("y0").alias("ty0"),
                          F.col("x1").alias("tx1"),
-                         F.col("y1").alias("ty1")), "t")
+                         F.col("y1").alias("ty1"))
+              .where("(tx1 > tx0) AND (ty1 > ty0)"), "t")
     pairs = (s.join(t, ["cx", "cy"])
              .where("(sx0 < tx1) AND (tx0 < sx1)"
                     " AND (sy0 < ty1) AND (ty0 < sy1)")

@@ -5,12 +5,13 @@ tools/check_oracle.py (run at sf0.01)."""
 
 from __future__ import annotations
 
-import datetime
-import math
-from collections import Counter
+import subprocess
+import sys
 
 import duckdb
 import pytest
+
+from tools.check_oracle import compare
 
 SF = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -21,19 +22,6 @@ FAST_QUERIES = [
     "cell_encode", "tile_histogram", "pip_join", "knn_bruteforce",
     "exact_dedup", "sessionize",
 ]
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    return repr(v)
-
-
-def _multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return Counter(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
 @pytest.fixture(scope="module")
@@ -62,24 +50,33 @@ def test_oracle_match(spark, duck, name):
     cur = duck.execute(E.oracle_sql()[name])
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert len(srows) == len(drows)
-    assert _multiset(sdf.columns, srows) == _multiset(dcols, drows)
+    assert compare(sdf.columns, srows, dcols, drows) == []
 
 
-def test_no_duplicate_registry_keys():
-    # dict literals silently swallow duplicate keys (a later entry
-    # overrides an earlier one without error — bit us once with a
-    # second scd2_build); pin the source itself
-    import re
-    from collections import Counter
-
+def test_catalog_rejects_duplicate_name():
+    # a dict literal keeps the last of two equal keys without error
+    # (a second scd2_build and a second dbscan once did exactly that)
     import osm2geojson_spark.queries as q
 
-    src = open(q.__file__).read()
-    keys = Counter(re.findall(r'^\s{8}"([a-z0-9_]+)":', src, re.M))
-    bad = {k: v for k, v in keys.items() if v != 2}
-    assert not bad, f"registry keys not exactly once per dict: {bad}"
+    with pytest.raises(ValueError, match="dbscan"):
+        q._catalog([("dbscan", q.q_dbscan, q._SQL_DBSCAN),
+                    ("dbscan", q.q_scd2_build, q._SQL_SCD2_BUILD)])
+
+
+def test_oracle_order_is_queries_order():
+    import osm2geojson_spark.queries as q
+
+    assert list(q.oracle_sql()) == list(q.queries())
+
+
+def test_import_builds_no_twin():
+    # twins are built on first oracle_sql(), never at import (the
+    # benchmark's setup time imports this module)
+    code = ("import osm2geojson_spark.queries as q; "
+            "print(q._twin_sql.cache_info().currsize)")
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True).stdout
+    assert out.strip() == "0"
 
 
 def test_head50_samples_every_family():
@@ -88,7 +85,7 @@ def test_head50_samples_every_family():
     # reordering lost nothing.
     import osm2geojson_spark.queries as q
 
-    full = q._queries_all()
+    full = q._CATALOG
     ordered = q.queries()
     assert set(ordered) == set(full)
     head = list(ordered)[:50]

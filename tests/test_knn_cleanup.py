@@ -1,15 +1,17 @@
 """knn_join persisted-frontier lifecycle (VERDICT round-2 item 4): the
 returned plan exposes knn_cleanup(); calling it after consumption
 releases every per-round frontier, so repeated knn_join calls in one
-session do NOT accumulate cached plans."""
+session do NOT accumulate cached plans. Residue is checked by RDD id:
+other tests' cached RDDs may be released while a run is in flight, so
+a plain count can fall below its baseline without any knn leak."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _run_once(spark):
@@ -32,21 +34,21 @@ def _run_once(spark):
 
 def test_knn_cleanup_releases_all_frontiers(spark):
     spark.catalog.clearCache()
-    base = _persistent_rdd_count(spark)
+    base = _persistent_rdd_ids(spark)
     out = _run_once(spark)
-    grown = _persistent_rdd_count(spark)
-    assert grown > base                       # frontiers were persisted
+    grown = _persistent_rdd_ids(spark)
+    assert grown - base                       # frontiers were persisted
     released = out.knn_cleanup(blocking=True)
     assert released >= 3                      # cand/pending rounds + corpus
-    assert _persistent_rdd_count(spark) == base
+    assert _persistent_rdd_ids(spark) - base == set()
 
 
 def test_repeated_knn_join_does_not_accumulate(spark):
     spark.catalog.clearCache()
-    base = _persistent_rdd_count(spark)
-    counts = []
+    residue = []
     for _ in range(3):
+        base = _persistent_rdd_ids(spark)
         out = _run_once(spark)
         out.knn_cleanup(blocking=True)
-        counts.append(_persistent_rdd_count(spark))
-    assert counts == [base, base, base], counts
+        residue.append(_persistent_rdd_ids(spark) - base)
+    assert residue == [set(), set(), set()], residue

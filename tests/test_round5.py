@@ -884,6 +884,24 @@ class TestArealInterp:
         assert got[0]["wsum_area"] == 2500
         assert got[0]["est"] == 7.0 * 2500 / 10000
 
+    def test_inverted_target_excluded(self, spark):
+        # x1 < x0 and y1 < y0 passes the bbox predicate, and its two
+        # negative extents multiply to a positive "intersection"
+        from osm2geojson_spark.spatial.overlap import (
+            rect_areal_interpolate,
+        )
+
+        src = spark.createDataFrame(
+            [(1, 0, 0, 20, 20, 40)],
+            "sid long, x0 long, y0 long, x1 long, y1 long, val long")
+        tgt = spark.createDataFrame(
+            [(7, 0, 0, 10, 10), (8, 10, 10, 5, 5)],
+            "tid long, x0 long, y0 long, x1 long, y1 long")
+        got = {r["tid"]: r for r in
+               rect_areal_interpolate(src, tgt, res=8).collect()}
+        assert set(got) == {7}
+        assert got[7]["wsum_area"] == 100 and got[7]["est"] == 10.0
+
 
 class TestEffectiveDiameter:
     def test_path_graph_p90(self, spark):

@@ -37,6 +37,23 @@ def df_multiset(cols, rows):
     return Counter(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def compare(scols, srows, dcols, drows) -> list[str]:
+    """The gate's Spark-vs-DuckDB compare; returns the problems found
+    (empty when the two results match)."""
+    problems = []
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
+    if not problems:
+        sm, dm = df_multiset(scols, srows), df_multiset(dcols, drows)
+        if sm != dm:
+            diff_s = list((sm - dm).items())[:3]
+            diff_d = list((dm - sm).items())[:3]
+            problems.append(f"values spark-only={diff_s} duck-only={diff_d}")
+    return problems
+
+
 def main():
     import __spark_entry__ as E
     from osm2geojson_spark.session import get_spark
@@ -59,7 +76,6 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        sql = oracles.get(name)
         try:
             sdf = fn(spark, SF)
             srows = [tuple(r) for r in sdf.collect()]
@@ -68,30 +84,15 @@ def main():
             failures.append((name, f"SPARK ERROR: {ex}"))
             print(f"FAIL  {name}: spark error {ex}")
             continue
-        if sql is None:
-            print(f"ok*   {name}: rows-only ({len(srows)} rows)")
-            if len(srows) == 0:
-                failures.append((name, "rows-only query returned 0 rows"))
-            continue
         try:
-            cur = con.execute(sql)
+            cur = con.execute(oracles[name])
             dcols = [d[0] for d in cur.description]
             drows = cur.fetchall()
         except Exception as ex:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {ex}"))
             print(f"FAIL  {name}: duckdb error {ex}")
             continue
-        problems = []
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        if not problems:
-            sm, dm = df_multiset(scols, srows), df_multiset(dcols, drows)
-            if sm != dm:
-                diff_s = list((sm - dm).items())[:3]
-                diff_d = list((dm - sm).items())[:3]
-                problems.append(f"values spark-only={diff_s} duck-only={diff_d}")
+        problems = compare(scols, srows, dcols, drows)
         if problems:
             failures.append((name, "; ".join(problems)))
             print(f"FAIL  {name}: {'; '.join(problems)}")
