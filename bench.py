@@ -31,7 +31,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 from osm2geojson_spark import queries as Q  # noqa: E402
-from osm2geojson_spark.session import get_spark  # noqa: E402
+from osm2geojson_spark.session import get_spark, owned  # noqa: E402
 from osm2geojson_spark.spatial import tiles as TI  # noqa: E402
 from osm2geojson_spark.spatial.pip import point_in_polygon_join  # noqa: E402
 
@@ -377,15 +377,15 @@ def main() -> None:
     for name, fn in BENCH_QUERIES.items():
         if only and name not in only:
             continue
-        runs = [run_once(fn, spark) for _ in range(REPEAT)]
-        # min = steady-state plan cost (excludes one-off codegen/GC noise)
-        timings[name] = round(min(runs), 3)
         # cache hygiene: queries that persist internally (planet split
         # scan, kNN rings, zonal zones) must not leave blocks behind to
         # GC-pressure LATER queries — a 28-query session otherwise
         # degrades its tail by 2-4x even in a quiet window (measured:
         # asof_join 0.58 s isolated vs 3.2 s late in a dirty session)
-        spark.catalog.clearCache()
+        with owned(spark):
+            runs = [run_once(fn, spark) for _ in range(REPEAT)]
+        # min = steady-state plan cost (excludes one-off codegen/GC noise)
+        timings[name] = round(min(runs), 3)
 
     total = round(sum(timings.values()), 3)
     spatial_sec = timings.get("spatial_pipeline")

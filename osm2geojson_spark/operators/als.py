@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.pyref import _als_normal_solve
+from osm2geojson_spark.session import persist
 
 __all__ = ["als_factors"]
 
@@ -63,9 +64,9 @@ def als_factors(ratings: DataFrame, d: int = 8, lam: float = 0.1,
     alternations plus a final user solve (so user factors are
     consistent with the final item factors). Each half-step is one
     join + one groupBy; loop frames are localCheckpoint-truncated."""
-    r = ratings.select(F.col("user").cast("long").alias("user"),
-                       F.col("item").cast("long").alias("item"),
-                       F.col("r").cast("double").alias("r")).persist()
+    r = persist(ratings.select(F.col("user").cast("long").alias("user"),
+                               F.col("item").cast("long").alias("item"),
+                               F.col("r").cast("double").alias("r")))
     # closed-form init, pure codegen (pyref.als_init_factor's formula)
     init = F.expr(
         f"transform(sequence(0, {d - 1}), k -> "

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 _P = 2_147_483_647  # 2^31 - 1 Mersenne prime; keeps a*h+b < 2^63 (no overflow)
 
 
@@ -145,7 +147,7 @@ def pair_jaccard(postings: DataFrame, pairs: DataFrame | None = None) -> DataFra
         # the left join back) — without persist, Spark re-executes the
         # candidate-generation plan (e.g. the whole LSH banding join) once
         # per reference
-        pairs = pairs.persist()
+        pairs = persist(pairs)
         cand_ids = (
             pairs.select(F.col("id_a").alias("id"))
             .unionByName(pairs.select(F.col("id_b").alias("id")))
@@ -153,7 +155,7 @@ def pair_jaccard(postings: DataFrame, pairs: DataFrame | None = None) -> DataFra
         )
         # shrink postings to candidate docs before any join — at 100 TB
         # the candidate set is orders of magnitude smaller than the corpus
-        p = postings.join(cand_ids, "id", "left_semi").persist()
+        p = persist(postings.join(cand_ids, "id", "left_semi"))
         sizes = p.groupBy("id").agg(F.count("*").alias("sz"))
         inter = (
             pairs.join(p.alias("a"), F.col("id_a") == F.col("a.id"))
@@ -205,7 +207,7 @@ def minhash_lsh_pairs(
     # sizes) — persist once instead of recomputing the tokenize+window
     # pipeline per subtree (diamond reuse; Spark has no auto CTE
     # materialization for DataFrames)
-    postings = shingle_postings(df, id_col, text_col, shingle_n).persist()
+    postings = persist(shingle_postings(df, id_col, text_col, shingle_n))
     sig = minhash_signatures(postings, num_hashes)
     band_hashes = [
         F.xxhash64(F.concat_ws(",", F.slice("sig", b * rows_per_band + 1, rows_per_band)))
@@ -251,7 +253,7 @@ def ngram_jaccard_pairs(
         postings = postings.join(
             dfreq.filter(F.col("_df") <= max_df).drop("_df"), ["g"], "inner"
         ).select("id", "g")
-    postings = postings.persist()
+    postings = persist(postings)
     return pair_jaccard(postings).filter(F.col("jaccard") >= threshold)
 
 
@@ -352,12 +354,11 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     graph diameter ≤ O(log n) on typical dup clusters; ``max_iters``
     bounds adversarial chains.
     """
-    edges = (
+    edges = persist(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .persist()
     )
     # localCheckpoint (not persist) on the loop-carried frontier: it
     # TRUNCATES the logical plan, so round N's analysis cost stays O(1)
@@ -456,7 +457,7 @@ def setsim_join(
             lambda t: t != ""))).alias("toks"))
     toks = base.select("id", F.explode("toks").alias("tok"))
     freq = toks.groupBy("tok").agg(F.count("*").alias("df_"))
-    ordered = (
+    ordered = persist(
         toks.join(freq, "tok")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(
@@ -465,7 +466,6 @@ def setsim_join(
         .select("id",
                 F.transform("ord", lambda s: s["t"]).alias("toks"),
                 F.size("ord").alias("m"))
-        .persist()
     )
     prefix = ordered.select(
         "id", "m",

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = ["pagerank", "triangle_count", "k_core", "link_prediction",
            "strongly_connected_components", "hits", "label_propagation",
            "degree_assortativity", "modularity", "closeness_centrality",
@@ -45,7 +47,7 @@ def pagerank(
     usual 0.85 → 85). Dangling-node mass is redistributed uniformly
     (the standard convention), in integer arithmetic."""
     spark = edges.sparkSession
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("e_src"),
             F.col("dst").cast("long").alias("e_dst"),
@@ -53,7 +55,6 @@ def pagerank(
         .distinct()
         .repartition(F.col("e_src"))
         .sortWithinPartitions("e_src")
-        .persist()
     )
     nodes = (
         e.select(F.col("e_src").alias("id"))
@@ -273,12 +274,11 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    rem_edges = (
+    rem_edges = persist(
         edges.select(F.col("src").cast("long").alias("src"),
                      F.col("dst").cast("long").alias("dst"))
         .distinct()
         .repartition(F.col("dst"))
-        .persist()
     )
     remaining = nodes
     assigned = None
@@ -341,12 +341,11 @@ def strongly_connected_components(
                                     "left_anti")
                      .localCheckpoint(eager=True))
         still = remaining.select("id")
-        rem_edges = (
+        rem_edges = persist(
             rem_edges
             .join(still.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(still.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .repartition(F.col("dst"))
-            .persist()
         )
     else:
         raise RuntimeError(
@@ -445,7 +444,7 @@ def hits(
     Two equi-joins + two integer-sum shuffles per round against a
     pre-partitioned persisted edge table; localCheckpoint truncation.
     """
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("e_src"),
             F.col("dst").cast("long").alias("e_dst"),
@@ -453,7 +452,6 @@ def hits(
         .where(F.col("e_src") != F.col("e_dst"))
         .distinct()
         .repartition(F.col("e_src"))
-        .persist()
     )
     nodes = (
         e.select(F.col("e_src").alias("id"))
@@ -536,11 +534,10 @@ def label_propagation(
     b = F.greatest(F.col("src"), F.col("dst")).cast("long").alias("b")
     canon = (edges.select(a, b)
              .where(F.col("a") != F.col("b")).distinct())
-    adj = (canon.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionAll(canon.select(F.col("b").alias("u"),
-                                  F.col("a").alias("v")))
-           .repartition("v")
-           .persist())
+    adj = persist(canon.select(F.col("a").alias("u"), F.col("b").alias("v"))
+                  .unionAll(canon.select(F.col("b").alias("u"),
+                                         F.col("a").alias("v")))
+                  .repartition("v"))
     nodes = (adj.select(F.col("u").alias("node")).distinct()
              .localCheckpoint(eager=True))
     labels = nodes.select("node", F.col("node").alias("label"))
@@ -635,9 +632,8 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     joins + two small aggs; no iteration."""
     a = F.least(F.col("src"), F.col("dst")).cast("long").alias("a")
     b = F.greatest(F.col("src"), F.col("dst")).cast("long").alias("b")
-    canon = (edges.select(a, b)
-             .where(F.col("a") != F.col("b")).distinct()
-             .persist())
+    canon = persist(edges.select(a, b)
+                    .where(F.col("a") != F.col("b")).distinct())
     m = canon.count()
     la = labels.select(F.col("node").alias("a"),
                        F.col("label").alias("lab_a"))
@@ -722,14 +718,13 @@ def stress_centrality(edges: DataFrame, sources: list,
     The seed set is the sampling story at scale (landmarks /
     stratified seeds), exactly like closeness."""
     spark = edges.sparkSession
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("e_src"),
             F.col("dst").cast("long").alias("e_dst"))
         .where(F.col("e_src") != F.col("e_dst"))
         .distinct()
-        .repartition(F.col("e_src"))
-        .persist())
+        .repartition(F.col("e_src")))
     e.count()
     # ---- forward BFS: settled (src, id, dist, sigma)
     settled = spark.createDataFrame(
@@ -763,13 +758,12 @@ def stress_centrality(edges: DataFrame, sources: list,
                         F.col("dist").alias("du"))
     sw = settled.select(F.col("src").alias("s2"), F.col("id").alias("w"),
                         F.col("dist").alias("dw"))
-    dag = (
+    dag = persist(
         e.join(su, (e.e_src == su.u))
         .join(sw, (F.col("e_dst") == sw.w) & (su.s == sw.s2)
               & (sw.dw == su.du + 1))
         .select("s", "u", "w", "du")
-        .repartition(F.col("s"), F.col("w"))
-        .persist())
+        .repartition(F.col("s"), F.col("w")))
     dag.count()
     maxd = settled.agg(F.max("dist").alias("m")).collect()[0]["m"] or 0
     # P rows only materialize where non-zero; absent = leaf (P = 0)

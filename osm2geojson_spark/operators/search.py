@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions.text import tokens_expr
+from osm2geojson_spark.session import persist
 
 __all__ = ["bm25_topk"]
 
@@ -85,9 +86,8 @@ def bm25_topk(
     # per_doc feeds BOTH the stats aggregate and the scored output —
     # without a persist the corpus explode+agg runs twice (measured
     # 2.4 s → 1.0 s at sf0.1). Doc-level rows are bounded (N × (k+2)
-    # ints), the right thing to cache; bm25_cleanup() on the result
-    # releases it (the knn_join discipline).
-    per_doc = per_doc.persist()
+    # ints), the right thing to cache.
+    per_doc = persist(per_doc)
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").alias("l_total"),
@@ -126,12 +126,6 @@ def bm25_topk(
                    score.alias("score"))
            .orderBy(F.col("score").desc(), F.col(id_col))
            .limit(int(limit)))
-
-    def _cleanup(blocking: bool = False) -> int:
-        per_doc.unpersist(blocking)
-        return 1
-
-    out.bm25_cleanup = _cleanup
     return out
 
 

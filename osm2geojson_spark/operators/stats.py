@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = ["contingency_chi2", "cramers_v2_ppb", "otsu_curve",
            "otsu_threshold", "exact_quantiles", "ks_2samp",
            "mann_whitney_u", "iqr_outliers", "spearman_rho",
@@ -507,8 +509,7 @@ def kendall_tau(df: DataFrame, x_col: str, y_col: str, *,
     Scale shape: one cells groupBy shuffle (distinct (x,y) histogram),
     three applyInPandas stripe passes over bounded stripes (~cells/k),
     all scalars crossJoin-broadcast. Columns must be integer-typed
-    (exactness contract; cast upstream). ``kendall_cleanup()`` on the
-    result releases the cells persist."""
+    (exactness contract; cast upstream)."""
     import pandas as pd
 
     src = (df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
@@ -525,8 +526,8 @@ def kendall_tau(df: DataFrame, x_col: str, y_col: str, *,
                  .select(col, F.expr(f"((rn - 1) * {int(blocks)}) div nd")
                          .alias(alias)))
 
-    labeled = (cells.join(bmap("x", "xb"), "x")
-                    .join(bmap("y", "yb"), "y")).persist()
+    labeled = persist(cells.join(bmap("x", "xb"), "x")
+                           .join(bmap("y", "yb"), "y"))
 
     m = labeled.groupBy("xb", "yb").agg(F.sum("c").alias("m"))
     a = m.select(F.col("xb").alias("ax"), F.col("yb").alias("ay"),
@@ -579,12 +580,6 @@ def kendall_tau(df: DataFrame, x_col: str, y_col: str, *,
                    F.expr("ty - b").alias("ty_only"),
                    F.col("b").alias("txy"),
                    F.expr(tau).alias("tau_b")))
-
-    def _cleanup(blocking: bool = False) -> int:
-        labeled.unpersist(blocking)
-        return 1
-
-    out.kendall_cleanup = _cleanup
     return out
 
 
@@ -619,7 +614,6 @@ def mann_kendall(df: DataFrame, time_col: str, value_col: str, *,
                    F.expr("(n * (n - 1)) * (2 * n + 5) - tie18")
                    .alias("var18"))
            .select("n", "s", "var18", F.expr(z).alias("z")))
-    out.kendall_cleanup = kt.kendall_cleanup
     return out
 
 

@@ -307,14 +307,17 @@ def ref_phash_pairs(n: int = 500, seed: int = 42,
                     max_hamming: int = 10) -> list[tuple]:
     """Twin of the ``image_phash_dedup`` catalog query: re-synthesize the
     deterministic image table's phash column (pure numpy encode→decode→
-    aHash, no Spark) and band-join it exactly like simhash."""
+    aHash, no Spark) and band-join it exactly like simhash. Sorted by
+    pair: the band pairs come from a set of string ids, whose iteration
+    order follows PYTHONHASHSEED, and the twin must be the same string in
+    every process."""
     from osm2geojson_spark.synth.images import make_image_row
 
     items = []
     for i in range(n):
         row = make_image_row(i * 2 + seed)
         items.append((row[0], row[6]))  # (image_id, phash)
-    return _chunk16_pairs_hamming(items, max_hamming)
+    return sorted(_chunk16_pairs_hamming(items, max_hamming))
 
 
 # ------------------------------------------------------------------- s2

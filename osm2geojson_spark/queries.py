@@ -32,6 +32,7 @@ from osm2geojson_spark.functions import text as TX
 from osm2geojson_spark.operators import dedup as DD
 from osm2geojson_spark.operators import osm_join as OJ
 from osm2geojson_spark.operators import similarity as SIM
+from osm2geojson_spark.session import persist
 from osm2geojson_spark.spatial import knn as KNN
 from osm2geojson_spark.spatial import pip as PIP
 from osm2geojson_spark.spatial import tiles as TI
@@ -3993,8 +3994,8 @@ def q_morph_raster(spark, sf_dir):
     from osm2geojson_spark.spatial.focal import focal_op, synth_dem_tiles
 
     t = _FOCAL_T
-    tiles = synth_dem_tiles(
-        spark, _FOCAL_TILES, _FOCAL_TILES, t).persist()
+    tiles = persist(synth_dem_tiles(
+        spark, _FOCAL_TILES, _FOCAL_TILES, t))
     ero = focal_op(tiles, op="min3", tile_size=t).withColumnRenamed(
         "data", "ero")
     dil = focal_op(tiles, op="max3", tile_size=t).withColumnRenamed(

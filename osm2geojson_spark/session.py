@@ -5,13 +5,27 @@ join re-planning + skew splitting replaces the reference's hand-tuned
 bucketSize knobs, SortingWriter.java:70-153), shuffle partitions sized to
 cores not the 200 default, Arrow enabled for every pandas-UDF kernel,
 UTC session timezone so DuckDB-oracle comparisons are stable.
+
+Cache lifetimes have one owner, ``owned`` (the engine's counterpart of
+the reference's ``SortingWriter.close()`` deleting its spill dir,
+SortingWriter.java:151): every engine persist goes through ``persist``,
+and a run inside ``with owned(spark):`` leaves no cached plan and no
+local checkpoint behind.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import RDD, StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+#: one list of recorded frames per active ``owned`` block, innermost
+#: last; ``persist`` records into the innermost. Process-wide, not
+#: thread-local: a stream's foreachBatch body runs on another thread but
+#: belongs to the block that started the stream.
+_BLOCKS: list[list[DataFrame | RDD]] = []
 
 
 def get_spark(
@@ -76,3 +90,47 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Read driver-generated parquet tables from an sf dir."""
     out = [spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names]
     return out[0] if len(out) == 1 else out
+
+
+def persist(df: DataFrame | RDD, level: StorageLevel | None = None):
+    """``df.persist(level)`` for a DataFrame or an RDD; inside an
+    ``owned`` block a plan that was not already cached is also recorded
+    there, so the block releases it. Outside a block this is exactly
+    ``df.persist()``."""
+    if _BLOCKS:
+        cur = df.getStorageLevel() if isinstance(df, RDD) else df.storageLevel
+        if cur == StorageLevel.NONE:
+            _BLOCKS[-1].append(df)
+    return df.persist() if level is None else df.persist(level)
+
+
+@contextmanager
+def owned(spark: SparkSession):
+    """Own every cache a run makes: on exit, unpersist (blocking) the
+    frames ``persist`` recorded in the block, newest first, then
+    every persistent RDD created in the block that is a local checkpoint
+    (``DataFrame.unpersist`` does not release those).
+
+    A DataFrame persist is never released at RDD level: that leaves its
+    CacheManager entry behind, and a later persist of the same plan
+    would then cache nothing. Results must be consumed (collected,
+    written, counted) INSIDE the block: a locally checkpointed result
+    cannot be recomputed once its block has exited.
+
+    Yields the cache state at entry, ``(persistent RDD ids, CacheManager
+    entry count)``, for residue checks."""
+    jsc = spark.sparkContext._jsc
+    before = (frozenset(jsc.getPersistentRDDs().keySet()),
+              spark._jsparkSession.sharedState().cacheManager()
+              .numCachedEntries())
+    frames: list[DataFrame | RDD] = []
+    _BLOCKS.append(frames)
+    try:
+        yield before
+    finally:
+        _BLOCKS.pop()
+        for df in reversed(frames):
+            df.unpersist(True)
+        for rid, jrdd in jsc.getPersistentRDDs().items():
+            if rid not in before[0] and jrdd.rdd().isLocallyCheckpointed():
+                jrdd.unpersist(True)

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osm2geojson_spark.session import persist
+
 # reference patterns (OsmJoin.java:63-68), anchored to attribute syntax
 _ID_RE = r'id="([0-9]+)"'
 _LAT_RE = r'lat="(-?[0-9]+(?:\.[0-9]+)?)"'
@@ -207,8 +209,8 @@ def read_osm_blobs_distributed(
     decompression, at the price of staging the decompressed blob text
     on executor memory/local disk (~6× the bz2 size — the classic
     storage-vs-CPU trade; measured −40% on the planet_ingest bench).
-    The cache lives as long as the returned DataFrame's lineage; call
-    ``.rdd.unpersist()`` upstream or let LRU eviction handle it.
+    The cache lives as long as the returned DataFrame's lineage; run
+    inside :func:`osm2geojson_spark.session.owned` to release it.
     """
     sc = spark.sparkContext
     conf = {}
@@ -236,7 +238,7 @@ def read_osm_blobs_distributed(
     if persist_scan:
         from pyspark import StorageLevel
 
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+        tagged = persist(tagged, StorageLevel.MEMORY_AND_DISK)
     blobs = spark.createDataFrame(
         tagged.filter(lambda r: r[0] == "B").map(lambda r: (r[2],)), "blob string")
     frags = sorted(

@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = ["moran_zone_stats", "getis_gi_star"]
 
 _CENTER, _FROM_EAST, _FROM_SOUTH = 0, 1, 2
@@ -153,7 +155,7 @@ def getis_gi_star(tiles: DataFrame, tile_size: int) -> DataFrame:
     from osm2geojson_spark.spatial.focal import focal_op
 
     t = int(tile_size)
-    tiles = tiles.persist()
+    tiles = persist(tiles)
     acc = "CAST(0 AS BIGINT)"
     globals_row = tiles.select(
         F.expr("CAST(size(data) AS BIGINT)").alias("n_t"),
@@ -179,10 +181,4 @@ def getis_gi_star(tiles: DataFrame, tile_size: int) -> DataFrame:
            .select("x", "y", "wx",
                    F.expr("(n * wx) - (9 * s)").alias("a"),
                    F.expr(z).alias("z")))
-
-    def _cleanup(blocking: bool = False) -> int:
-        tiles.unpersist(blocking)
-        return 1
-
-    out.gi_cleanup = _cleanup
     return out

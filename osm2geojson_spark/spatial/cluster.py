@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions import cells as C
 from osm2geojson_spark.operators.dedup import dup_clusters
+from osm2geojson_spark.session import persist
 
 _OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
             if (dx, dy) != (0, 0)]
@@ -51,12 +52,11 @@ def grid_cluster(
     label points; cells below ``min_pts`` are noise by omission."""
     ix = C.lon_ix(F.col(lon_col), res)
     iy = C.lat_iy(F.col(lat_col), res)
-    dense = (
+    dense = persist(
         points.groupBy(ix.alias("ix"), iy.alias("iy"))
         .agg(F.count("*").alias("n_pts"))
         .where(F.col("n_pts") >= min_pts)
         .withColumn("cell", C.cell_from_ixiy(F.col("ix"), F.col("iy")))
-        .persist()
     )
     off = F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -86,10 +86,6 @@ def grid_cluster(
             F.coalesce(F.col("cluster_id"), F.col("cell"))
             .alias("cluster_id"))
     )
-    # the result still reads the persisted dense-cell table; expose an
-    # explicit release for long-lived sessions (same contract as
-    # knn_join's .knn_cleanup)
-    out.cluster_cleanup = dense.unpersist
     return out
 
 
@@ -138,24 +134,22 @@ def dbscan(
                 (F.col("cy") + F.col("o.dy")).alias("cy")))
     d2 = ((F.col("x") - F.col("xb")) * (F.col("x") - F.col("xb"))
           + (F.col("y") - F.col("yb")) * (F.col("y") - F.col("yb")))
-    pairs = (pts.join(img, ["cx", "cy"])
-             .where((F.col("id") != F.col("id_b"))
-                    & (d2 <= F.lit(e * e)))
-             .select(F.col("id").alias("id_a"), "id_b")
-             .persist())
+    pairs = persist(pts.join(img, ["cx", "cy"])
+                    .where((F.col("id") != F.col("id_b"))
+                           & (d2 <= F.lit(e * e)))
+                    .select(F.col("id").alias("id_a"), "id_b"))
     counts = pairs.groupBy("id_a").agg(F.count(F.lit(1)).alias("nn"))
-    core = (counts.where((F.col("nn") + 1) >= min_pts)
-            .select(F.col("id_a").alias("id")).persist())
+    core = persist(counts.where((F.col("nn") + 1) >= min_pts)
+                   .select(F.col("id_a").alias("id")))
     core_b = core.select(F.col("id").alias("id_b"))
     core_edges = (pairs
                   .join(core, pairs.id_a == core.id, "left_semi")
                   .join(core_b, "id_b", "left_semi")
                   .where(F.col("id_a") < F.col("id_b")))
     labels = dup_clusters(core_edges, max_iters=max_iters)
-    core_lab = (core.join(labels, "id", "left")
-                .select("id",
-                        F.coalesce("cluster_id", "id").alias("cluster_id"))
-                .persist())
+    core_lab = persist(core.join(labels, "id", "left")
+                       .select("id",
+                               F.coalesce("cluster_id", "id").alias("cluster_id")))
     # border: non-core endpoint adjacent to >= 1 core; smallest cluster
     border = (pairs
               .join(core, pairs.id_a == core.id, "left_anti")
@@ -172,9 +166,4 @@ def dbscan(
                    F.coalesce("role", F.lit("noise")).alias("role"),
                    F.coalesce("cluster_id", F.lit(-1).cast("long"))
                    .alias("cluster_id")))
-    def _cleanup():
-        pairs.unpersist()
-        core.unpersist()
-        core_lab.unpersist()
-    out.dbscan_cleanup = _cleanup
     return out

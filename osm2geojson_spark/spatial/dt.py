@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = ["distance_transform", "distance_transform_update"]
 
 
@@ -52,7 +54,7 @@ def distance_transform(mask_tiles: DataFrame, tile_size: int,
 
     offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
                      for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))])
-    e = (
+    e = persist(
         cells.select("cell", "x", "y", F.explode(offs).alias("o"))
         .withColumn("nx", F.col("x") + F.col("o.dx"))
         .withColumn("ny", F.col("y") + F.col("o.dy"))
@@ -62,8 +64,7 @@ def distance_transform(mask_tiles: DataFrame, tile_size: int,
                 (F.col("ny") * w_px + F.col("nx")).alias("dst"),
                 F.lit(k).cast("long").alias("w"))
         .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist())
+        .sortWithinPartitions("src"))
 
     seeds = (cells.where(F.col("fg") == 1)
              .select(F.col("cell").alias("id"),
@@ -126,7 +127,7 @@ def distance_transform_update(dist: DataFrame, new_cells: DataFrame,
     offs = F.array(*[F.struct(F.lit(dx).alias("dx"),
                               F.lit(dy).alias("dy"))
                      for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))])
-    e = (
+    e = persist(
         spark.range(w_px * h_px)
         .select(F.col("id").alias("cell"),
                 (F.col("id") % w_px).alias("x"),
@@ -140,8 +141,7 @@ def distance_transform_update(dist: DataFrame, new_cells: DataFrame,
                 (F.col("ny") * w_px + F.col("nx")).alias("dst"),
                 F.lit(k).cast("long").alias("w"))
         .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist())
+        .sortWithinPartitions("src"))
     enc, rounds, changed = _frontier_relax(
         e, merged.select("id", "dist"), frontier, max_iters)
     e.unpersist()

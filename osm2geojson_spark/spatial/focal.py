@@ -36,6 +36,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = [
     "synth_dem_tiles",
     "focal_op",
@@ -374,9 +376,9 @@ def flow_accumulation(dir_tiles: DataFrame, tile_size: int,
     recursive-CTE path walk over the same closed-form directions —
     unique paths because every cell has ≤ 1 outgoing edge."""
     cells = flow_cells(dir_tiles, tile_size, width, height)
-    edges = (cells.where(F.col("tgt").isNotNull())
-             .select(F.col("cell").alias("src"), F.col("tgt").alias("dst"))
-             .repartition("src").persist())
+    edges = persist(cells.where(F.col("tgt").isNotNull())
+                    .select(F.col("cell").alias("src"), F.col("tgt").alias("dst"))
+                    .repartition("src"))
     indeg = edges.groupBy(F.col("dst").alias("cell")).agg(
         F.count(F.lit(1)).alias("pending"))
     state = (
@@ -484,9 +486,9 @@ def strahler_order(dir_tiles: DataFrame, tile_size: int,
 
     Returns ``(cell, strahler)``."""
     cells = flow_cells(dir_tiles, tile_size, width, height)
-    edges = (cells.where(F.col("tgt").isNotNull())
-             .select(F.col("cell").alias("src"), F.col("tgt").alias("dst"))
-             .repartition("src").persist())
+    edges = persist(cells.where(F.col("tgt").isNotNull())
+                    .select(F.col("cell").alias("src"), F.col("tgt").alias("dst"))
+                    .repartition("src"))
     indeg = edges.groupBy(F.col("dst").alias("cell")).agg(
         F.count(F.lit(1)).alias("pending"))
     state = (

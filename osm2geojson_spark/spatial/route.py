@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = [
     "grid_edges",
     "grid_block_part",
@@ -128,7 +130,7 @@ def shortest_paths(
     # every round's sort-merge join reuses it instead of re-exchanging
     # and re-sorting the (big) edges side per round (−26% wall-clock on
     # the 16M-edge expander bench, BENCH.md)
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("src"),
             F.col("dst").cast("long").alias("dst"),
@@ -136,7 +138,6 @@ def shortest_paths(
         )
         .repartition(F.col("src"))
         .sortWithinPartitions("src")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -216,7 +217,7 @@ def sssp_update(
     revoke a distance); the streaming wrapper detects them and falls
     back to a cold :func:`shortest_paths` run for that batch.
     """
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("src"),
             F.col("dst").cast("long").alias("dst"),
@@ -224,7 +225,6 @@ def sssp_update(
         )
         .repartition(F.col("src"))
         .sortWithinPartitions("src")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -594,7 +594,7 @@ def shortest_paths_delta(
         def part(name: str):
             return F.pmod(F.col(name), F.lit(int(n_parts))).cast("long")
 
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("src"),
             F.col("dst").cast("long").alias("dst"),
@@ -604,7 +604,6 @@ def shortest_paths_delta(
         .withColumn("x", part("dst") != F.col("p"))
         .repartition(F.col("p"))
         .sortWithinPartitions("p")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -879,7 +878,7 @@ def travel_time_matrix_delta(
         def part(name: str):
             return F.pmod(F.col(name), F.lit(int(n_parts))).cast("long")
 
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("e_src"),
             F.col("dst").cast("long").alias("e_dst"),
@@ -889,7 +888,6 @@ def travel_time_matrix_delta(
         .withColumn("x", part("e_dst") != F.col("p"))
         .repartition(F.col("p"))
         .sortWithinPartitions("p")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -1083,7 +1081,7 @@ def matrix_update(
     road re-settles its neighborhood once per affected depot without
     re-traversing any graph. Weight increases are out of contract
     (caller falls back to a cold :func:`travel_time_matrix` run)."""
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("e_src"),
             F.col("dst").cast("long").alias("e_dst"),
@@ -1091,7 +1089,6 @@ def matrix_update(
         )
         .repartition(F.col("e_src"))
         .sortWithinPartitions("e_src")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -1174,7 +1171,7 @@ def travel_time_matrix(
     rows, not k traversals — the standard batched-SSSP trick.
     """
     spark = edges.sparkSession
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("e_src"),
             F.col("dst").cast("long").alias("e_dst"),
@@ -1182,7 +1179,6 @@ def travel_time_matrix(
         )
         .repartition(F.col("e_src"))
         .sortWithinPartitions("e_src")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -1328,7 +1324,7 @@ def astar_route(
     node-keyed) landmark table.
     """
     spark = edges.sparkSession
-    e = (
+    e = persist(
         edges.select(
             F.col("src").cast("long").alias("src"),
             F.col("dst").cast("long").alias("dst"),
@@ -1336,7 +1332,6 @@ def astar_route(
         )
         .repartition(F.col("src"))
         .sortWithinPartitions("src")
-        .persist()
     )
     if e.where(F.col("w") < 0).limit(1).count() > 0:
         e.unpersist()
@@ -1358,9 +1353,9 @@ def astar_route(
                    else F.greatest(*lb_terms))
     else:
         lb_expr = F.lit(0).cast("long")
-    lbs = (ldists.select("id", F.coalesce(lb_expr, F.lit(0).cast("long"))
-                         .alias("lb"))
-           .repartition(F.col("id")).sortWithinPartitions("id").persist())
+    lbs = persist(ldists.select("id", F.coalesce(lb_expr, F.lit(0).cast("long"))
+                                .alias("lb"))
+                  .repartition(F.col("id")).sortWithinPartitions("id"))
 
     inf = 1 << 62
     best = inf

@@ -39,6 +39,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import persist
+
 __all__ = ["integral_image_tiles", "box_filter_tiles", "box_stats_tiles"]
 
 
@@ -63,11 +65,11 @@ def integral_image_tiles(tiles: DataFrame, tile_size: int) -> DataFrame:
             yield pd.DataFrame(out, columns=[
                 "tx", "ty", "lsat", "rp", "cp", "tot"])
 
-    loc = tiles.mapInPandas(
+    loc = persist(tiles.mapInPandas(
         local,
         schema=("tx long, ty long, lsat array<long>, rp array<long>, "
                 "cp array<long>, tot long"),
-    ).persist()
+    ))
 
     # A: per pixel row r, exclusive running sum of RP[r] across tx.
     # Partition key (ty, r) = one raster line of tiles — uniform,
@@ -232,7 +234,7 @@ def box_stats_tiles(tiles: DataFrame, tile_size: int, k: int,
     shuffles remain bounded by tiles×T rows."""
     t, k = int(tile_size), int(k)
     gw, gh = int(grid_w), int(grid_h)
-    src = tiles.persist()
+    src = persist(tiles)
     sq = src.select(
         "tx", "ty", F.transform("data", lambda v: v * v).alias("data"))
     s1 = (box_filter_tiles(integral_image_tiles(src, t), t, k, gw, gh)

@@ -19,6 +19,9 @@ Design notes (100 TB/day ingest):
 
 from __future__ import annotations
 
+import glob
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,6 +72,19 @@ def phash_dedup_stream(
     )
 
 
+def _state_versions(state_dir: str) -> list[int]:
+    """The ``v=N`` state versions under ``state_dir``. Versions are
+    found with a local ``glob``, which sees nothing on a remote store,
+    so a non-local ``state_dir`` (s3a://, hdfs://) raises instead of
+    silently restarting the state from v=0."""
+    u = urlparse(state_dir)
+    if u.scheme not in ("", "file"):
+        raise ValueError(
+            f"mosaic state_dir must be a local path, got {state_dir!r}")
+    local = u.path if u.scheme else state_dir
+    return [int(p.rsplit("=", 1)[1]) for p in glob.glob(f"{local}/v=*")]
+
+
 def mosaic_stream(
     spark: SparkSession, imgs: DataFrame, state_dir: str,
     world_px: int = 1024, tile: int = 128, thumb: int = 16,
@@ -84,15 +100,15 @@ def mosaic_stream(
     h_px, md5)`` rows as the batch ``geo_mosaic`` — associativity of
     (sum, count) makes stream-after-N-drops == batch-over-all, which
     test_streaming_images pins byte-exactly. State is bounded by
-    touched tiles × tile area, independent of image count."""
-    import glob as _glob
-
+    touched tiles × tile area, independent of image count. ``state_dir``
+    must be local."""
     import numpy as np
     import pandas as pd
 
     from osm2geojson_spark.operators.images import mosaic_contribs
 
     t, s = int(tile), int(thumb)
+    _state_versions(state_dir)  # a non-local dir fails before the stream
 
     def accum(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
@@ -129,9 +145,7 @@ def mosaic_stream(
             columns=["tx", "ty", "n_contrib", "acc", "cnt"])
 
     def latest_version() -> int:
-        vs = [int(p.rsplit("=", 1)[1])
-              for p in _glob.glob(f"{state_dir}/v=*")]
-        return max(vs) if vs else -1
+        return max(_state_versions(state_dir), default=-1)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         partial = (mosaic_contribs(batch_df, int(world_px), t, s)
@@ -160,7 +174,6 @@ def mosaic_from_state(spark: SparkSession, state_dir: str,
     """Render the accumulated mosaic state to the batch ``geo_mosaic``
     output shape: per tile, ``pixel = acc div cnt`` where covered,
     black elsewhere, ppm-encoded and md5-pinned."""
-    import glob as _glob
     import hashlib
 
     import numpy as np
@@ -169,7 +182,7 @@ def mosaic_from_state(spark: SparkSession, state_dir: str,
     from osm2geojson_spark.synth.images import encode_ppm
 
     t = int(tile)
-    vs = [int(p.rsplit("=", 1)[1]) for p in _glob.glob(f"{state_dir}/v=*")]
+    vs = _state_versions(state_dir)
     if not vs:
         raise ValueError("no mosaic state written yet")
     state = spark.read.parquet(f"{state_dir}/v={max(vs)}")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.operators.video import scene_cuts, shot_signatures
+from osm2geojson_spark.session import persist
 from osm2geojson_spark.synth.video import VIDEO_SCHEMA
 
 __all__ = [
@@ -63,10 +64,9 @@ def shot_dedup_stream(
     integer-ppm Jaccard. Returns the finished StreamingQuery."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = (shot_signatures(batch_df, thr_per_px=thr_per_px)
-                .where(F.col("error").isNull())
-                .select("media_id", "phash").distinct()
-                .persist())
+        sigs = persist(shot_signatures(batch_df, thr_per_px=thr_per_px)
+                       .where(F.col("error").isNull())
+                       .select("media_id", "phash").distinct())
         try:
             try:
                 old = spark.read.parquet(store_dir)

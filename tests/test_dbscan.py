@@ -1,5 +1,6 @@
 """Exact DBSCAN semantics on hand-built point sets."""
 
+from osm2geojson_spark.session import owned
 from osm2geojson_spark.spatial.cluster import dbscan
 
 
@@ -8,10 +9,9 @@ def _pts(spark, rows):
 
 
 def _run(spark, rows, eps, min_pts):
-    out = dbscan(_pts(spark, rows), eps=eps, min_pts=min_pts)
-    got = {r.id: (r.role, r.cluster_id) for r in out.collect()}
-    out.dbscan_cleanup()
-    return got
+    with owned(spark):
+        out = dbscan(_pts(spark, rows), eps=eps, min_pts=min_pts)
+        return {r.id: (r.role, r.cluster_id) for r in out.collect()}
 
 
 def test_two_clusters_and_noise(spark):

@@ -11,7 +11,7 @@ import sys
 import duckdb
 import pytest
 
-from tools.check_oracle import compare
+from tools.check_oracle import compare, residue
 
 SF = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -44,9 +44,12 @@ def test_entry_smoke(spark):
 @pytest.mark.parametrize("name", FAST_QUERIES)
 def test_oracle_match(spark, duck, name):
     import __spark_entry__ as E
+    from osm2geojson_spark.session import owned
 
-    sdf = E.queries()[name](spark, SF)
-    srows = [tuple(r) for r in sdf.collect()]
+    with owned(spark) as before:
+        sdf = E.queries()[name](spark, SF)
+        srows = [tuple(r) for r in sdf.collect()]
+    assert residue(spark, before) == []
     cur = duck.execute(E.oracle_sql()[name])
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
@@ -77,6 +80,20 @@ def test_import_builds_no_twin():
     out = subprocess.run([sys.executable, "-c", code], check=True,
                          capture_output=True, text=True).stdout
     assert out.strip() == "0"
+
+
+def test_image_phash_twin_is_byte_stable():
+    # its pairs come from a set of string ids; the twin string must not
+    # follow PYTHONHASHSEED
+    import os
+
+    code = ("import hashlib, osm2geojson_spark.queries as q; print(hashlib."
+            "sha256(q._twin_sql('image_phash_dedup').encode()).hexdigest())")
+    shas = {subprocess.run([sys.executable, "-c", code], check=True,
+                           capture_output=True, text=True,
+                           env={**os.environ, "PYTHONHASHSEED": seed}
+                           ).stdout.strip() for seed in ("1", "2")}
+    assert len(shas) == 1, shas
 
 
 def test_head50_samples_every_family():

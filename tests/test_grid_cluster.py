@@ -7,7 +7,9 @@ import random
 
 import pytest
 
+from osm2geojson_spark.session import owned
 from osm2geojson_spark.spatial.cluster import grid_cluster
+from tools.check_oracle import residue
 
 SCHEMA = "lon double, lat double"
 
@@ -89,9 +91,9 @@ def test_matches_python_flood_fill(spark):
 
 def test_no_dense_cells_and_cleanup(spark):
     df = spark.createDataFrame([(0.0, 0.0), (90.0, 45.0)], SCHEMA)
-    out = grid_cluster(df, res=4, min_pts=3)
-    assert out.count() == 0
-    out.cluster_cleanup()   # release the persisted dense-cell table
+    with owned(spark) as before:
+        assert grid_cluster(df, res=4, min_pts=3).count() == 0
+    assert residue(spark, before) == []   # dense-cell table released
 
 
 if __name__ == "__main__":

@@ -318,8 +318,10 @@ def test_bm25_no_joins_single_corpus_agg(spark):
     boundary (plus the repartition hint on the tiny test file), stats
     attach by broadcast, and the top-k is TakeOrderedAndProject (per-
     partition top-k, no global sort)."""
-    df = Q.q_bm25_topk(spark, SF)
-    plan = plan_of(df)
+    from osm2geojson_spark.session import owned
+
+    with owned(spark):   # the per-doc persist is released after
+        plan = plan_of(Q.q_bm25_topk(spark, SF))
     assert "SortMergeJoin" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.session import owned
+
 
 def _edges(spark, pairs):
     return spark.createDataFrame(
@@ -539,9 +541,8 @@ class TestKendall:
 
         df = spark.createDataFrame(
             [(int(x), int(y)) for x, y in rows], "x long, y long")
-        out = kendall_tau(df, "x", "y", blocks=blocks)
-        got = out.collect()[0]
-        out.kendall_cleanup()
+        with owned(spark):
+            got = kendall_tau(df, "x", "y", blocks=blocks).collect()[0]
         p, q, txo, tyo, txy = self._brute(rows)
         assert (got["n"], got["p"], got["q"], got["tx_only"],
                 got["ty_only"], got["txy"]) == (len(rows), p, q,
@@ -608,10 +609,9 @@ class TestGetisGiStar:
                 rows.append((tx, ty, [int(v) for v in tile.ravel()]))
         tiles = spark.createDataFrame(
             rows, "tx long, ty long, data array<long>")
-        out = getis_gi_star(tiles, t)
-        got = {(r["x"], r["y"]): (r["wx"], r["a"], r["z"])
-               for r in out.collect()}
-        out.gi_cleanup()
+        with owned(spark):
+            got = {(r["x"], r["y"]): (r["wx"], r["a"], r["z"])
+                   for r in getis_gi_star(tiles, t).collect()}
 
         pad = np.pad(grid, 1, mode="edge")
         n = side * side
@@ -632,9 +632,9 @@ class TestGetisGiStar:
 
         tiles = spark.createDataFrame(
             [(0, 0, [7] * 16)], "tx long, ty long, data array<long>")
-        out = getis_gi_star(tiles, 4)
-        assert all(r["z"] is None for r in out.collect())
-        out.gi_cleanup()
+        with owned(spark):
+            rows = getis_gi_star(tiles, 4).collect()
+        assert all(r["z"] is None for r in rows)
 
 
 class TestEccentricity:

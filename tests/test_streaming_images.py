@@ -94,3 +94,29 @@ def test_mosaic_stream_equals_batch(spark, img_dir, tmp_path):
                                 world_px=1024, tile=128,
                                 thumb=16).collect()}
     assert got == want and len(got) > 5
+
+
+def test_mosaic_state_dir_must_be_local(spark, img_dir):
+    # state versions are found with a local glob: a remote state_dir
+    # would silently restart from v=0, so it must fail before any stream
+    from osm2geojson_spark.streaming.images import (
+        mosaic_from_state,
+        mosaic_stream,
+    )
+
+    remote = "s3a://bucket/mosaic_state"
+    with pytest.raises(ValueError, match="local path"):
+        mosaic_stream(spark, stream_images_from_parquet(spark, img_dir),
+                      remote, queryName="mosaic_remote")
+    assert all(q.name != "mosaic_remote" for q in spark.streams.active)
+    with pytest.raises(ValueError, match="local path"):
+        mosaic_from_state(spark, remote)
+
+
+def test_mosaic_state_versions_read_file_uri(tmp_path):
+    from osm2geojson_spark.streaming.images import _state_versions
+
+    for v in (0, 3):
+        (tmp_path / f"v={v}").mkdir()
+    assert sorted(_state_versions(str(tmp_path))) == [0, 3]
+    assert sorted(_state_versions(tmp_path.as_uri())) == [0, 3]

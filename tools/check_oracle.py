@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry at sf0.01 on Spark AND its ``oracle_sql()``
 twin on DuckDB, then compares row count, sorted column names, and an
 order-insensitive multiset of stringified values (doubles via repr →
-bit-exactness visible). Usage: python tools/check_oracle.py [name ...]
+bit-exactness visible). Each entry's Spark side runs and is collected
+inside ``session.owned``; anything it leaves cached after the block is a
+``residue`` failure. Usage: python tools/check_oracle.py [name ...]
 """
 
 from __future__ import annotations
@@ -54,9 +56,26 @@ def compare(scols, srows, dcols, drows) -> list[str]:
     return problems
 
 
+def residue(spark, before) -> list[str]:
+    """What a run left cached after its ``owned`` block (``before`` is
+    the state the block yielded at entry): persistent RDDs created
+    during the block that are still persisted, and CacheManager entries
+    above the count at entry. Empty when the block released everything."""
+    ids, n_cached = before
+    problems = []
+    left = sorted(set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+                  - ids)
+    if left:
+        problems.append(f"residue: persistent RDDs {left}")
+    n = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    if n > n_cached:
+        problems.append(f"residue: {n - n_cached} CacheManager entries")
+    return problems
+
+
 def main():
     import __spark_entry__ as E
-    from osm2geojson_spark.session import get_spark
+    from osm2geojson_spark.session import get_spark, owned
 
     import os
 
@@ -77,9 +96,10 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, SF)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            with owned(spark) as before:
+                sdf = fn(spark, SF)
+                srows = [tuple(r) for r in sdf.collect()]
+                scols = sdf.columns
         except Exception as ex:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {ex}"))
             print(f"FAIL  {name}: spark error {ex}")
@@ -92,7 +112,7 @@ def main():
             failures.append((name, f"DUCKDB ERROR: {ex}"))
             print(f"FAIL  {name}: duckdb error {ex}")
             continue
-        problems = compare(scols, srows, dcols, drows)
+        problems = compare(scols, srows, dcols, drows) + residue(spark, before)
         if problems:
             failures.append((name, "; ".join(problems)))
             print(f"FAIL  {name}: {'; '.join(problems)}")
