@@ -63,8 +63,8 @@ def main() -> int:
         lambda df: validate_images(df.drop("_bucket")).withColumn(
             "_bucket", F.pmod(F.xxhash64("image_id"), F.lit(args.n_buckets)).cast("int")),
         bucket, n_buckets=args.n_buckets, layout=args.layout)
-    good, bad = quarantine_split(validated)
-    n_good, n_bad = good.count(), bad.count()
+    good = quarantine_split(validated)[0]
+    n_good, n_bad = validated.agg(F.count_if("ok"), F.count_if(~F.col("ok"))).first()
     write_metrics(spark, args.out, "validate",
                   {"rows_ok": n_good, "rows_quarantined": n_bad})
 

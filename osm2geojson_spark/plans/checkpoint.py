@@ -11,10 +11,24 @@ the last completed file). This module is the distributed generalization:
   "resumable from per-partition checkpoints with lineage"): the stage is
   bucketed on a key column; each completed bucket is recorded in the
   lineage table; resume recomputes ONLY missing buckets and appends.
-- lineage + metrics live as parquet tables under ``<root>/_lineage`` /
-  ``<root>/_metrics`` (Iceberg-ready layout: swap the writer for
-  ``format("iceberg")`` when the runtime jar is on the cluster — this
-  sandbox has no network-fetched jars, SURVEY.md §7 risk 7).
+  Both layouts (plain parquet, Iceberg-style snapshots) run the same
+  wave loop; they differ only in how a wave is appended and how the
+  done set is read.
+
+Counts come from the write itself: every stage write carries an
+``Observation`` (``count(1)`` for a stage, one ``count_if(_bucket = b)``
+per bucket of a wave), so the manifest and lineage row counts cost no
+second pass over the written data. A retried task's partial counts are
+discarded with its attempt, like any non-internal accumulator.
+
+The bookkeeping tables ``<root>/_lineage`` and ``<root>/_metrics`` hold a
+few rows per wave, so the calling process reads and appends them with
+pyarrow — no Spark job. Each append writes one ``.``-prefixed part and
+renames it to ``part-<uuid>.parquet``; Spark and pyarrow both skip ``.``
+and ``_`` names, so no reader sees a half-written part. ``lineage_table``
+/ ``metrics_table`` return Spark DataFrames over the same directories
+(Iceberg-ready layout: swap the writer for ``format("iceberg")`` where
+the runtime jar is available, SURVEY.md §7 risk 7).
 
 Atomicity: data lands in ``<stage>.tmp-<token>`` and is renamed into
 place before the manifest/lineage row is written — a crash mid-write
@@ -31,11 +45,21 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-_LINEAGE_SCHEMA = ("stage string, bucket int, n_rows long, wall_ms long, "
-                   "finished_at string, status string")
+# the column types Spark-written parts of these tables already carry
+_LINEAGE_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("bucket", pa.int32()), ("n_rows", pa.int64()),
+    ("wall_ms", pa.int64()), ("finished_at", pa.string()), ("status", pa.string()),
+])
+_METRICS_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("name", pa.string()), ("value", pa.float64()),
+    ("ts", pa.string()),
+])
 
 
 def _manifest_path(root: str, stage: str) -> str:
@@ -44,6 +68,10 @@ def _manifest_path(root: str, stage: str) -> str:
 
 def _data_path(root: str, stage: str) -> str:
     return os.path.join(root, stage, "data")
+
+
+def _now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
 
 def stage_is_complete(root: str, stage: str) -> bool:
@@ -61,45 +89,69 @@ def run_stage(
         return spark.read.parquet(data)
     t0 = time.perf_counter()
     df = fn()
+    obs = Observation()
     tmp = data + ".tmp-" + uuid.uuid4().hex[:8]
-    df.write.mode("overwrite").parquet(tmp)
+    df.observe(obs, F.count(F.lit(1)).alias("n_rows")) \
+        .write.mode("overwrite").parquet(tmp)
     if os.path.exists(data):
         shutil.rmtree(data)
     os.rename(tmp, data)
-    out = spark.read.parquet(data)
-    n = out.count()
     manifest = {
-        "stage": stage, "n_rows": n,
-        "schema": out.schema.jsonValue(),
+        "stage": stage, "n_rows": obs.get["n_rows"],
+        "schema": df.schema.jsonValue(),
         "wall_ms": int((time.perf_counter() - t0) * 1000),
-        "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "finished_at": _now(),
     }
     mp = _manifest_path(root, stage)
     with open(mp + ".tmp", "w") as f:
         json.dump(manifest, f)
     os.rename(mp + ".tmp", mp)
-    return out
+    return spark.read.parquet(data)
+
+
+# ------------------------------------------------------- bookkeeping tables
+def _parts(root: str, table: str) -> list[str]:
+    """Visible part files of a bookkeeping table: Spark's own (older
+    runs) and pyarrow's, never ``.``/``_`` in-flight or marker files."""
+    d = os.path.join(root, table)
+    if not os.path.isdir(d):
+        return []
+    return [os.path.join(d, f) for f in sorted(os.listdir(d))
+            if not f.startswith((".", "_"))]
+
+
+def _append(root: str, table: str, schema: pa.Schema, rows: list[tuple]) -> None:
+    d = os.path.join(root, table)
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(d, "." + name)
+    pq.write_table(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema), tmp)
+    os.rename(tmp, os.path.join(d, name))
+
+
+def _spark_table(spark: SparkSession, root: str, table: str,
+                 schema: pa.Schema) -> DataFrame:
+    if not _parts(root, table):
+        return spark.createDataFrame([], from_arrow_schema(schema))
+    return spark.read.parquet(os.path.join(root, table))
 
 
 # ------------------------------------------------------------------ lineage
 def lineage_table(spark: SparkSession, root: str) -> DataFrame:
-    p = os.path.join(root, "_lineage")
-    if not os.path.exists(p):
-        return spark.createDataFrame([], _LINEAGE_SCHEMA)
-    return spark.read.parquet(p)
+    return _spark_table(spark, root, "_lineage", _LINEAGE_SCHEMA)
 
 
-def _append_lineage(spark: SparkSession, root: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, _LINEAGE_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(os.path.join(root, "_lineage"))
+def _append_lineage(root: str, rows: list[tuple]) -> None:
+    _append(root, "_lineage", _LINEAGE_SCHEMA, rows)
 
 
 def completed_buckets(spark: SparkSession, root: str, stage: str) -> set[int]:
-    lt = lineage_table(spark, root)
     return {
         r["bucket"]
-        for r in lt.filter((F.col("stage") == stage) & (F.col("status") == "done"))
-        .select("bucket").distinct().collect()
+        for p in _parts(root, "_lineage")
+        for r in pq.read_table(p, columns=["stage", "bucket", "status"]).to_pylist()
+        if r["stage"] == stage and r["status"] == "done"
     }
 
 
@@ -122,9 +174,10 @@ def run_bucketed_stage(
 
     Missing buckets are processed in WAVES of ``buckets_per_wave`` — each
     wave is one Spark job whose output is appended under ``_bucket=<b>``
-    partition dirs and then recorded in the lineage table. A crash (or a
-    thrown exception) between waves loses at most one wave; the next call
-    reads lineage and recomputes ONLY the still-missing buckets. Set
+    partition dirs and then recorded in the lineage table, with per-bucket
+    row counts observed during that same write. A crash (or a thrown
+    exception) between waves loses at most one wave; the next call reads
+    the done set and recomputes ONLY the still-missing buckets. Set
     ``buckets_per_wave=1`` for strict per-partition granularity,
     ``=n_buckets`` for a single job.
 
@@ -145,35 +198,50 @@ def run_bucketed_stage(
       rows are still appended for observability but are not the
       authority."""
     if layout == "iceberg":
-        return _run_bucketed_stage_iceberg(
-            spark, root, stage, input_df, fn, bucket_expr,
-            n_buckets, buckets_per_wave)
-    data = _data_path(root, stage)
-    done = completed_buckets(spark, root, stage)
-    missing = sorted(set(range(n_buckets)) - done)
-    if os.path.exists(data):
-        for b in missing:
+        from osm2geojson_spark.plans.iceberg_layout import IcebergLikeTable
+
+        tbl = IcebergLikeTable(os.path.join(root, stage))
+        done = iceberg_completed_buckets(root, stage)
+
+        def append(out: DataFrame, wave: list[int]) -> None:
+            tbl.append(out, partition_by="_bucket",
+                       summary={"stage": stage, "buckets": wave})
+
+        def result() -> DataFrame:
+            return tbl.read(spark)
+    else:
+        data = _data_path(root, stage)
+        done = completed_buckets(spark, root, stage)
+        for b in set(range(n_buckets)) - done:
             orphan = os.path.join(data, f"_bucket={b}")
             if os.path.exists(orphan):
                 shutil.rmtree(orphan)
+
+        def append(out: DataFrame, wave: list[int]) -> None:
+            out.write.mode("append").partitionBy("_bucket").parquet(data)
+
+        def result() -> DataFrame:
+            return spark.read.parquet(data)
+
+    missing = sorted(set(range(n_buckets)) - done)
     for w in range(0, len(missing), buckets_per_wave):
-        wave = [int(b) for b in missing[w:w + buckets_per_wave]]
+        wave = missing[w:w + buckets_per_wave]
         t0 = time.perf_counter()
         todo = input_df.withColumn("_bucket", bucket_expr.cast("int")) \
             .filter(F.col("_bucket").isin(wave))
         out = fn(todo)
         if "_bucket" not in out.columns:
             raise ValueError("fn must preserve the _bucket column")
-        out.write.mode("append").partitionBy("_bucket").parquet(data)
+        obs = Observation()
+        append(out.observe(obs, *[F.count_if(F.col("_bucket") == b).alias(str(b))
+                                  for b in wave]), wave)
+        counts = obs.get
         wall = int((time.perf_counter() - t0) * 1000)
-        written = spark.read.parquet(data).filter(F.col("_bucket").isin(wave))
-        counts = {r["_bucket"]: r["n"] for r in
-                  written.groupBy("_bucket").agg(F.count("*").alias("n")).collect()}
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        _append_lineage(spark, root, [
-            (stage, b, int(counts.get(b, 0)), wall, now, "done") for b in wave
+        now = _now()
+        _append_lineage(root, [
+            (stage, b, counts[str(b)], wall, now, "done") for b in wave
         ])
-    return spark.read.parquet(data)
+    return result()
 
 
 def iceberg_completed_buckets(root: str, stage: str) -> set[int]:
@@ -194,55 +262,15 @@ def iceberg_completed_buckets(root: str, stage: str) -> set[int]:
     return out
 
 
-def _run_bucketed_stage_iceberg(
-    spark, root, stage, input_df, fn, bucket_expr,
-    n_buckets, buckets_per_wave,
-) -> DataFrame:
-    from osm2geojson_spark.plans.iceberg_layout import IcebergLikeTable
-
-    tbl = IcebergLikeTable(os.path.join(root, stage))
-    done = iceberg_completed_buckets(root, stage)
-    missing = sorted(set(range(n_buckets)) - done)
-    for w in range(0, len(missing), buckets_per_wave):
-        wave = [int(b) for b in missing[w:w + buckets_per_wave]]
-        t0 = time.perf_counter()
-        todo = input_df.withColumn("_bucket", bucket_expr.cast("int")) \
-            .filter(F.col("_bucket").isin(wave))
-        out = fn(todo)
-        if "_bucket" not in out.columns:
-            raise ValueError("fn must preserve the _bucket column")
-        tbl.append(out, partition_by="_bucket",
-                   summary={"stage": stage, "buckets": wave})
-        wall = int((time.perf_counter() - t0) * 1000)
-        written = tbl.read(spark).filter(F.col("_bucket").isin(wave))
-        counts = {r["_bucket"]: r["n"] for r in
-                  written.groupBy("_bucket").agg(F.count("*").alias("n")).collect()}
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        _append_lineage(spark, root, [
-            (stage, b, int(counts.get(b, 0)), wall, now, "done") for b in wave
-        ])
-    return tbl.read(spark)
-
-
 # ------------------------------------------------------------------ metrics
 def write_metrics(spark: SparkSession, root: str, stage: str,
                   metrics: dict[str, float]) -> None:
     """Append one metrics row per key (A2/A3 counters → metrics table,
     replacing LoggingCounter/EnumCounter logs)."""
-    now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    rows = [(stage, k, float(v), now) for k, v in metrics.items()]
-    spark.createDataFrame(rows, "stage string, name string, value double, ts string") \
-        .coalesce(1).write.mode("append").parquet(os.path.join(root, "_metrics"))
-
-
-def observe_counts(df: DataFrame, name: str) -> DataFrame:
-    """df.observe wrapper: row count + null-free check hook (A2)."""
-    return df.observe(name, F.count(F.lit(1)).alias("n_rows"))
+    now = _now()
+    _append(root, "_metrics", _METRICS_SCHEMA,
+            [(stage, k, float(v), now) for k, v in metrics.items()])
 
 
 def metrics_table(spark: SparkSession, root: str) -> DataFrame:
-    p = os.path.join(root, "_metrics")
-    if not os.path.exists(p):
-        return spark.createDataFrame(
-            [], "stage string, name string, value double, ts string")
-    return spark.read.parquet(p)
+    return _spark_table(spark, root, "_metrics", _METRICS_SCHEMA)

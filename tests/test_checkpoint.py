@@ -85,11 +85,11 @@ def test_bucketed_crash_between_append_and_lineage_no_dupes(spark, root, monkeyp
     real_append = CK._append_lineage
     state = {"crashed": False}
 
-    def crashing_append(spark_, root_, rows):
+    def crashing_append(root_, rows):
         if not state["crashed"]:
             state["crashed"] = True
             raise RuntimeError("injected crash in append→lineage window")
-        real_append(spark_, root_, rows)
+        real_append(root_, rows)
 
     monkeypatch.setattr(CK, "_append_lineage", crashing_append)
     with pytest.raises(RuntimeError, match="append→lineage"):
@@ -106,6 +106,75 @@ def test_bucketed_crash_between_append_and_lineage_no_dupes(spark, root, monkeyp
     lt = lineage_table(spark, root)
     assert sum(r["n_rows"] for r in
                lt.filter(F.col("stage") == "st2").collect()) == 400
+
+
+# A task that fails on its first attempt, after some of its rows went
+# through the wave's observation, and succeeds on its retry must not count
+# those rows twice in the lineage. The suite's shared local[4] session
+# never retries a task, so this runs in its own local[4,2] (two attempts
+# per task) process. With 50-row Arrow batches, a partition that fails at
+# its 195th batch has already streamed earlier batches downstream.
+_RETRY_SCRIPT = r"""
+import json, os, sys
+
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+
+from osm2geojson_spark.plans.checkpoint import lineage_table, run_bucketed_stage
+from osm2geojson_spark.session import get_spark
+
+root = sys.argv[1]
+spark = get_spark("checkpoint-retry", master="local[4,2]", shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory": "1g",
+                              "spark.sql.execution.arrow.maxRecordsPerBatch": "50"})
+src = spark.range(0, 60000, numPartitions=2)
+bucket = F.pmod(F.xxhash64("id"), F.lit(8))
+truth = {r[0]: r[1] for r in src.groupBy(bucket.cast("int")).count().collect()}
+
+
+def failing_fn(marker):
+    def fail_first_attempt(batches):
+        ctx = TaskContext.get()
+        for i, b in enumerate(batches):
+            if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and i == 195:
+                open(marker, "a").close()
+                raise RuntimeError("injected task failure")
+            yield b
+
+    return lambda df: df.mapInPandas(fail_first_attempt, df.schema)
+
+
+for layout in ("parquet", "iceberg"):
+    run_bucketed_stage(spark, root, layout, src,
+                       failing_fn(os.path.join(root, "failed-" + layout)),
+                       bucket, n_buckets=8, buckets_per_wave=4, layout=layout)
+lineage = [(r["stage"], r["bucket"], r["n_rows"]) for r in lineage_table(spark, root).collect()]
+print(json.dumps({"truth": truth, "lineage": lineage}))
+spark.stop()
+"""
+
+
+def test_bucketed_counts_survive_task_retry(tmp_path):
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = str(tmp_path / "ckpt")
+    os.makedirs(root)
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, root], capture_output=True, text=True,
+        timeout=600, env={**os.environ, "PYTHONPATH": repo}, cwd=repo)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    truth = {int(b): n for b, n in got["truth"].items()}
+    assert sum(truth.values()) == 60000 and len(truth) == 8
+    for layout in ("parquet", "iceberg"):
+        assert os.path.exists(os.path.join(root, "failed-" + layout)), \
+            f"the injected task failure never fired for {layout}"
+        counts = {b: n for stage, b, n in got["lineage"] if stage == layout}
+        assert counts == truth, layout
 
 
 def test_iceberg_bucketed_resume(spark, root):

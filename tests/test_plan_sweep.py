@@ -56,7 +56,6 @@ COLLECT_WHITELIST = {
     "operators/isotonic.py": 1,   # compressed PAV blocks (bounded)
     "operators/similarity.py": 5,  # centroid/codebook rows (k·d small)
     "operators/stats.py": 2,      # otsu argmax curve + quantile stat row
-    "plans/checkpoint.py": 3,     # lineage/metrics metadata rows
     "plans/iceberg_layout.py": 1,  # snapshot/manifest metadata
     "queries.py": 3,              # catalog-entry scalars (sf-bounded)
     "sources/osm_xml.py": 1,      # byte-budgeted split fragments

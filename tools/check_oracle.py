@@ -10,12 +10,13 @@ inside ``session.owned``; anything it leaves cached after the block is a
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -76,8 +77,6 @@ def residue(spark, before) -> list[str]:
 def main():
     import __spark_entry__ as E
     from osm2geojson_spark.session import get_spark, owned
-
-    import os
 
     only = set(sys.argv[1:])
     # ORACLE_CORES / ORACLE_SHUFFLE prove parallelism-invariance: results
