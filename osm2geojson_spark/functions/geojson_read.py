@@ -1,8 +1,9 @@
 """GeoJSON feature PARSING — the read side of the engine's round trip.
 
-The emit side (``json_canon.geojson_doc``) produces the reference's
-feature documents (osm2geojson's OsmPostProcessor output shape:
-id/title/geometry/categories/address/links); this module parses those
+The emit side (``json_canon.geojson_doc``, a JVM ``to_json`` column
+expression) produces the reference's feature documents (osm2geojson's
+OsmPostProcessor output shape: id/title/geometry/categories/address/
+links); this module parses those
 documents back into typed columns and validates RFC 7946 invariants,
 so ``parse_features(emit(x)) == x`` is testable end-to-end — the
 "GeoJSON round-trip test cases" axis of the north star.

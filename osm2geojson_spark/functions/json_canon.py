@@ -4,121 +4,43 @@ The reference emits jsonj objects in insertion order: id, title, geometry,
 categories, address?, links? (OsmPostProcessor.java:128-131, 332-343). We
 pin exactly that key order.
 
-Coordinate numbers are formatted with :func:`java_double_str`, a faithful
-reimplementation of Java's ``Double.toString`` notation rules (plain
-decimal for 1e-3 ≤ |d| < 1e7, ``d.dddEn`` scientific outside, always ≥ 1
-fractional digit), over CPython repr's shortest-round-trip digits. A
-hypothesis test checks parity against the ACTUAL JVM
-(``spark._jvm.java.lang.Double.toString``) across the coordinate grid,
-including the 1e-4/1e-3 and 1e7 exponent boundaries where Python repr
-and Java notation diverge ("0.0005" vs "5.0E-4").
-
-Implemented as an Arrow-batched pandas UDF (string building is not
-expressible as built-in columns with stable float formatting).
+The document is built on the JVM from two ``to_json`` calls around the
+geometry's ``coords_json`` (itself a ``to_json`` of the coordinate
+arrays), so every number is printed by Java's ``Double.toString`` — the
+reference's own formatter, jsonj on the JVM — and no row crosses into
+Python. ``to_json`` leaves out null struct fields, which gives the
+optional ``address``/``links`` keys.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+_KEEP_NULLS = {"ignoreNullFields": "false"}
+_DROP_NULLS = {"ignoreNullFields": "true"}
 
 
-def java_double_str(d: float) -> str:
-    """Java ``Double.toString(d)`` notation over shortest-round-trip
-    digits: plain decimal iff 1e-3 ≤ |d| < 1e7 (else ``d.dddEn``), at
-    least one fractional digit, exponent unpadded with no '+'."""
-    if d != d:
-        return "NaN"
-    if d == float("inf"):
-        return "Infinity"
-    if d == float("-inf"):
-        return "-Infinity"
-    s = repr(float(d))
-    neg = s.startswith("-")
-    if neg:
-        s = s[1:]
-    if "e" in s:
-        mant, _, exps = s.partition("e")
-        e = int(exps)
-    else:
-        mant, e = s, 0
-    ip, _, fp = mant.partition(".")
-    alldig = ip + fp
-    digits = alldig.lstrip("0")
-    if not digits:
-        return ("-" if neg else "") + "0.0"
-    lead_zeros = len(alldig) - len(digits)
-    # |d| = 0.DIGITS × 10^pointpos
-    pointpos = len(ip) + e - lead_zeros
-    digits = digits.rstrip("0") or "0"
-    if -2 <= pointpos <= 7:  # 1e-3 ≤ |d| < 1e7 → plain decimal
-        if pointpos <= 0:
-            out = "0." + "0" * (-pointpos) + digits
-        elif pointpos >= len(digits):
-            out = digits + "0" * (pointpos - len(digits)) + ".0"
-        else:
-            out = digits[:pointpos] + "." + digits[pointpos:]
-        return ("-" if neg else "") + out
-    frac = digits[1:] or "0"
-    return ("-" if neg else "") + digits[0] + "." + frac + "E" + str(pointpos - 1)
+def geojson_doc(fid, title, geom_type, coords_json, categories, address,
+                links) -> Column:
+    """One feature document per row; each argument is a column name or
+    a ``Column``. ``coords_json`` is the geometry's coordinates as JSON
+    text; ``address``/``links`` are written only when non-empty.
 
-
-def _coords_str(c) -> str:
-    if isinstance(c, (list, tuple)):
-        return "[" + ",".join(_coords_str(x) for x in c) + "]"
-    if isinstance(c, bool) or not isinstance(c, (int, float)):
-        return json.dumps(c, ensure_ascii=False)
-    return java_double_str(float(c))
-
-
-def _j(obj) -> str:
-    return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
-
-
-def _feature_doc(
-    fid: str,
-    title: str,
-    geom_type: str,
-    coords,
-    categories,
-    address,
-    links,
-) -> str:
-    # manual assembly (not one json.dumps) so coordinate floats get Java
-    # Double.toString notation while everything else stays stdlib json;
-    # key order pinned: id, title, geometry, categories, address?, links?
-    parts = [
-        '"id":' + _j(fid),
-        '"title":' + _j(title),
-        '"geometry":{"type":' + _j(geom_type)
-        + ',"coordinates":' + _coords_str(coords) + "}",
-        '"categories":' + _j({"osm": list(categories)}),
-    ]
-    if address:
-        parts.append('"address":' + _j(dict(address)))
-    if links is not None and len(links):
-        parts.append('"links":' + _j(
-            [{"href": h["href"] if isinstance(h, dict) else h} for h in links]))
-    return "{" + ",".join(parts) + "}"
-
-
-@F.pandas_udf(T.StringType())
-def geojson_doc(
-    fid: pd.Series, title: pd.Series, geom_type: pd.Series, coords_json: pd.Series,
-    categories: pd.Series, address: pd.Series, links: pd.Series,
-) -> pd.Series:
-    out = []
-    for i in range(len(fid)):
-        coords = json.loads(coords_json.iloc[i])
-        out.append(
-            _feature_doc(
-                fid.iloc[i], title.iloc[i], geom_type.iloc[i], coords,
-                categories.iloc[i],
-                address.iloc[i],
-                links.iloc[i],
-            )
-        )
-    return pd.Series(out)
+    ``{"id":…,"title":…,"geometry":{"type":…`` comes from the head
+    ``to_json`` with its closing ``}}`` trimmed (the type is a quoted
+    string, so only those two braces trail), then
+    ``,"coordinates":<coords_json>}``, then the tail ``to_json`` of
+    categories/address/links with its opening ``{`` turned into ``,``."""
+    fid, title, geom_type, coords_json, categories, address, links = (
+        F.col(c) if isinstance(c, str) else c
+        for c in (fid, title, geom_type, coords_json, categories, address, links))
+    head = F.to_json(F.struct(
+        fid.alias("id"), title.alias("title"),
+        F.struct(geom_type.alias("type")).alias("geometry")), _KEEP_NULLS)
+    tail = F.to_json(F.struct(
+        F.struct(categories.alias("osm")).alias("categories"),
+        F.when(F.size(address) > 0, address).alias("address"),
+        F.when(F.size(links) > 0, links).alias("links")), _DROP_NULLS)
+    return F.concat(F.rtrim(head, F.lit("}")), F.lit(',"coordinates":'),
+                    coords_json, F.lit("}"), F.overlay(tail, F.lit(","), 1))

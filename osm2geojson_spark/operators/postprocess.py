@@ -6,8 +6,10 @@ relation stream: GRAFT — stitched MultiPolygon + interpretTags (the
 reference returns null for every relation, OsmPostProcessor.java:216-227).
 
 Wholly pipelined: scan → filter → project → serialize, no shuffle
-(SURVEY.md §3.2). Output schema is identical across the three streams so
-sinks can union them.
+(SURVEY.md §3.2). Tags are interpreted by one filter/select/filter and
+the document is serialized on the JVM (``json_canon.geojson_doc``), so
+only the relation stream's ring stitching runs Python. Output schema is
+identical across the three streams so sinks can union them.
 """
 
 from __future__ import annotations
@@ -22,16 +24,12 @@ from osm2geojson_spark.operators.osm_join import split_nodes
 
 _FEATURE_COLS = [
     "feature_id", "title", "geom_type", "coords_json",
-    "categories", "address", "links", "geojson",
+    "categories", "address", "links",
 ]
 
 
 def _finish(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "geojson",
-        geojson_doc("feature_id", "title", "geom_type", "coords_json",
-                    "categories", "address", "links"),
-    ).select(*_FEATURE_COLS)
+    return df.select(*_FEATURE_COLS, geojson_doc(*_FEATURE_COLS).alias("geojson"))
 
 
 def node_features(nodes: DataFrame) -> DataFrame:

@@ -21,6 +21,8 @@ Differences, on purpose (SURVEY §1.4):
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,8 +38,13 @@ from osm2geojson_spark.operators.postprocess import (
     relation_features,
     way_features,
 )
+from osm2geojson_spark.session import owned, persist
 from osm2geojson_spark.sources.kv_text import write_jsonlines
-from osm2geojson_spark.sources.osm_xml import read_osm_xml
+from osm2geojson_spark.sources.osm_xml import (
+    parse_osm_blobs,
+    read_osm_blobs,
+    read_osm_blobs_distributed,
+)
 
 
 def intermediate_datasets(
@@ -145,30 +152,36 @@ def osm_to_geojson(
     — the reference's headline planet case ("30 GB .osm.bz2, DONOT
     expand it", README.md:37) as ONE call: the single compressed file is
     split across tasks with exact boundary stitching, instead of the
-    per-file wholetext scan."""
-    if distributed:
-        from osm2geojson_spark.sources.osm_xml import (
-            parse_osm_blobs,
-            read_osm_blobs_distributed,
-        )
+    per-file wholetext scan.
 
-        tabs = parse_osm_blobs(read_osm_blobs_distributed(spark, xml_path))
-    else:
-        tabs = read_osm_xml(spark, xml_path)
-    complete_ways = assemble_ways(tabs["nodes"], tabs["ways"])
-    out: dict[str, DataFrame] = {
-        "pois": node_features(tabs["nodes"]),
-        "ways": way_features(complete_ways),
-        "quarantine": tabs["quarantine"],
-    }
-    if not reference_strict:
-        assembled = assemble_relations(tabs["nodes"], tabs["relations"], complete_ways)
-        out["relations"] = relation_features(assembled)
-    if out_dir is not None:
-        write_jsonlines(out["pois"], f"{out_dir}/osm-pois.gz")
-        write_jsonlines(out["ways"], f"{out_dir}/osm-ways.gz")
-        if "relations" in out:
-            write_jsonlines(out["relations"], f"{out_dir}/osm-relations.gz")
+    With ``out_dir`` the writes run inside :func:`session.owned`, over a
+    persisted blob frame (and, distributed, a persisted split scan): the
+    boundary-fragment collect and all three writes share one
+    decompression and one XML scan, like the reference's single
+    streaming pass (OsmJoin.java:423-461), and the block releases that
+    cache on exit. The returned frames stay valid after it: they
+    recompute from the file. Without ``out_dir`` nothing is persisted
+    and every frame is lazy."""
+    write = out_dir is not None
+    with owned(spark) if write else nullcontext():
+        if distributed:
+            blobs = read_osm_blobs_distributed(spark, xml_path, persist_scan=write)
+        else:
+            blobs = read_osm_blobs(spark, xml_path)
+        tabs = parse_osm_blobs(persist(blobs) if write else blobs)
+        complete_ways = assemble_ways(tabs["nodes"], tabs["ways"])
+        out: dict[str, DataFrame] = {
+            "pois": node_features(tabs["nodes"]),
+            "ways": way_features(complete_ways),
+            "quarantine": tabs["quarantine"],
+        }
+        if not reference_strict:
+            out["relations"] = relation_features(
+                assemble_relations(tabs["nodes"], tabs["relations"], complete_ways))
+        if write:
+            for k in ("pois", "ways", "relations"):
+                if k in out:
+                    write_jsonlines(out[k], f"{out_dir}/osm-{k}.gz")
     return out
 
 

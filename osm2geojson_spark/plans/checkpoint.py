@@ -38,6 +38,7 @@ swap, SortingWriter.java:88-115).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -49,6 +50,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
 # the column types Spark-written parts of these tables already carry
@@ -179,7 +181,9 @@ def run_bucketed_stage(
     exception) between waves loses at most one wave; the next call reads
     the done set and recomputes ONLY the still-missing buckets. Set
     ``buckets_per_wave=1`` for strict per-partition granularity,
-    ``=n_buckets`` for a single job.
+    ``=n_buckets`` for a single job. When every bucket's output is
+    empty no data file exists, and the result is an empty frame with
+    ``fn``'s output schema.
 
     Atomicity — two layouts behind the same interface:
 
@@ -207,8 +211,8 @@ def run_bucketed_stage(
             tbl.append(out, partition_by="_bucket",
                        summary={"stage": stage, "buckets": wave})
 
-        def result() -> DataFrame:
-            return tbl.read(spark)
+        def result() -> DataFrame | None:
+            return tbl.read(spark) if tbl.plan_files()[1] else None
     else:
         data = _data_path(root, stage)
         done = completed_buckets(spark, root, stage)
@@ -220,10 +224,12 @@ def run_bucketed_stage(
         def append(out: DataFrame, wave: list[int]) -> None:
             out.write.mode("append").partitionBy("_bucket").parquet(data)
 
-        def result() -> DataFrame:
-            return spark.read.parquet(data)
+        def result() -> DataFrame | None:
+            return (spark.read.parquet(data)
+                    if glob.glob(os.path.join(data, "_bucket=*")) else None)
 
     missing = sorted(set(range(n_buckets)) - done)
+    out = None
     for w in range(0, len(missing), buckets_per_wave):
         wave = missing[w:w + buckets_per_wave]
         t0 = time.perf_counter()
@@ -241,7 +247,16 @@ def run_bucketed_stage(
         _append_lineage(root, [
             (stage, b, counts[str(b)], wall, now, "done") for b in wave
         ])
-    return result()
+    rows = result()
+    if rows is not None:
+        return rows
+    # every bucket came out empty, so no file was written: an empty frame
+    # with fn's output schema, _bucket last as a partitioned read has it
+    if out is None:
+        out = fn(input_df.withColumn("_bucket", bucket_expr.cast("int")).limit(0))
+    schema = out.schema
+    return spark.createDataFrame([], T.StructType(
+        [f for f in schema.fields if f.name != "_bucket"] + [schema["_bucket"]]))
 
 
 def iceberg_completed_buckets(root: str, stage: str) -> set[int]:

@@ -2085,7 +2085,8 @@ FROM ends
 def q_geojson_roundtrip(spark, sf_dir):
     """GeoJSON ROUND TRIP (north-star axis): build feature documents
     for all four geometry classes from int-derived coordinates, emit
-    the JSON text JVM-side, then PARSE it back with
+    the JSON text JVM-side with the pipeline's own emitter
+    (json_canon.geojson_doc), then PARSE it back with
     functions/geojson_read.parse_features (get_json_object +
     type-matched from_json — zero Python, zero shuffle) and report the
     reconstructed per-feature bbox/vertex/closure columns. The oracle
@@ -2093,33 +2094,25 @@ def q_geojson_roundtrip(spark, sf_dir):
     parse(emit(x)) == x including double round-tripping through JSON
     text."""
     from osm2geojson_spark.functions.geojson_read import parse_features
+    from osm2geojson_spark.functions.json_canon import geojson_doc
 
-    def num(c):
-        return c.cast("string")
-
-    def pt(x, y):
-        return F.concat(F.lit("["), num(x), F.lit(","), num(y), F.lit("]"))
-
-    def arr(*elems):
-        return F.concat(F.lit("["), F.concat_ws(",", *elems), F.lit("]"))
-
-    def doc(fid, title, gtype, coords, cats_json):
-        return F.concat(
-            F.lit('{"id":"'), fid, F.lit('","title":"'), title,
-            F.lit('","geometry":{"type":"'), F.lit(gtype),
-            F.lit('","coordinates":'), coords,
-            F.lit('},"categories":{"osm":'), F.lit(cats_json), F.lit("}}"),
-        )
+    def doc(fid, title, gtype, coords, cats):
+        return geojson_doc(
+            fid, title, F.lit(gtype), F.to_json(coords),
+            F.array(*[F.lit(c) for c in cats]),
+            F.lit(None).cast("map<string,string>"),
+            F.lit(None).cast("array<struct<href:string>>"))
 
     def box_ring(x0, y0, x1, y1):
-        return arr(pt(x0, y0), pt(x1, y0), pt(x1, y1), pt(x0, y1), pt(x0, y0))
+        return F.array(*[F.array(x, y) for x, y in
+                         ((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))])
 
     cust = _t(spark, sf_dir, "customer").where(F.col("c_custkey") <= 150)
     k = F.col("c_custkey")
     points = cust.select(doc(
         F.concat(F.lit("pt/"), k.cast("string")),
         F.concat(F.lit("c"), k.cast("string")),
-        "Point", pt(lon_col(k), lat_col(k)), '["poi"]').alias("geojson"))
+        "Point", F.array(lon_col(k), lat_col(k)), ["poi"]).alias("geojson"))
 
     supp = _t(spark, sf_dir, "supplier").where(F.col("s_suppkey") <= 60)
     sk = F.col("s_suppkey")
@@ -2127,8 +2120,9 @@ def q_geojson_roundtrip(spark, sf_dir):
         F.concat(F.lit("ln/"), sk.cast("string")),
         F.concat(F.lit("s"), sk.cast("string")),
         "LineString",
-        arr(pt(lon_col(sk), lat_col(sk)), pt(lon_col(sk + 7), lat_col(sk + 7))),
-        '["way"]').alias("geojson"))
+        F.array(F.array(lon_col(sk), lat_col(sk)),
+                F.array(lon_col(sk + 7), lat_col(sk + 7))),
+        ["way"]).alias("geojson"))
 
     nat = _t(spark, sf_dir, "nation")
     nk = F.col("n_nationkey")
@@ -2138,8 +2132,8 @@ def q_geojson_roundtrip(spark, sf_dir):
     polys = nat.select(doc(
         F.concat(F.lit("pg/"), nk.cast("string")),
         F.concat(F.lit("n"), nk.cast("string")),
-        "Polygon", arr(box_ring(nx0, ny0, nx1, ny1)),
-        '["park","area"]').alias("geojson"))
+        "Polygon", F.array(box_ring(nx0, ny0, nx1, ny1)),
+        ["park", "area"]).alias("geojson"))
 
     reg = _t(spark, sf_dir, "region")
     rk = F.col("r_regionkey")
@@ -2151,8 +2145,9 @@ def q_geojson_roundtrip(spark, sf_dir):
         F.concat(F.lit("mp/"), rk.cast("string")),
         F.concat(F.lit("r"), rk.cast("string")),
         "MultiPolygon",
-        arr(arr(box_ring(ax0, ay0, ax1, ay1)), arr(box_ring(bx0, by0, bx1, by1))),
-        '["region"]').alias("geojson"))
+        F.array(F.array(box_ring(ax0, ay0, ax1, ay1)),
+                F.array(box_ring(bx0, by0, bx1, by1))),
+        ["region"]).alias("geojson"))
 
     docs = points.unionAll(lines).unionAll(polys).unionAll(mpolys)
     out = parse_features(docs)

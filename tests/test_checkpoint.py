@@ -74,6 +74,22 @@ def test_bucketed_resume_computes_only_missing(spark, root):
     assert sum(r["n_rows"] for r in lt.collect()) == 1000
 
 
+@pytest.mark.parametrize("layout", ["parquet", "iceberg"])
+def test_bucketed_all_buckets_empty(spark, root, layout):
+    """No bucket produces a row, so no data file is ever written: the
+    result is an empty frame with fn's columns, both from the call that
+    ran the waves and from a later call that finds every bucket done."""
+    src = spark.range(100)
+    bucket = F.pmod(F.col("id"), F.lit(4))
+    for _ in range(2):
+        out = run_bucketed_stage(spark, root, "empty", src,
+                                 lambda df: df.filter(F.lit(False)), bucket,
+                                 n_buckets=4, buckets_per_wave=2, layout=layout)
+        assert out.columns == ["id", "_bucket"]
+        assert out.count() == 0
+    assert completed_buckets(spark, root, "empty") == set(range(4))
+
+
 def test_bucketed_crash_between_append_and_lineage_no_dupes(spark, root, monkeypatch):
     """ADVICE r1 (medium): a crash AFTER the wave's parquet append but
     BEFORE its lineage append must not duplicate rows on resume — orphan

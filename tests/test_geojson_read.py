@@ -1,7 +1,7 @@
 """GeoJSON parse (functions/geojson_read.py) — the read side of the
 round trip: typed extraction, RFC 7946 checks, quarantine on malformed
-docs, and parse(emit(x)) == x over the REAL pipeline emitter
-(json_canon.geojson_doc on the OSM fixture), the north-star's
+docs, and parse(emit(x)) == x over the REAL pipeline emitter (the JVM
+json_canon.geojson_doc column on the OSM fixture), the north-star's
 "GeoJSON round-trip test cases"."""
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Byte-exact golden tests for the canonical GeoJSON serializer: pinned
 key order (id, title, geometry, categories, address?, links? — the
 reference's jsonj insertion order, OsmPostProcessor.java:128-131,332-343),
-shortest-round-trip float formatting, canonical category order."""
+Java ``Double.toString`` number notation, canonical category order."""
 
 from __future__ import annotations
 
@@ -55,67 +55,30 @@ def test_polygon_doc_bytes(fixtures):
     )
 
 
-# ---------------------------------------------------------- float parity
-def test_java_double_str_vs_real_jvm_grid(spark):
-    """VERDICT r1 №8: parity with the ACTUAL JVM's Double.toString across
-    the coordinate grid, pinning the exponent boundaries (1e-4/1e-3 and
-    1e7) where Python repr and Java notation diverge."""
-    from osm2geojson_spark.functions.json_canon import java_double_str
-
-    jdouble = spark._jvm.java.lang.Double
-    cases = [
-        0.0, -0.0, 1.0, -1.0, 5.0, 180.0, -180.0, 85.0511,
-        5.005, -0.1130375, 51.5121071,
-        # plain/scientific boundaries
-        0.001, 0.0009999999, 0.0005, 0.0001, 9.999e-4, 1e-3, 1e-4, 1e-5,
-        -0.0005, -1e-4,
-        1e6, 9999999.0, 9999999.5, 1e7, 1.0000001e7, 12345678.9, 1e8,
-        -1e7, -9999999.875,
-        # OSM precision extremes
-        1e-7, 179.9999999, -179.9999999, 1.5e-7,
-    ]
-    for d in cases:
-        want = jdouble.toString(float(d))
-        got = java_double_str(d)
-        assert got == want, f"{d!r}: python {got!r} != jvm {want!r}"
-
-
-def test_java_double_str_hypothesis_grid(spark):
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from osm2geojson_spark.functions.json_canon import java_double_str
-
-    jdouble = spark._jvm.java.lang.Double
-
-    @settings(max_examples=300, deadline=None, derandomize=True)
-    @given(
-        st.one_of(
-            # OSM coordinate grid: 1e-7-quantized lon/lat
-            st.integers(min_value=-1_800_000_000, max_value=1_800_000_000)
-            .map(lambda i: i / 1e7),
-            # decimal magnitudes straddling both notation boundaries
-            st.integers(min_value=1, max_value=99_999).flatmap(
-                lambda m: st.integers(min_value=-9, max_value=9).map(
-                    lambda e: m * (10.0 ** e))),
-        )
+# ------------------------------------------------ notation and escapes
+def test_notation_edge_and_escape_doc_bytes(spark):
+    """Every number is printed by the JVM's Double.toString: plain
+    decimal for 1e-3 ≤ |d| < 1e7, ``d.dddEn`` outside it, ``-0.0`` kept.
+    Strings escape ``"`` and ``\\``, control characters as upper-case
+    ``\\uXXXX``, and write non-ASCII as is."""
+    nodes = spark.createDataFrame([
+        (1, 0.001, 0.0005,
+         {"name": 'Café "Q" \\ ü\x1f', "amenity": "cafe",
+          "addr:street": "Däm"}),
+        (2, 1.0e7, -0.0, None),
+        (3, -0.1130375, 0.001, None),
+    ], "id long, lon double, lat double, tags map<string,string>")
+    ways = spark.createDataFrame(
+        [(900, {"name": "Edge", "highway": "x"}, [2, 3])],
+        "id long, tags map<string,string>, ns array<long>")
+    assert _docs(node_features(nodes))["osmnode/1"] == (
+        '{"id":"osmnode/1","title":"Café \\"Q\\" \\\\ ü\\u001F",'
+        '"geometry":{"type":"Point","coordinates":[0.001,5.0E-4]},'
+        '"categories":{"osm":["amenity:cafe"]},"address":{"street":"Däm"}}'
     )
-    def check(d):
-        assert java_double_str(d) == jdouble.toString(float(d))
-
-    check()
-
-
-def test_java_double_str_pre_jdk19_divergence_documented(spark):
-    """Known, deliberate divergence: for doubles whose binary value has a
-    short EXACT decimal expansion (e.g. 2^-24), pre-JDK-19 FloatingDecimal
-    prints the full expansion while JDK 19+ (Ryu) and this serializer
-    print the shortest round-trip form. We pin MODERN Java semantics; the
-    host JVM here is JDK 17, so it shows the old behavior."""
-    from osm2geojson_spark.functions.json_canon import java_double_str
-
-    d = 2.0 ** -24
-    assert java_double_str(d) == "5.960464477539063E-8"  # shortest (JDK 19+)
-    jvm_s = spark._jvm.java.lang.Double.toString(d)
-    assert jvm_s in ("5.9604644775390625E-8", "5.960464477539063E-8")
-    assert float(java_double_str(d)) == d  # still round-trips exactly
+    assert _docs(way_features(assemble_ways(nodes, ways)))["osmway/900"] == (
+        '{"id":"osmway/900","title":"Edge",'
+        '"geometry":{"type":"LineString","coordinates":'
+        '[[1.0E7,-0.0],[-0.1130375,0.001]]},'
+        '"categories":{"osm":["street","highway:x"]}}'
+    )

@@ -10,6 +10,8 @@ import json
 import pytest
 
 from osm2geojson_spark.pipeline import intermediate_datasets, osm_to_geojson
+from osm2geojson_spark.session import owned
+from tools.check_oracle import residue
 
 XML = """<?xml version='1.0'?>
 <osm>
@@ -66,6 +68,28 @@ def test_osm_to_geojson_end_to_end(spark, xml_file, tmp_path):
     assert rels[0]["geometry"]["type"] == "MultiPolygon"
 
     assert streams["quarantine"].count() == 1  # node 99 without lat
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_osm_to_geojson_writes_release_their_cache(spark, xml_file, tmp_path,
+                                                   distributed):
+    """With out_dir the writes share one persisted scan, released when
+    the call returns; the returned frames still recompute from the file,
+    without caching it again."""
+    with owned(spark) as before:
+        streams = osm_to_geojson(spark, xml_file, out_dir=str(tmp_path / "out"),
+                                 distributed=distributed)
+        assert residue(spark, before) == []
+    assert [r["feature_id"] for r in streams["pois"].collect()] == ["osmnode/10"]
+    assert residue(spark, before) == []
+
+
+def test_osm_to_geojson_without_out_dir_persists_nothing(spark, xml_file):
+    with owned(spark) as before:
+        streams = osm_to_geojson(spark, xml_file, distributed=True)
+        for df in streams.values():
+            df.collect()
+        assert residue(spark, before) == []
 
 
 def test_reference_strict_mode_drops_relations(spark, xml_file):

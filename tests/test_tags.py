@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from osm2geojson_spark.functions.tags import categories_expr
+from osm2geojson_spark.functions.tags import categories_expr, interpret_tags
 
 CASES = [
     # (tags, expected categories in canonical order)
@@ -49,5 +49,24 @@ CASES = [
 @pytest.mark.parametrize("tags,expected", CASES)
 def test_categories_truth_table(spark, tags, expected):
     df = spark.createDataFrame([(tags,)], "tags map<string,string>")
-    got = df.select(categories_expr(F.col("tags")).alias("c")).first()["c"]
+    got = df.select(categories_expr("tags").alias("c")).first()["c"]
     assert got == expected, (tags, got, expected)
+
+
+def test_interpret_tags_builds_in_few_py4j_round_trips(spark, monkeypatch):
+    """Each derived column is one parsed SQL expression: building the
+    frame costs a handful of py4j calls, not one per expression node
+    (the chained-Column build made 1,776)."""
+    df = spark.createDataFrame([], "id long, tags map<string,string>")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    interpret_tags(df)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 200, len(calls)
