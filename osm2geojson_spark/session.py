@@ -28,6 +28,15 @@ from pyspark.sql import DataFrame, SparkSession
 _BLOCKS: list[list[DataFrame | RDD]] = []
 
 
+def _driver_memory() -> str:
+    """Default ``spark.driver.memory``: 40% of physical memory in whole
+    GiB, 1g to 24g. In local mode the driver JVM is the whole engine, and
+    a heap near the host's memory grows until the kernel kills it (a
+    fixed 24g did, after 144 oracle entries on a 15 GB host)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, int(phys * 0.4) >> 30))}g"
+
+
 def get_spark(
     app: str = "osm2geojson_spark",
     master: str | None = None,
@@ -73,7 +82,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

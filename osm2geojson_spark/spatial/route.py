@@ -567,7 +567,7 @@ def shortest_paths_delta(
     barrier; only block-crossing relaxations travel through the shuffle.
     Rounds collapse from O(diameter in hops) to O(diameter in blocks) —
     measured 1300× fewer rounds on a 1M-node grid
-    (``tools/grid_route_bench.py``).
+    (``bench.py --sweep grid_route``).
 
     Correctness does not depend on the partitioner or ``delta``: block
     Dijkstra may start from not-yet-final seed distances, but every

@@ -20,6 +20,7 @@ Design notes (100 TB/day ingest):
 from __future__ import annotations
 
 import glob
+import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,17 +73,22 @@ def phash_dedup_stream(
     )
 
 
-def _state_versions(state_dir: str) -> list[int]:
-    """The ``v=N`` state versions under ``state_dir``. Versions are
-    found with a local ``glob``, which sees nothing on a remote store,
-    so a non-local ``state_dir`` (s3a://, hdfs://) raises instead of
-    silently restarting the state from v=0."""
+def _local_dir(state_dir: str) -> str:
+    """``state_dir`` as a local path. State versions are found with a
+    local ``glob``, which sees nothing on a remote store, so a non-local
+    ``state_dir`` (s3a://, hdfs://) raises instead of silently
+    restarting the state from v=0."""
     u = urlparse(state_dir)
     if u.scheme not in ("", "file"):
         raise ValueError(
             f"mosaic state_dir must be a local path, got {state_dir!r}")
-    local = u.path if u.scheme else state_dir
-    return [int(p.rsplit("=", 1)[1]) for p in glob.glob(f"{local}/v=*")]
+    return u.path if u.scheme else state_dir
+
+
+def _state_versions(state_dir: str) -> list[int]:
+    """The ``v=N`` state versions under ``state_dir``."""
+    return [int(p.rsplit("=", 1)[1])
+            for p in glob.glob(f"{_local_dir(state_dir)}/v=*")]
 
 
 def mosaic_stream(
@@ -94,8 +100,10 @@ def mosaic_stream(
     micro-batch's thumbnails become per-tile PARTIAL state
     ``(tx, ty, n_contrib, acc array<long>, cnt array<long>)`` — the
     associative half of the batch kernel — merged element-wise with
-    the accumulated store (versioned parquet per batch: the previous
-    version is read before the new one is written, never in place).
+    the accumulated store (versioned parquet per batch: batch ``b``
+    reads the newest version below ``b`` and writes ``v=b``, never in
+    place). A replayed ``batch_id`` whose version is already committed
+    does nothing, so a restart that re-delivers a batch counts it once.
     ``mosaic_from_state`` renders the same ``(tx, ty, n_contrib, w_px,
     h_px, md5)`` rows as the batch ``geo_mosaic`` — associativity of
     (sum, count) makes stream-after-N-drops == batch-over-all, which
@@ -108,7 +116,7 @@ def mosaic_stream(
     from osm2geojson_spark.operators.images import mosaic_contribs
 
     t, s = int(tile), int(thumb)
-    _state_versions(state_dir)  # a non-local dir fails before the stream
+    local = _local_dir(state_dir)  # a non-local dir fails before the stream
 
     def accum(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
@@ -144,21 +152,20 @@ def mosaic_stream(
               [int(v) for v in acc], [int(v) for v in cnt])],
             columns=["tx", "ty", "n_contrib", "acc", "cnt"])
 
-    def latest_version() -> int:
-        return max(_state_versions(state_dir), default=-1)
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.exists(f"{local}/v={batch_id}/_SUCCESS"):
+            return  # a replay of a batch whose state is committed
         partial = (mosaic_contribs(batch_df, int(world_px), t, s)
                    .groupBy("tx", "ty")
                    .applyInPandas(accum, state_schema))
-        prev = latest_version()
+        prev = max((v for v in _state_versions(state_dir) if v < batch_id),
+                   default=-1)
         if prev >= 0:
             old = spark.read.parquet(f"{state_dir}/v={prev}")
             partial = old.unionByName(partial)
         merged = (partial.groupBy("tx", "ty")
                   .applyInPandas(merge, state_schema))
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/v={prev + 1}")
+        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
 
     q = (imgs.writeStream.foreachBatch(process)
          .queryName(queryName)

@@ -4,6 +4,9 @@ batch twin on the same rows."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,23 +79,51 @@ if __name__ == "__main__":
     pytest.main([__file__, "-q"])
 
 
-def test_mosaic_stream_equals_batch(spark, img_dir, tmp_path):
+def _mosaic_stream_vs_batch(spark, img_dir, state):
+    """(stream rows from the state in ``state``, batch ``geo_mosaic``
+    rows), each as {(tx, ty): (n_contrib, md5)}."""
     from osm2geojson_spark.operators.images import geo_mosaic
-    from osm2geojson_spark.streaming.images import (
-        mosaic_from_state,
-        mosaic_stream,
-    )
+    from osm2geojson_spark.streaming.images import mosaic_from_state
 
-    state = str(tmp_path / "mosaic_state")
-    mosaic_stream(
-        spark, stream_images_from_parquet(spark, img_dir), state,
-        world_px=1024, tile=128, thumb=16)
     got = {(r["tx"], r["ty"]): (r["n_contrib"], r["md5"])
            for r in mosaic_from_state(spark, state, tile=128).collect()}
     want = {(r["tx"], r["ty"]): (r["n_contrib"], r["md5"])
             for r in geo_mosaic(spark.read.parquet(img_dir),
                                 world_px=1024, tile=128,
                                 thumb=16).collect()}
+    return got, want
+
+
+def _run_mosaic_stream(spark, img_dir, state):
+    from osm2geojson_spark.streaming.images import mosaic_stream
+
+    mosaic_stream(
+        spark, stream_images_from_parquet(spark, img_dir), state,
+        world_px=1024, tile=128, thumb=16)
+
+
+def test_mosaic_stream_equals_batch(spark, img_dir, tmp_path):
+    state = str(tmp_path / "mosaic_state")
+    _run_mosaic_stream(spark, img_dir, state)
+    got, want = _mosaic_stream_vs_batch(spark, img_dir, state)
+    assert got == want and len(got) > 5
+
+
+def test_mosaic_stream_replayed_batch_counts_once(spark, img_dir, tmp_path):
+    # drop the last batch's commit: the restarted query re-delivers that
+    # batch_id, whose state version is already written and must not be
+    # merged a second time
+    state = str(tmp_path / "mosaic_state")
+    _run_mosaic_stream(spark, img_dir, state)
+    commits = glob.glob(f"{state}/_chk/commits/[0-9]*")
+    last = max(commits, key=lambda p: int(os.path.basename(p)))
+    head, name = os.path.split(last)
+    # with its checksum, or Spark refuses to write the commit again
+    for p in (last, os.path.join(head, f".{name}.crc")):
+        os.remove(p)
+    _run_mosaic_stream(spark, img_dir, state)
+    assert os.path.exists(last)  # the batch was delivered again
+    got, want = _mosaic_stream_vs_batch(spark, img_dir, state)
     assert got == want and len(got) > 5
 
 
