@@ -45,22 +45,6 @@ def way_geom_type(coords: Column) -> Column:
     ).otherwise(F.lit("LineString"))
 
 
-def ring_signed_area(coords: Column) -> Column:
-    """Shoelace signed area x2 (lon/lat plane) as a column expression —
-    positive = counter-clockwise. Used to record pre-normalization
-    orientation in lineage."""
-    n = F.size(coords)
-    return F.aggregate(
-        F.zip_with(
-            F.slice(coords, 1, n - 1),
-            F.slice(coords, 2, n - 1),
-            lambda a, b: a[0] * b[1] - b[0] * a[1],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 # ------------------------------------------------------------- numpy kernels
 def _signed_area(ring: np.ndarray) -> float:
     x, y = ring[:, 0], ring[:, 1]

@@ -24,10 +24,11 @@ no row data at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.session import persist
+from osm2geojson_spark.spatial.strpack import holds_rank, prefix_sums
 
 __all__ = ["pagerank", "triangle_count", "k_core", "link_prediction",
            "strongly_connected_components", "hits", "label_propagation",
@@ -857,18 +858,18 @@ def effective_diameter(edges: DataFrame, sources: list,
     from osm2geojson_spark.spatial.route import travel_time_matrix_delta
 
     p = int(p_ppm)
+    if not 0 < p <= 1_000_000:
+        raise ValueError("p_ppm must be in (0, 1e6]")
     m = travel_time_matrix_delta(edges, sources, **matrix_kwargs)
     hist = m.groupBy("dist").agg(F.count("*").alias("n_d"))
     tot = hist.agg(F.sum("n_d").alias("n_pairs"))
-    w = Window.orderBy("dist").rowsBetween(Window.unboundedPreceding, 0)
-    walk = (hist.crossJoin(F.broadcast(tot))
-            .withColumn("cum", F.sum("n_d").over(w))
+    walk = (prefix_sums(hist.crossJoin(F.broadcast(tot)), ["dist"],
+                        {"cum": "n_d"})
             .withColumn("k", F.expr(
                 f"CAST((({p} * n_pairs) + 999999) div 1000000"
                 " AS BIGINT)")))
-    return (walk.where(F.col("cum") >= F.col("k"))
-            .groupBy("n_pairs", "k")
-            .agg(F.min("dist").alias("eff_diam")))
+    return (walk.where(holds_rank("k", "cum", "n_d"))
+            .select("n_pairs", "k", F.col("dist").alias("eff_diam")))
 
 
 def dag_layers(edges: DataFrame, max_rounds: int = 64) -> DataFrame:

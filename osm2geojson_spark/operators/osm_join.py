@@ -21,10 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# node payload embedded into ways/relations (reference keeps {"id","l"[,"tags"]})
-_NODE_STRUCT = ("id", "lon", "lat")
-
-
 def way_edges(ways: DataFrame) -> DataFrame:
     """P4 edge emission (OsmJoin.java:204-208): one row per <nd ref>,
     with explicit position — the ordering IS the geometry."""

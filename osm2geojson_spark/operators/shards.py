@@ -11,20 +11,21 @@ image+caption table, BASELINE.json input_hint).
 Scale design: the only global structure is a prefix sum of record
 sizes in the shuffle order, and a naive ``Window.orderBy`` without
 partition keys is a ONE-task sort (the documented strpack ceiling).
-``pack_shards`` instead buckets rows by a deterministic monotone
-integer function of the order key (``div`` — same contract as
-``spatial/strpack.global_rank``), computes per-bucket size subtotals
-(O(#buckets) rows, broadcast prefix offsets), and finishes with an
-ordinary partitioned window cumsum inside each bucket. Shard id is
-``offset_before div capacity`` — pure int64, oracle-exact in any
+``pack_shards`` runs it through ``spatial/strpack.prefix_sums`` with a
+deterministic monotone integer bucket of the order key (``div``):
+per-bucket size subtotals (O(#buckets) rows, broadcast prefix offsets)
+plus an ordinary partitioned window cumsum inside each bucket. Shard
+id is ``offset_before div capacity`` — pure int64, oracle-exact in any
 engine. Records larger than ``capacity`` keep the math well-defined:
 they own their start shard and later ids simply skip ahead (ids need
 not be contiguous)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from osm2geojson_spark.spatial.strpack import prefix_sums
 
 __all__ = ["pack_shards", "shard_manifest"]
 
@@ -40,20 +41,10 @@ def pack_shards(df: DataFrame, *, size_col: str, order_col: str,
     cap = int(capacity)
     if cap <= 0:
         raise ValueError("capacity must be a positive integer")
-    d = df.withColumn("_b", bucket.cast("long"))
-    sizes = d.groupBy("_b").agg(F.sum(size_col).alias("_n"))
-    woff = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sizes.select(
-        "_b", F.coalesce(F.sum("_n").over(woff), F.lit(0)).alias("_off"))
-    w = (Window.partitionBy("_b").orderBy(order_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    return (d.join(F.broadcast(offs), "_b")
-            .withColumn(
-                "offset",
-                (F.coalesce(F.sum(size_col).over(w), F.lit(0))
-                 + F.col("_off")).cast("long"))
-            .withColumn(out_col, F.expr(f"offset div {cap}"))
-            .drop("_b", "_off"))
+    size = F.coalesce(F.col(size_col), F.lit(0))
+    return (prefix_sums(df, [order_col], {"offset": size}, bucket)
+            .withColumn("offset", (F.col("offset") - size).cast("long"))
+            .withColumn(out_col, F.expr(f"offset div {cap}")))
 
 
 def shard_manifest(assigned: DataFrame, *, id_col: str,

@@ -15,6 +15,11 @@ Scale shape: ONE data-sized shuffle (the groupBy(a,b) count); marginals
 are aggregates OVER THE COUNTS (cells ≤ |A|·|B|, metadata-sized) and
 re-attach by broadcast. Cramér's V² in ppb derives per-table:
 ``v2_ppb = (10³·chi2_ppm) div (N·(min(|A|,|B|)−1))``.
+
+The rank statistics below walk DISTINCT-VALUE histograms, never rows:
+every running sum is ``spatial/strpack.prefix_sums``, 2× midranks are
+:func:`_midrank2`, and "the histogram row holding rank k" is
+``strpack.holds_rank``.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.session import persist
+from osm2geojson_spark.spatial.strpack import holds_rank, prefix_sums
 
 __all__ = ["contingency_chi2", "cramers_v2_ppb", "otsu_curve",
            "otsu_threshold", "exact_quantiles", "ks_2samp",
@@ -33,6 +39,13 @@ __all__ = ["contingency_chi2", "cramers_v2_ppb", "otsu_curve",
            "median_mad", "runs_test", "weighted_median", "group_mode", "trimmed_mean"]
 
 _D = "CAST({} AS DECIMAL(38,0))"
+
+
+def _midrank2(cum: str, c: str):
+    """2× the tie-averaged midrank of a histogram row: a tie group of
+    ``c`` rows ending at running count ``cum`` has midrank
+    ``cum − (c − 1)/2``, so ``2·cum − c + 1`` is an integer."""
+    return F.lit(2) * F.col(cum) - F.col(c) + F.lit(1)
 
 
 def contingency_chi2(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
@@ -99,11 +112,8 @@ def otsu_curve(df: DataFrame, value_col: str) -> DataFrame:
     h = df.groupBy(v.alias("t")).agg(F.count("*").alias("c"))
     tot = h.agg(F.sum("c").alias("n_tot"),
                 F.sum(F.col("t") * F.col("c")).alias("s_tot"))
-    w = (Window.orderBy("t")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (h.crossJoin(F.broadcast(tot))
-           .withColumn("n0", F.sum("c").over(w))
-           .withColumn("s0", F.sum(F.col("t") * F.col("c")).over(w)))
+    cum = prefix_sums(h.crossJoin(F.broadcast(tot)), ["t"],
+                      {"n0": "c", "s0": F.col("t") * F.col("c")})
     d = (F.col("s0") * F.col("n_tot") - F.col("s_tot") * F.col("n0"))
     return cum.select(
         "t",
@@ -181,15 +191,11 @@ def exact_quantiles(df: DataFrame, value_col: str,
     kdf = spark.createDataFrame(ks, "p_ppm long, k long")
 
     hist = src.groupBy("b").agg(F.count("*").alias("c"))
-    w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (hist.withColumn("cum", F.sum("c").over(w))
-           .withColumn("before", F.col("cum") - F.col("c")))
+    cum = prefix_sums(hist, ["b"], {"cum": "c"})
     # the one bucket holding each rank; offset inside the bucket
-    hit = (cum.join(F.broadcast(kdf),
-                    (F.col("before") < F.col("k"))
-                    & (F.col("k") <= F.col("cum")))
+    hit = (cum.join(F.broadcast(kdf), holds_rank("k"))
            .select("p_ppm", "k", "b",
-                   (F.col("k") - F.col("before")).alias("off")))
+                   (F.col("k") - F.col("cum") + F.col("c")).alias("off")))
     vals = (src.join(F.broadcast(hit.select("b").distinct()), "b")
             .groupBy("b")
             .agg(F.sort_array(F.collect_list("v")).alias("vs")))
@@ -220,10 +226,7 @@ def ks_2samp(df: DataFrame, value_col: str, group_col: str,
     counts = src.groupBy("v").agg(
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("g") == 2, 1).otherwise(0)).alias("c2"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cum = counts.select(
-        F.sum("c1").over(w).alias("f1"),
-        F.sum("c2").over(w).alias("f2"))
+    cum = prefix_sums(counts, ["v"], {"f1": "c1", "f2": "c2"})
     tot = counts.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
     return (
         cum.crossJoin(F.broadcast(tot))
@@ -256,16 +259,12 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
     counts = src.groupBy("v").agg(
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("g") == 2, 1).otherwise(0)).alias("c2"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    walk = counts.select(
-        "c1", "c2",
-        (F.sum(F.col("c1") + F.col("c2")).over(w)
-         - (F.col("c1") + F.col("c2"))).alias("s"))
+    walk = prefix_sums(
+        counts.withColumn("c", F.col("c1") + F.col("c2")), ["v"],
+        {"cum": "c"})
     agg = walk.agg(
         F.sum("c1").alias("n1"), F.sum("c2").alias("n2"),
-        F.sum(F.col("c1")
-              * (F.lit(2) * F.col("s") + F.col("c1") + F.col("c2")
-                 + F.lit(1))).alias("r1_x2"))
+        F.sum(F.col("c1") * _midrank2("cum", "c")).alias("r1_x2"))
     return agg.select(
         "n1", "n2", "r1_x2",
         (F.col("r1_x2") - F.col("n1") * (F.col("n1") + 1)).alias("u1_x2"),
@@ -321,14 +320,12 @@ def spearman_rho(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     src = df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y")) \
             .where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
 
-    def midrank2(col):
-        h = src.groupBy(col).agg(F.count("*").alias("cnt"))
-        w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-        return h.select(
-            col,
-            (2 * F.sum("cnt").over(w) - F.col("cnt") + 1).alias(f"r{col}"))
+    def ranks(col):
+        h = src.groupBy(col).agg(F.count("*").alias("c"))
+        return prefix_sums(h, [col], {"cum": "c"}).select(
+            col, _midrank2("cum", "c").alias(f"r{col}"))
 
-    ranked = (src.join(midrank2("x"), "x").join(midrank2("y"), "y"))
+    ranked = (src.join(ranks("x"), "x").join(ranks("y"), "y"))
     d = "CAST({} AS DECIMAL(38,0))"
     agg = ranked.agg(
         F.count("*").alias("n"),
@@ -518,13 +515,11 @@ def kendall_tau(df: DataFrame, x_col: str, y_col: str, *,
 
     def bmap(col: str, alias: str) -> DataFrame:
         h = cells.select(col).distinct()
-        w = Window.orderBy(col)
-        w_all = w.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)
-        return (h.select(col, F.row_number().over(w).alias("rn"),
-                         F.count("*").over(w_all).alias("nd"))
-                 .select(col, F.expr(f"((rn - 1) * {int(blocks)}) div nd")
-                         .alias(alias)))
+        nd = h.agg(F.count("*").alias("nd"))
+        return (prefix_sums(h, [col], {"rn": F.lit(1)})
+                .crossJoin(F.broadcast(nd))
+                .select(col, F.expr(f"((rn - 1) * {int(blocks)}) div nd")
+                        .alias(alias)))
 
     labeled = persist(cells.join(bmap("x", "xb"), "x")
                            .join(bmap("y", "yb"), "y"))
@@ -622,8 +617,8 @@ def kruskal_wallis(df: DataFrame, value_col: str,
     """Kruskal–Wallis k-sample rank test as ONE row
     ``(n, k, tie3, sum_t, h, h_adj)`` — the nonparametric ANOVA gate.
 
-    Rides the mann_whitney/spearman midrank substrate: 2× midranks
-    from the DISTINCT-VALUE histogram window (histogram-sized bound),
+    2× midranks (:func:`_midrank2`) from the DISTINCT-VALUE histogram
+    prefix sum (histogram-sized bound),
     per-group rank sums ``s2r`` as exact integers. The rank-sum-square
     term ``sum_t = Σ s2r²/(4·n_g)`` is irreducibly rational, so it is
     an ORDERED double fold over the group-sorted stats (the IDW
@@ -637,9 +632,8 @@ def kruskal_wallis(df: DataFrame, value_col: str,
            .where(F.col(group_col).isNotNull()
                   & F.col(value_col).isNotNull()))
     hist = src.groupBy("v").agg(F.count("*").alias("cnt"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    ranks = hist.select(
-        "v", (2 * F.sum("cnt").over(w) - F.col("cnt") + 1).alias("r2"))
+    ranks = prefix_sums(hist, ["v"], {"cum": "cnt"}).select(
+        "v", _midrank2("cum", "cnt").alias("r2"))
     grp = (src.join(ranks, "v")
            .groupBy("g")
            .agg(F.count("*").alias("n_g"), F.sum("r2").alias("s2r")))
@@ -749,9 +743,9 @@ def gini_coefficient(df: DataFrame, value_col: str,
     1-based ranks i, ``G = 2·Σ i·xᵢ / (n·S) − (n+1)/n``; ties make
     Σ i·xᵢ order-invariant, and the distinct-value histogram gives it
     exactly as ``A = Σ_v v·c·(2s + c + 1)`` (s = cumulative count of
-    smaller values — one histogram-sized window, the midrank
-    substrate). ``gini = (A − (n+1)·S) / (n·S)`` is the single guarded
-    double. Requires non-negative values (raise upstream); NULL gini
+    smaller values — one histogram-sized prefix sum; ``2s + c + 1`` is
+    :func:`_midrank2`). ``gini = (A − (n+1)·S) / (n·S)`` is the single
+    guarded double. Requires non-negative values (raise upstream); NULL gini
     when S = 0. int64 bound: v·n² < 2⁶³."""
     src = (df.select(*([F.col(group_col).alias("g")] if group_col
                        else []),
@@ -761,16 +755,14 @@ def gini_coefficient(df: DataFrame, value_col: str,
     hist = src.groupBy(*gk, "v").agg(F.count("*").alias("c"))
     if group_col:
         w = (Window.partitionBy("g").orderBy("v")
-             .rowsBetween(Window.unboundedPreceding, -1))
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        cum = hist.withColumn("cum", F.sum("c").over(w))
     else:
-        w = (Window.orderBy("v")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    cum = hist.withColumn(
-        "s_before", F.coalesce(F.sum("c").over(w), F.lit(0)))
+        cum = prefix_sums(hist, ["v"], {"cum": "c"})
     agg = (cum.groupBy(*gk)
            .agg(F.sum("c").cast("long").alias("n"),
                 F.sum(F.expr("v * c")).cast("long").alias("s"),
-                F.sum(F.expr("v * c * ((2 * s_before) + c + 1)"))
+                F.sum(F.expr("v * c") * _midrank2("cum", "c"))
                 .cast("long").alias("a")))
     gini = ("CASE WHEN (s = 0) OR (n = 0) THEN NULL ELSE"
             " (CAST(a AS DOUBLE) - (CAST(n + 1 AS DOUBLE)"
@@ -787,9 +779,10 @@ def lorenz_curve(df: DataFrame, value_col: str,
     holds). EXACT: rank ``k = ceil(p·n/100)`` under truncating div,
     and the cumulative value at rank k reads off the distinct-value
     histogram walk — inside a tie bucket every row equals v, so
-    ``cum_v = cum_before + (k − s_before)·v`` is exact int64. Shares
-    are the only doubles. One histogram-sized window (the midrank
-    bound class); non-negative integer values required."""
+    ``cum_v = cum_vc + (k − cum)·v`` (``cum``/``cum_vc`` = running
+    count/value through that bucket) is exact int64. Shares are the
+    only doubles. One histogram-sized prefix sum; non-negative integer
+    values required."""
     ps = [int(p) for p in (pcts or [10, 20, 30, 40, 50,
                                     60, 70, 80, 90, 100])]
     if any(not 0 < p <= 100 for p in ps):
@@ -797,13 +790,7 @@ def lorenz_curve(df: DataFrame, value_col: str,
     src = (df.select(F.col(value_col).cast("long").alias("v"))
            .where(F.col(value_col).isNotNull()))
     hist = src.groupBy("v").agg(F.count("*").alias("c"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (hist
-           .withColumn("s_before",
-                       F.coalesce(F.sum("c").over(w), F.lit(0)))
-           .withColumn("v_before",
-                       F.coalesce(F.sum(F.expr("v * c")).over(w),
-                                  F.lit(0))))
+    cum = prefix_sums(hist, ["v"], {"cum": "c", "cum_vc": F.expr("v * c")})
     tot = hist.agg(F.sum("c").cast("long").alias("n"),
                    F.sum(F.expr("v * c")).cast("long").alias("s"))
     p_tbl = df.sparkSession.createDataFrame(
@@ -811,13 +798,9 @@ def lorenz_curve(df: DataFrame, value_col: str,
     ranks = (p_tbl.crossJoin(F.broadcast(tot))
              .withColumn("k", F.expr(
                  "((p_pct * n) + 99) div 100")))
-    hit = (ranks.join(
-        cum,
-        (F.col("s_before") < F.col("k"))
-        & (F.col("k") <= F.col("s_before") + F.col("c")))
-        .select("p_pct", "k", "n", "s",
-                F.expr("v_before + ((k - s_before) * v)")
-                .alias("cum_v")))
+    hit = (ranks.join(cum, holds_rank("k"))
+           .select("p_pct", "k", "n", "s",
+                   F.expr("cum_vc + ((k - cum) * v)").alias("cum_v")))
     return (hit.select(
         "p_pct", "k", "cum_v", "n", "s",
         F.expr("CAST(k AS DOUBLE) / CAST(n AS DOUBLE)")
@@ -907,14 +890,13 @@ def weighted_median(df: DataFrame, value_col: str,
                   & (F.col(weight_col) > 0)))
     hist = src.groupBy("v").agg(F.count("*").alias("c"),
                                 F.sum("wt").alias("w"))
-    win = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     tot = hist.agg(F.sum("c").cast("long").alias("n"),
                    F.sum("w").cast("long").alias("w_total"))
-    walk = (hist.withColumn("cum_w", F.sum("w").over(win))
+    walk = (prefix_sums(hist, ["v"], {"cum_w": "w"})
             .crossJoin(F.broadcast(tot)))
-    return (walk.where("cum_w >= ((w_total + 1) div 2)")
-            .groupBy("n", "w_total")
-            .agg(F.min("v").alias("wmed")))
+    return (walk.where(holds_rank(F.expr("(w_total + 1) div 2"),
+                                  "cum_w", "w"))
+            .select("n", "w_total", F.col("v").alias("wmed")))
 
 
 def group_mode(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
@@ -941,8 +923,8 @@ def trimmed_mean(df: DataFrame, value_col: str,
     largest observations, average the rest — the robust location
     everyone actually ships. The kept sum is EXACT: the cumulative
     value at any rank r reads off the distinct-value histogram
-    (``cum_v(r) = v_before + (r − s_before)·v`` inside the tie
-    bucket — the lorenz_curve partial), so
+    (``cum_v(r) = cum_vc + (r − cum)·v`` inside the tie bucket — the
+    lorenz_curve partial), so
     ``kept_sum = cum_v(n−k) − cum_v(k)``; ``tmean`` is the single
     division. Integer values; one histogram-sized window."""
     p = int(trim_ppm)
@@ -951,13 +933,7 @@ def trimmed_mean(df: DataFrame, value_col: str,
     src = (df.select(F.col(value_col).cast("long").alias("v"))
            .where(F.col(value_col).isNotNull()))
     hist = src.groupBy("v").agg(F.count("*").alias("c"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (hist
-           .withColumn("s_before",
-                       F.coalesce(F.sum("c").over(w), F.lit(0)))
-           .withColumn("v_before",
-                       F.coalesce(F.sum(F.expr("v * c")).over(w),
-                                  F.lit(0))))
+    cum = prefix_sums(hist, ["v"], {"cum": "c", "cum_vc": F.expr("v * c")})
     tot = hist.agg(F.sum("c").cast("long").alias("n"))
     ranks = (tot.select(
         "n", F.expr(f"(({p} * n) div 1000000)").alias("k"))
@@ -966,14 +942,10 @@ def trimmed_mean(df: DataFrame, value_col: str,
 
     def cum_at(r_col: str, alias: str) -> DataFrame:
         # rank 0 → cumulative 0 (nothing dropped below)
-        return (ranks.join(
-            cum, (F.col("s_before") < F.col(r_col))
-            & (F.col(r_col) <= F.col("s_before") + F.col("c")),
-            "left")
-            .select("n", "k",
-                    F.coalesce(
-                        F.expr(f"v_before + (({r_col} - s_before) * v)"),
-                        F.lit(0)).cast("long").alias(alias)))
+        return (ranks.join(cum, holds_rank(r_col), "left")
+                .select("n", "k",
+                        F.coalesce(F.expr(f"cum_vc + (({r_col} - cum) * v)"),
+                                   F.lit(0)).cast("long").alias(alias)))
 
     lo = cum_at("r_lo", "cum_lo")
     hi = cum_at("r_hi", "cum_hi")

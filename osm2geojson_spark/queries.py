@@ -83,10 +83,6 @@ def _dec_sum(col, prec: int = 28, scale: int = 6):
 
 # PIP fixture polygons: 5 disjoint boxes derived from r_regionkey.
 # Edges at +5e-7 so no derived coordinate (1e-6 grid) is ever ON an edge.
-_BOX = dict(lon0="rk * 60 - 170.0000005", lon1="rk * 60 - 140.0000005",
-            lat0="rk * 25 - 60.0000005", lat1="rk * 25 - 40.0000005")
-
-
 def _box_cols(rk):
     return (rk * 60 - 170.0000005, rk * 60 - 140.0000005,
             rk * 25 - 60.0000005, rk * 25 - 40.0000005)

@@ -96,12 +96,6 @@ def get_spark(
     return spark
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver-generated parquet tables from an sf dir."""
-    out = [spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names]
-    return out[0] if len(out) == 1 else out
-
-
 def persist(df: DataFrame | RDD, level: StorageLevel | None = None):
     """``df.persist(level)`` for a DataFrame or an RDD; inside an
     ``owned`` block a plan that was not already cached is also recorded

@@ -37,10 +37,8 @@ multi-line entity blobs straddle any line-based input split. Two readers:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm2geojson_spark.session import persist
 
@@ -58,44 +56,15 @@ _BLOB_RE = r"(?s)<(node|way|relation)\b[^>]*?(?:/>|>.*?</\1>)"
 
 
 def xml_unescape(col):
-    """P3 — the five predefined XML entities (the overwhelming majority
-    of what unescapeXml hits in OSM data), as chained JVM-side replaces
-    (no UDF). Numeric character references (&#233; / &#xE9;) need
-    :func:`xml_unescape_full`."""
-    out = col
-    for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                    ("&apos;", "'"), ("&amp;", "&")):
-        out = F.regexp_replace(out, ent, ch)
-    return out
-
-
-def xml_unescape_full(col):
-    """P3 with FULL parity to StringEscapeUtils.unescapeXml: predefined
-    entities + decimal/hex numeric character references. Arrow-batched
-    pandas UDF (the decode table isn't expressible as builtin columns);
-    use only when inputs actually carry numeric refs — the expression
-    path above stays in codegen."""
-    import re
-
-    num_re = re.compile(r"&#(x[0-9a-fA-F]+|[0-9]+);")
-
-    def _dec(s: str) -> str:
-        # html.unescape also decodes HTML-only entities (&eacute;) that
-        # XML does NOT define — restrict to XML semantics: numeric refs
-        # plus the five predefined names.
-        s = num_re.sub(
-            lambda m: chr(int(m.group(1)[1:], 16)) if m.group(1)[0] in "xX"
-            else chr(int(m.group(1))), s)
-        for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                        ("&apos;", "'"), ("&amp;", "&")):
-            s = s.replace(ent, ch)
-        return s
-
-    @F.pandas_udf(T.StringType())
-    def unescape(v: pd.Series) -> pd.Series:
-        return v.map(lambda s: _dec(s) if s is not None else None)
-
-    return unescape(col)
+    """P3 — the reference's own call (OsmJoin.java:170),
+    ``StringEscapeUtils.unescapeXml`` from the commons-text jar that
+    ships with Spark, as a JVM column: the five predefined entities
+    plus decimal/hex numeric character references (``&#233;`` /
+    ``&#xE9;``). ``java_method`` maps a null input to the string
+    "null"; the tag arrays of ``regexp_extract_all`` hold no nulls."""
+    return F.java_method(
+        F.lit("org.apache.commons.text.StringEscapeUtils"),
+        F.lit("unescapeXml"), col)
 
 
 def read_osm_blobs(spark: SparkSession, path: str) -> DataFrame:

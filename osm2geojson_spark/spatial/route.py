@@ -448,27 +448,6 @@ def _np_block_relax(fr_src, fr_id, fr_dist, e_src, e_dst, e_w, e_cross,
     return os_[first], oi[first], od[first]
 
 
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _no_aqe(spark):
-    """Disable AQE for the duration of an iterative loop. Every round
-    is a fixed-shape query over known-size frames; AQE's per-shuffle
-    re-planning materializes extra sub-jobs per round (measured ~0.4 s
-    of a ~1 s toy round), pure overhead when the loop repeats the same
-    plan dozens of times. Restored on exit — one engine session may
-    serve non-iterative queries next."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 # Per-PROCESS cache of broadcast edge blocks: PySpark's Broadcast.value
 # caches on the handle INSTANCE, and every task deserializes a fresh
 # handle — so without this, each task re-reads and re-unpickles the

@@ -11,12 +11,13 @@ locality).
 
 Scale design: the classic formulation needs two GLOBAL ranks — and a
 naive ``Window.orderBy`` without partition keys collapses to ONE task.
-``global_rank`` instead buckets rows by a DETERMINISTIC monotone
-function of the leading sort column (integer ``div`` — a pure value
-function, so there is no repartitionByRange/spark_partition_id
-re-evaluation hazard), ranks within buckets with an ordinary
-partitioned window, and adds broadcast prefix-sum offsets of the bucket
-sizes (O(#buckets) rows). Correct because bucket(r1) < bucket(r2)
+``global_rank`` is a running count through :func:`prefix_sums`, the
+repo's one prefix-sum substrate: rows are bucketed by a DETERMINISTIC
+monotone function of the leading sort column (integer ``div`` — a pure
+value function, so there is no repartitionByRange/spark_partition_id
+re-evaluation hazard), summed within buckets by an ordinary partitioned
+window, and shifted by broadcast prefix-sum offsets of the bucket
+totals (O(#buckets) rows). Correct because bucket(r1) < bucket(r2)
 implies r1 sorts before r2; ties share a bucket by construction.
 Pathological value skew (all rows in one bucket) degrades to the
 single-task sort — pick ``bucket_width`` from the data's spread, same
@@ -32,28 +33,60 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["global_rank", "str_pack", "str_leaves"]
+__all__ = ["prefix_sums", "holds_rank", "global_rank", "str_pack",
+           "str_leaves"]
+
+
+def prefix_sums(df: DataFrame, order_cols: list[str], sums: dict,
+                bucket: Column | None = None) -> DataFrame:
+    """Inclusive running sums in ascending ``order_cols`` order (a
+    UNIQUE key): adds one column per ``sums`` entry, output name →
+    non-null column (or column name) to sum. The exclusive sum is
+    ``cum − own``.
+
+    With ``bucket`` — a deterministic integer column MONOTONE in
+    ``order_cols[0]`` (equal leading values ⇒ equal bucket), e.g.
+    ``F.expr("x div 1000000")`` — each bucket sums under a partitioned
+    window and adds the broadcast offsets of the bucket totals, which
+    are themselves a bucket-free prefix sum over O(#buckets) rows.
+    Without ``bucket`` the window is ONE task: only for frames the
+    caller bounds as histogram-sized."""
+    exprs = {k: F.col(v) if isinstance(v, str) else v
+             for k, v in sums.items()}
+    if bucket is None:
+        w = (Window.orderBy(*order_cols)
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        return df.withColumns({k: F.sum(e).over(w)
+                               for k, e in exprs.items()})
+    d = df.withColumn("_b", bucket.cast("long"))
+    tots = d.groupBy("_b").agg(*[F.sum(e).alias(f"_t_{k}")
+                                 for k, e in exprs.items()])
+    offs = prefix_sums(tots, ["_b"], {f"_o_{k}": f"_t_{k}" for k in exprs})
+    offs = offs.select("_b", *[(F.col(f"_o_{k}") - F.col(f"_t_{k}"))
+                               .alias(f"_o_{k}") for k in exprs])
+    w = (Window.partitionBy("_b").orderBy(*order_cols)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return (d.join(F.broadcast(offs), "_b")
+            .withColumns({k: F.sum(e).over(w) + F.col(f"_o_{k}")
+                          for k, e in exprs.items()})
+            .drop("_b", *[f"_o_{k}" for k in exprs]))
+
+
+def holds_rank(k, cum: str = "cum", own: str = "c") -> Column:
+    """True on the one :func:`prefix_sums` row whose range
+    ``(cum − own, cum]`` holds rank ``k`` — the first row whose running
+    count reaches k (own counts > 0; ranks outside [1, total] match no
+    row)."""
+    k = F.col(k) if isinstance(k, str) else k
+    return (F.col(cum) - F.col(own) < k) & (k <= F.col(cum))
 
 
 def global_rank(df: DataFrame, cols: list[str], bucket: Column,
                 out_col: str = "rank") -> DataFrame:
     """Exact 1-based global rank by a UNIQUE composite sort key, without
-    a single-partition window. ``bucket`` must be a deterministic integer
-    column MONOTONE in ``cols[0]`` (equal leading values ⇒ equal bucket),
-    e.g. ``F.expr("x div 1000000")``."""
-    d = df.withColumn("_b", bucket.cast("long"))
-    sizes = d.groupBy("_b").agg(F.count(F.lit(1)).alias("_n"))
-    # O(#buckets) rows — the unpartitioned window is bounded, not a
-    # data-sized sort
-    woff = (Window.orderBy("_b")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    offs = sizes.select(
-        "_b", F.coalesce(F.sum("_n").over(woff), F.lit(0)).alias("_off"))
-    w = Window.partitionBy("_b").orderBy(*[F.col(c) for c in cols])
-    return (d.join(F.broadcast(offs), "_b")
-            .withColumn(out_col, (F.row_number().over(w)
-                                  + F.col("_off")).cast("long"))
-            .drop("_b", "_off"))
+    a single-partition window: the running count of :func:`prefix_sums`
+    under ``bucket`` (same monotone contract)."""
+    return prefix_sums(df, cols, {out_col: F.lit(1)}, bucket)
 
 
 def str_pack(df: DataFrame, n_items: int, *, id_col: str = "id",

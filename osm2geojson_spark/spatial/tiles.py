@@ -25,13 +25,6 @@ def tile_expr(lon, lat, zoom: int):
     return C.cell_expr(lon, lat, zoom)
 
 
-def tile_of_cell(cell, res: int, zoom: int):
-    """Re-derive a coarser tile from a finer cell: drop 2 bits/level."""
-    if zoom > res:
-        raise ValueError("zoom must be <= cell resolution")
-    return F.shiftright(cell, 2 * (res - zoom))
-
-
 def tile_table(spark, zoom: int) -> DataFrame:
     """All 4^zoom tiles with bbox + GeoJSON boundary (built distributed)."""
     n = 1 << zoom

@@ -162,9 +162,6 @@ def ima_decode_block(block: bytes) -> np.ndarray:
 
 # ----------------------------------------------------------- RIFF plumbing
 
-_TAGS = {"ulaw": 7, "alaw": 6, "adpcm": 0x11}
-
-
 def encode_wav_ext(samples: np.ndarray, rate: int, fmt: str) -> bytes:
     """Mono WAVE with format tag 7/6/0x11 + fact chunk (true n_samples)."""
     samples = np.asarray(samples, dtype=np.int16)

@@ -124,16 +124,19 @@ def test_pipeline_from_xml_to_geojson(spark, parsed):
     assert doc["categories"]["osm"] == ["street", "highway:residential"]
 
 
-def test_xml_unescape_full_numeric_refs(spark):
-    """P3 full parity: decimal + hex numeric character references."""
-    from osm2geojson_spark.sources.osm_xml import xml_unescape_full
-
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [("Caf&#233; &amp; &#x42;ar &lt;3",), (None,)], ["v"])
-    got = [r["u"] for r in df.select(xml_unescape_full(F.col("v")).alias("u")).collect()]
-    assert got == ["Café & Bar <3", None]
+def test_node_tags_numeric_refs_unescaped(spark):
+    """P3 full parity with StringEscapeUtils.unescapeXml: decimal and
+    hex numeric character references in node tags decode like the
+    predefined entities; way tags stay literal."""
+    node = ('<node id="7" lat="1.0" lon="2.0">'
+            '<tag k="name" v="Caf&#233;&#10;"/>'
+            '<tag k="note" v="&#x42;ar &amp; &lt;3 &amp;#233;"/></node>')
+    way = '<way id="8"><nd ref="7"/><tag k="name" v="Caf&#233;"/></way>'
+    blobs = spark.createDataFrame([(node,), (way,)], ["blob"])
+    tabs = parse_osm_blobs(blobs)
+    tags = tabs["nodes"].collect()[0]["tags"]
+    assert tags == {"name": "Caf\u00e9\n", "note": "Bar & <3 &#233;"}
+    assert tabs["ways"].collect()[0]["tags"] == {"name": "Caf&#233;"}
 
 
 def test_bz2_stream_scan(spark, tmp_path):

@@ -21,28 +21,20 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "osm2geojson_spark")
 
 # Unpartitioned-window sites, each bounded by construction:
-#  - spatial/strpack.py + operators/shards.py: prefix-sum offsets over
-#    the BUCKET-SIZE table (O(#buckets) rows, the bucketed-global-rank
-#    substrate itself).
-#  - operators/stats.py: otsu_curve's cumulative walk over the value
-#    histogram (≤ 2^16 rows for any real bit depth) and
-#    exact_quantiles' walk over the bucket histogram (SELF-ENFORCED
-#    ≤ max_buckets by the auto-coarsening ladder), and the ks_2samp /
-#    mann_whitney_u / spearman_rho cumulative-CDF and midrank walks
-#    over the DISTINCT-VALUE histogram (same bound class), plus
-#    kendall_tau's equidepth block map, kruskal_wallis's midranks and
-#    gini_coefficient's ungrouped histogram walk, lorenz_curve's
-#    decile walk, and runs_test's sequence lag (documented: ONE global
-#    sequence by the test's nature; per-key callers partition upstream,
-#    the catalog entry feeds a bounded slice).
-#  - operators/graph.py: effective_diameter's cumulative walk over
-#    the pooled DISTANCE histogram (bounded-int edge weights ->
-#    metadata-sized).
+#  - spatial/strpack.py: prefix_sums, the one prefix-sum substrate. Its
+#    window runs over the BUCKET-TOTAL table when the caller passes a
+#    bucket (O(#buckets) rows: global_rank, pack_shards), and otherwise
+#    over a frame the caller bounds as histogram-sized: the stats walks
+#    over DISTINCT-VALUE histograms (exact_quantiles' bucket histogram
+#    is SELF-ENFORCED <= max_buckets by its coarsening ladder) and
+#    effective_diameter's pooled DISTANCE histogram.
+#  - operators/stats.py: runs_test's sequence lag, which is not a
+#    prefix sum (documented: ONE global sequence by the test's nature;
+#    per-key callers partition upstream, the catalog entry feeds a
+#    bounded slice).
 WINDOW_WHITELIST = {
-    "operators/graph.py": 1,
-    "operators/shards.py": 1,
-    "operators/stats.py": 12,
     "spatial/strpack.py": 1,
+    "operators/stats.py": 1,
 }
 
 # .collect() sites, each returning O(metadata)/O(1) results (broadcast
@@ -119,8 +111,8 @@ def test_no_new_unpartitioned_windows():
     assert got == WINDOW_WHITELIST, (
         "Window.orderBy WITHOUT partitionBy sites changed — an "
         "unpartitioned window is a single task; prove the new site's "
-        "input is O(metadata)-sized and whitelist it here, or rank via "
-        "spatial/strpack.global_rank instead.\n"
+        "input is O(metadata)-sized and whitelist it here, or sum via "
+        "spatial/strpack.prefix_sums instead.\n"
         f"found={got}\nwhitelist={WINDOW_WHITELIST}")
 
 

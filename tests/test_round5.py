@@ -919,6 +919,14 @@ class TestEffectiveDiameter:
         # k = ceil(2.5) = 3 -> distance 2 (median)
         assert (got["k"], got["eff_diam"]) == (3, 2)
 
+    def test_p_outside_unit_interval_rejected(self):
+        from osm2geojson_spark.operators.graph import effective_diameter
+
+        # rank k = 0 would match no histogram row
+        for p in (0, 1_000_001):
+            with pytest.raises(ValueError):
+                effective_diameter(None, [0], p_ppm=p)
+
 
 class TestMosaicPyramid:
     def test_level_structure(self, spark):

@@ -4,11 +4,13 @@ brute-force single-process STR."""
 from __future__ import annotations
 
 import math
+from itertools import accumulate
 
 import pytest
 from pyspark.sql import functions as F
 
-from osm2geojson_spark.spatial.strpack import global_rank, str_leaves, str_pack
+from osm2geojson_spark.spatial.strpack import (global_rank, prefix_sums,
+                                               str_leaves, str_pack)
 
 
 def _pts(n):
@@ -52,6 +54,39 @@ def test_global_rank_single_bucket_degenerate(pts_df):
     got = {r.id: r.rank
            for r in global_rank(pts_df, ["x", "id"], F.lit(0)).collect()}
     assert sorted(got.values()) == list(range(1, 501))
+
+
+def _sums_ref(rows):
+    # running count and running y in (x, id) order
+    by_key = sorted(rows, key=lambda r: (r[1], r[0]))
+    return dict(zip((r[0] for r in by_key),
+                    zip(accumulate(1 for _ in by_key),
+                        accumulate(r[2] for r in by_key))))
+
+
+def _sums(df, bucket=None):
+    out = prefix_sums(df, ["x", "id"], {"n": F.lit(1), "sy": "y"}, bucket)
+    return {r.id: (r.n, r.sy) for r in out.collect()}
+
+
+@pytest.mark.parametrize("bucket", [None, "x div 1000", "0"])
+def test_prefix_sums_match_accumulate(pts_df, bucket):
+    # unbucketed, bucketed, and one bucket holding every row
+    got = _sums(pts_df, None if bucket is None else F.expr(bucket))
+    assert got == _sums_ref(_pts(500))
+
+
+def test_prefix_sums_bucketed_equals_unbucketed(pts_df):
+    b = F.expr("x div 37")
+    assert _sums(pts_df, b) == _sums(pts_df)
+    cols = prefix_sums(pts_df, ["x", "id"], {"n": F.lit(1)}, b).columns
+    assert cols == ["id", "x", "y", "n"]
+
+
+def test_prefix_sums_empty_frame(pts_df):
+    empty = pts_df.where("id < 0")
+    assert _sums(empty) == {}
+    assert _sums(empty, F.expr("x div 1000")) == {}
 
 
 def test_str_pack_matches_reference(pts_df):
