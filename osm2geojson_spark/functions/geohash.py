@@ -12,10 +12,10 @@ identical plain-SQL twin for the DuckDB oracle.
 Interleave layout (precision p, 5p bits total, lon gets the extra bit
 when 5p is odd): writing bit positions from the LSB, lon bits land at
 even positions when 5p is odd and at odd positions when 5p is even —
-both reduce to one bit-spread per axis plus a shift, same magic-number
-spread as the Morton index but widened to 32-bit inputs (precision 12
-needs 30 lon bits; ids stay < 2^60, positive in signed 64-bit in both
-engines).
+both reduce to one bit-spread per axis plus a shift: the Morton index's
+own axis and spread helpers (``functions/cells``), whose 32-bit-input
+spread covers precision 12's 30 lon bits (ids stay < 2^60, positive in
+signed 64-bit in both engines).
 """
 
 from __future__ import annotations
@@ -23,17 +23,15 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osm2geojson_spark.functions.cells import (
+    _axis_expr,
+    _axis_sql,
+    _spread_expr,
+    _spread_sql,
+)
+
 ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 MAX_PRECISION = 12
-
-# 32-bit-input bit spread (Morton's _SPREAD plus the leading 16-shift)
-_SPREAD32 = [
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-]
 
 _ALPHA_ARR = None  # built lazily: module import must not need a session
 
@@ -42,18 +40,6 @@ def _bits(precision: int) -> tuple[int, int]:
     total = 5 * precision
     lon_bits = (total + 1) // 2
     return lon_bits, total - lon_bits
-
-
-def _axis_expr(coord: Column, lo: float, span: float, bits: int) -> Column:
-    n = 1 << bits
-    raw = F.floor((coord - F.lit(lo)) / F.lit(span) * F.lit(n)).cast("long")
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1))
-
-
-def _spread_expr(x: Column) -> Column:
-    for shift, mask in _SPREAD32:
-        x = F.shiftleft(x, shift).bitwiseOR(x).bitwiseAND(F.lit(mask))
-    return x
 
 
 def geohash_int_expr(lon: Column, lat: Column, precision: int) -> Column:
@@ -88,18 +74,6 @@ def geohash_expr(lon: Column, lat: Column, precision: int) -> Column:
 
 
 # ---------------------------------------------------------------- SQL twin
-def _axis_sql(coord: str, lo: float, span: float, bits: int) -> str:
-    n = 1 << bits
-    raw = f"CAST(floor((({coord}) - ({lo})) / {span} * {n}) AS BIGINT)"
-    return f"least(greatest({raw}, 0), {n - 1})"
-
-
-def _spread_sql(x: str) -> str:
-    for shift, mask in _SPREAD32:
-        x = f"((((({x}) << {shift}) | ({x}))) & {mask})"
-    return x
-
-
 def geohash_int_sql(lon: str, lat: str, precision: int) -> str:
     lon_bits, lat_bits = _bits(precision)
     ix = _axis_sql(lon, -180.0, 360.0, lon_bits)

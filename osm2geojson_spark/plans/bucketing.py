@@ -7,12 +7,15 @@ subsequent equi-join shuffle-free on both sides (SortMergeJoin with no
 Exchange): the shuffle is paid at write time, amortized over every
 downstream join — the Spark-native analogue of the reference keeping
 every intermediate file pre-sorted by its join key
-(SortingWriter.java:25-28).
+(SortingWriter.java:25-28). Two such tables join with a plain
+``spark.table(l).join(spark.table(r), key)``: the planner emits a
+SortMergeJoin with NO Exchange on either side (asserted in
+tests/test_plans.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -32,11 +35,3 @@ def write_bucketed(
         w = w.sortBy(key)
     w.saveAsTable(table)
 
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str,
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — planner emits
-    SortMergeJoin with NO Exchange on either side (asserted in
-    tests/test_plans.py)."""
-    return spark.table(left_table).join(spark.table(right_table), key)

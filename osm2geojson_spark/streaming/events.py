@@ -11,6 +11,13 @@ The streaming ops are the incremental twins of the batch catalog:
 - :func:`stream_events_from_parquet` — replays the events parquet as a
   file-source stream for tests (Trigger.AvailableNow ⇒ bounded runs).
 
+It also holds the substrate every ``streaming/*`` twin starts from:
+:func:`file_stream` (the one file-drop reader), :func:`run_available_now`
+(the one bounded launcher), :func:`upsert_latest` (the last-write-wins
+merge of the route and raster twins) and :func:`versioned_batches`
+(``batch_id``-versioned state, one parquet version per micro-batch, for
+the mosaic and shot-dedup twins).
+
 At scale: the same code runs against Kafka by swapping the reader; state
 store size is bounded by (users × open sessions) for sessionize and
 (watermark horizon / window) for the windowed agg.
@@ -18,13 +25,105 @@ store size is bounded by (users × open sessions) for sessionize and
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+import glob
+import os
+from collections.abc import Callable, Iterator
+from urllib.parse import urlparse
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
+
+from osm2geojson_spark.session import owned
+
+
+def file_stream(spark: SparkSession, path: str, schema: StructType | str,
+                max_files_per_trigger: int) -> DataFrame:
+    """File-drop source: a parquet directory read as a stream, each
+    micro-batch picking up at most ``max_files_per_trigger`` newly
+    landed files (in modification-time order)."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(path))
+
+
+def run_available_now(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` under Trigger.AvailableNow and wait for it: the
+    query drains every file present at start, then stops (the bounded
+    test and catch-up form; a continuous deployment drops the trigger)."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def upsert_latest(table: DataFrame, batch: DataFrame, keys: list[str],
+                  cols: list[Column]) -> tuple[DataFrame, DataFrame]:
+    """Last-write-wins upsert of one micro-batch into a cached table.
+    The batch is projected to ``cols`` and deduped per ``keys``, keeping
+    the row with the highest ``seq`` (a batch without ``seq`` keeps any
+    one); those rows then replace the table's rows with the same keys.
+    Returns ``(upserts, merged table)``, both eagerly local-checkpointed
+    so the next micro-batch starts from materialized state."""
+    seq = F.col("seq") if "seq" in batch.columns else F.lit(0)
+    ups = (
+        batch.select(*cols, seq.cast("long").alias("_seq"))
+        .withColumn("_r", F.row_number().over(
+            Window.partitionBy(*keys).orderBy(F.desc("_seq"))))
+        .where(F.col("_r") == 1)
+        .drop("_r", "_seq")
+        .localCheckpoint(eager=True)
+    )
+    merged = (table.join(ups.select(*keys), keys, "left_anti")
+              .unionByName(ups)
+              .localCheckpoint(eager=True))
+    return ups, merged
+
+
+def _local_dir(state_dir: str) -> str:
+    """``state_dir`` as a local path. State versions are found with a
+    local ``glob``, which sees nothing on a remote store, so a non-local
+    ``state_dir`` (s3a://, hdfs://) raises instead of silently
+    restarting the state from v=0."""
+    u = urlparse(state_dir)
+    if u.scheme not in ("", "file"):
+        raise ValueError(
+            f"state_dir must be a local path, got {state_dir!r}")
+    return u.path if u.scheme else state_dir
+
+
+def state_versions(state_dir: str) -> list[int]:
+    """The ``v=N`` state versions under ``state_dir``, ascending."""
+    return sorted(int(p.rsplit("=", 1)[1])
+                  for p in glob.glob(f"{_local_dir(state_dir)}/v=*"))
+
+
+def versioned_batches(
+    state_dir: str,
+    body: Callable[[DataFrame, int, list[str]], None],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch handler for state kept as one parquet version per
+    micro-batch, ``state_dir/v={batch_id}``. Batch ``b`` calls
+    ``body(batch_df, b, below)``, where ``below`` lists the paths of the
+    versions under ``b``, oldest first; ``body`` writes ``v=b`` last
+    (overwrite), never an older version. A replayed ``batch_id`` whose
+    version is already committed does nothing, so a restart that
+    re-delivers a batch counts it once. ``body`` runs inside ``owned``:
+    what it persists is released when it returns. ``state_dir`` must be
+    local; a remote one raises here, before any stream starts."""
+    local = _local_dir(state_dir)
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.exists(f"{local}/v={batch_id}/_SUCCESS"):
+            return  # a replay of a batch whose state is committed
+        below = [f"{state_dir}/v={v}" for v in state_versions(state_dir)
+                 if v < batch_id]
+        with owned(batch_df.sparkSession):
+            body(batch_df, batch_id, below)
+
+    return handle
 
 
 def stream_events_from_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,12 +144,7 @@ def stream_events_from_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.makedirs(path, exist_ok=True)
             shutil.copy(src, os.path.join(path, "part-0.parquet"))
 
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = file_stream(spark, path, spark.read.parquet(src).schema, 1)
     # parquet stores TIMESTAMP_NTZ; watermarks need TIMESTAMP (session UTC
     # → identical wall time)
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -153,9 +247,9 @@ def dedup_stream(events: DataFrame, keys: list[str],
 def run_stream_to_memory(stream_df: DataFrame, name: str,
                          output_mode: str = "complete") -> None:
     """Bounded test helper: availableNow trigger → memory sink → await."""
-    q = (stream_df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    q.awaitTermination()
+    run_available_now(stream_df.writeStream.format("memory")
+                      .queryName(name).outputMode(output_mode))
+
 
 _GEOFENCE_STATE_SCHEMA = "last_zone long"
 _GEOFENCE_OUT_SCHEMA = ("user_id long, sec long, event_id long, "
@@ -323,9 +417,8 @@ def mvt_stream_to_memory(pixel_counts_stream: DataFrame, name: str,
         out = render_mvt_tiles(bdf, extent=extent).localCheckpoint(eager=True)
         out.createOrReplaceGlobalTempView(name)
 
-    q = (pixel_counts_stream.writeStream.foreachBatch(handle)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    q.awaitTermination()
+    run_available_now(pixel_counts_stream.writeStream.foreachBatch(handle)
+                      .outputMode(output_mode))
 
 
 # ------------------------------------------------------- stream-stream join

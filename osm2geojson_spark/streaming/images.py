@@ -6,9 +6,9 @@ near-dup suppression runs incrementally with watermark-bounded state.
 
 Design notes (100 TB/day ingest):
 
-- ``validate_stream`` reuses ``operators/images.validate_images``
-  verbatim — mapInPandas is stream-capable, so batch/stream parity is
-  by construction (and pinned by test_streaming_images).
+- Decode/validate is ``operators/images.validate_images`` applied to
+  the stream itself — mapInPandas is stream-capable, so batch/stream
+  parity is by construction (and pinned by test_streaming_images).
 - ``phash_dedup_stream`` uses ``dropDuplicatesWithinWatermark`` on the
   recomputed phash: state is bounded by the watermark horizon (phashes
   seen in the last N hours), not phashes ever seen — the difference
@@ -19,27 +19,14 @@ Design notes (100 TB/day ingest):
 
 from __future__ import annotations
 
-import glob
-import os
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm2geojson_spark.operators.images import validate_images
-from osm2geojson_spark.synth.images import IMG_SCHEMA
-
-
-def stream_images_from_parquet(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 2
-) -> DataFrame:
-    """File-drop source: each micro-batch picks up at most
-    ``max_files_per_trigger`` newly-landed parquet files."""
-    return (
-        spark.readStream.schema(IMG_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+from osm2geojson_spark.streaming.events import (
+    run_available_now,
+    state_versions,
+    versioned_batches,
+)
 
 
 def with_ingest_ts(imgs: DataFrame) -> DataFrame:
@@ -50,12 +37,6 @@ def with_ingest_ts(imgs: DataFrame) -> DataFrame:
         "ingest_ts",
         F.timestamp_seconds(F.lit(1_700_000_000) + seed % 7200),
     )
-
-
-def validate_stream(imgs: DataFrame) -> DataFrame:
-    """Streaming decode/validate — the batch operator applied per
-    micro-batch (same Arrow kernel, same quarantine columns)."""
-    return validate_images(imgs)
 
 
 def phash_dedup_stream(
@@ -73,24 +54,6 @@ def phash_dedup_stream(
     )
 
 
-def _local_dir(state_dir: str) -> str:
-    """``state_dir`` as a local path. State versions are found with a
-    local ``glob``, which sees nothing on a remote store, so a non-local
-    ``state_dir`` (s3a://, hdfs://) raises instead of silently
-    restarting the state from v=0."""
-    u = urlparse(state_dir)
-    if u.scheme not in ("", "file"):
-        raise ValueError(
-            f"mosaic state_dir must be a local path, got {state_dir!r}")
-    return u.path if u.scheme else state_dir
-
-
-def _state_versions(state_dir: str) -> list[int]:
-    """The ``v=N`` state versions under ``state_dir``."""
-    return [int(p.rsplit("=", 1)[1])
-            for p in glob.glob(f"{_local_dir(state_dir)}/v=*")]
-
-
 def mosaic_stream(
     spark: SparkSession, imgs: DataFrame, state_dir: str,
     world_px: int = 1024, tile: int = 128, thumb: int = 16,
@@ -100,10 +63,9 @@ def mosaic_stream(
     micro-batch's thumbnails become per-tile PARTIAL state
     ``(tx, ty, n_contrib, acc array<long>, cnt array<long>)`` — the
     associative half of the batch kernel — merged element-wise with
-    the accumulated store (versioned parquet per batch: batch ``b``
-    reads the newest version below ``b`` and writes ``v=b``, never in
-    place). A replayed ``batch_id`` whose version is already committed
-    does nothing, so a restart that re-delivers a batch counts it once.
+    the accumulated store (``versioned_batches``: batch ``b`` reads the
+    newest version below ``b`` and writes ``v=b``, never in place; a
+    replayed ``batch_id`` whose version is committed does nothing).
     ``mosaic_from_state`` renders the same ``(tx, ty, n_contrib, w_px,
     h_px, md5)`` rows as the batch ``geo_mosaic`` — associativity of
     (sum, count) makes stream-after-N-drops == batch-over-all, which
@@ -116,7 +78,6 @@ def mosaic_stream(
     from osm2geojson_spark.operators.images import mosaic_contribs
 
     t, s = int(tile), int(thumb)
-    local = _local_dir(state_dir)  # a non-local dir fails before the stream
 
     def accum(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
@@ -152,28 +113,21 @@ def mosaic_stream(
               [int(v) for v in acc], [int(v) for v in cnt])],
             columns=["tx", "ty", "n_contrib", "acc", "cnt"])
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(f"{local}/v={batch_id}/_SUCCESS"):
-            return  # a replay of a batch whose state is committed
+    def process(batch_df: DataFrame, batch_id: int, below: list[str]) -> None:
         partial = (mosaic_contribs(batch_df, int(world_px), t, s)
                    .groupBy("tx", "ty")
                    .applyInPandas(accum, state_schema))
-        prev = max((v for v in _state_versions(state_dir) if v < batch_id),
-                   default=-1)
-        if prev >= 0:
-            old = spark.read.parquet(f"{state_dir}/v={prev}")
-            partial = old.unionByName(partial)
+        if below:
+            partial = spark.read.parquet(below[-1]).unionByName(partial)
         merged = (partial.groupBy("tx", "ty")
                   .applyInPandas(merge, state_schema))
         merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
 
-    q = (imgs.writeStream.foreachBatch(process)
-         .queryName(queryName)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", f"{state_dir}/_chk")
-         .start())
-    q.awaitTermination()
-    return q
+    # a non-local state_dir fails in versioned_batches, before the stream
+    return run_available_now(
+        imgs.writeStream.foreachBatch(versioned_batches(state_dir, process))
+        .queryName(queryName)
+        .option("checkpointLocation", f"{state_dir}/_chk"))
 
 
 def mosaic_from_state(spark: SparkSession, state_dir: str,
@@ -189,7 +143,7 @@ def mosaic_from_state(spark: SparkSession, state_dir: str,
     from osm2geojson_spark.synth.images import encode_ppm
 
     t = int(tile)
-    vs = _state_versions(state_dir)
+    vs = state_versions(state_dir)
     if not vs:
         raise ValueError("no mosaic state written yet")
     state = spark.read.parquet(f"{state_dir}/v={max(vs)}")

@@ -7,14 +7,14 @@ The incremental insight is the halo-exchange locality itself: a 3×3
 kernel means an updated tile can only change the output of ITSELF and
 its 8 neighbors. So each micro-batch
 
-1. last-write-wins dedups the batch's tile upserts,
-2. merges them into the cached tile table (anti-join + union — the
-   routing twin's edge-merge shape),
-3. marks the DIRTY set = updated tiles ∪ their 8 neighbors,
-4. re-runs the focal op over dirty ∪ THEIR neighbors (the donor ring —
+1. last-write-wins dedups the batch's tile upserts and merges them
+   into the cached tile table (``events.upsert_latest``, the routing
+   twin's edge merge),
+2. marks the DIRTY set = updated tiles ∪ their 8 neighbors,
+3. re-runs the focal op over dirty ∪ THEIR neighbors (the donor ring —
    dirty tiles still need clean neighbors' strips) and keeps only the
    dirty outputs,
-5. publishes old-minus-dirty ∪ recomputed as a global temp view.
+4. publishes old-minus-dirty ∪ recomputed as a global temp view.
 
 Re-render cost per batch is O(9 · updated tiles), never O(raster) —
 pinned by the stats dict and by the stream == cold-batch test.
@@ -25,23 +25,17 @@ DataFrames across batches — bounded by the raster size, no driver rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.spatial.focal import focal_op
+from osm2geojson_spark.streaming.events import run_available_now, upsert_latest
 
-__all__ = ["tile_updates_stream", "focal_stream_to_memory"]
+__all__ = ["TILE_UPDATES_SCHEMA", "focal_stream_to_memory"]
 
-
-def tile_updates_stream(spark, path: str) -> DataFrame:
-    """File-source stream of DEM tile upserts: one parquet file per
-    micro-batch, schema (tx, ty, data array<long>, seq)."""
-    schema = "tx long, ty long, data array<long>, seq long"
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+# DEM tile upserts as file drops (``events.file_stream``); ``seq`` orders
+# the upserts of one tile within a batch, last write wins
+TILE_UPDATES_SCHEMA = "tx long, ty long, data array<long>, seq long"
 
 
 def _neighbors(tiles: DataFrame) -> DataFrame:
@@ -87,23 +81,10 @@ def focal_stream_to_memory(
     publish()
 
     def handle(bdf: DataFrame, batch_id: int) -> None:
-        seq = (F.col("seq") if "seq" in bdf.columns else F.lit(0))
-        ups = (
-            bdf.select(
-                F.col("tx").cast("long").alias("tx"),
-                F.col("ty").cast("long").alias("ty"),
-                F.col("data"), seq.cast("long").alias("_seq"))
-            .withColumn("_r", F.row_number().over(
-                Window.partitionBy("tx", "ty").orderBy(F.desc("_seq"))))
-            .where(F.col("_r") == 1).drop("_r", "_seq")
-            .localCheckpoint(eager=True)
-        )
-        tiles = (
-            state["tiles"]
-            .join(ups.select("tx", "ty"), ["tx", "ty"], "left_anti")
-            .unionByName(ups)
-            .localCheckpoint(eager=True)
-        )
+        ups, tiles = upsert_latest(
+            state["tiles"], bdf, ["tx", "ty"],
+            [F.col("tx").cast("long").alias("tx"),
+             F.col("ty").cast("long").alias("ty"), F.col("data")])
         state["tiles"] = tiles
         # dirty = updated ∪ 8-neighbors (intersected with live tiles);
         # donors = dirty ∪ THEIR neighbors — the strips dirty renders need
@@ -125,6 +106,4 @@ def focal_stream_to_memory(
             stats["tiles_total"] += tiles.count()
         publish()
 
-    q = (updates.writeStream.foreachBatch(handle)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    run_available_now(updates.writeStream.foreachBatch(handle))

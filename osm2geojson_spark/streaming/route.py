@@ -22,7 +22,7 @@ never driver-side rows. Each batch publishes global temp views:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.spatial.route import (
@@ -33,25 +33,17 @@ from osm2geojson_spark.spatial.route import (
     sssp_update,
     travel_time_matrix,
 )
+from osm2geojson_spark.streaming.events import run_available_now, upsert_latest
 
 __all__ = [
-    "edge_updates_stream",
+    "EDGE_UPDATES_SCHEMA",
     "sssp_stream_to_memory",
     "catchment_stream_to_memory",
 ]
 
-
-def edge_updates_stream(spark, path: str) -> DataFrame:
-    """File-source stream of edge upserts: one parquet file per
-    micro-batch (maxFilesPerTrigger=1), schema (src, dst, w, seq) —
-    ``seq`` orders the files deterministically for tests (the file
-    source processes by modification time; writers set mtimes)."""
-    schema = "src long, dst long, w long, seq long"
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+# edge upserts as file drops (``events.file_stream``); ``seq`` orders the
+# upserts of one (src, dst) within a batch, last write wins
+EDGE_UPDATES_SCHEMA = "src long, dst long, w long, seq long"
 
 
 def _run_route_stream(
@@ -81,24 +73,12 @@ def _run_route_stream(
     publish_fn(state["dist"])
 
     def handle(bdf: DataFrame, batch_id: int) -> None:
-        seq = (F.col("seq") if "seq" in bdf.columns else F.lit(0))
-        ups = (
-            bdf.select(
-                F.col("src").cast("long").alias("src"),
-                F.col("dst").cast("long").alias("dst"),
-                F.col("w").cast("long").alias("w"),
-                seq.cast("long").alias("_seq"),
-            )
-            # last write wins inside one batch — upserts ordered by seq
-            .withColumn("_r", F.row_number().over(
-                Window.partitionBy("src", "dst").orderBy(F.desc("_seq"))))
-            .where(F.col("_r") == 1)
-            .drop("_r", "_seq")
-            .localCheckpoint(eager=True)
-        )
+        old = state["edges"]
+        ups, new_edges = upsert_latest(
+            old, bdf, ["src", "dst"],
+            [F.col(c).cast("long").alias(c) for c in ("src", "dst", "w")])
         if ups.where(F.col("w") < 0).limit(1).count() > 0:
             raise ValueError("edge updates require non-negative weights")
-        old = state["edges"]
         keyed_old = old.select(
             F.col("src").alias("o_src"), F.col("dst").alias("o_dst"),
             F.col("w").alias("o_w"))
@@ -111,11 +91,6 @@ def _run_route_stream(
         worsened = joined.where(
             F.col("o_w").isNotNull() & (F.col("w") > F.col("o_w"))
         ).limit(1).count()
-        new_edges = (
-            old.join(ups.select("src", "dst"), ["src", "dst"], "left_anti")
-            .unionByName(ups)
-            .localCheckpoint(eager=True)
-        )
         state["edges"] = new_edges
         state["batches"] += 1
         if worsened:
@@ -130,9 +105,7 @@ def _run_route_stream(
         state["dist"] = state["dist"].localCheckpoint(eager=True)
         publish_fn(state["dist"])
 
-    q = (updates.writeStream.foreachBatch(handle)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    run_available_now(updates.writeStream.foreachBatch(handle))
     if stats is not None:
         stats.update(batches=state["batches"],
                      incremental=state["incremental"], cold=state["cold"])

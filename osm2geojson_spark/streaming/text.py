@@ -21,21 +21,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 POSTINGS_SCHEMA = ("term string, doc_id long, tf long, "
                    "positions array<long>")
-
-
-def stream_docs_from_parquet(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 2
-) -> DataFrame:
-    """File-drop source over the documents table schema."""
-    schema = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path))
+# the documents table, landing as file drops (``events.file_stream``)
+DOCS_SCHEMA = ("doc_id long, text string, lang string, source string, "
+               "n_chars long")
 
 
 def doc_postings(docs: DataFrame) -> DataFrame:
@@ -62,12 +54,3 @@ def doc_postings(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return docs.select("doc_id", "text").mapInPandas(run, POSTINGS_SCHEMA)
-
-
-def postings_stream_to_memory(docs_stream: DataFrame, name: str) -> None:
-    """Drain the postings stream into an in-memory table (test path) —
-    append mode (no state, no watermark needed), availableNow."""
-    q = (doc_postings(docs_stream).writeStream
-         .format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()

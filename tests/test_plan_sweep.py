@@ -61,6 +61,12 @@ COLLECT_WHITELIST = {
 _WIN = re.compile(r"Window\s*\.\s*orderBy\s*\(")
 _PARTED = re.compile(r"Window\s*\.\s*partitionBy\s*\(")
 _COLLECT = re.compile(r"\.\s*collect\s*\(\s*\)")
+# The streaming substrate: every streaming twin reads its file drops
+# through events.file_stream and launches its bounded run through
+# events.run_available_now, so each call appears exactly once.
+STREAM_SUBSTRATE = {"streaming/events.py": 1}
+_READ_STREAM = re.compile(r"\.\s*readStream\b")
+_AVAILABLE_NOW = re.compile(r"trigger\s*\(\s*availableNow\s*=\s*True\s*\)")
 
 
 def _py_files():
@@ -133,3 +139,13 @@ def test_collect_sites_whitelisted():
         "O(metadata), never row data; audit the new site and update "
         "the whitelist with its bound.\n"
         f"found={got}\nwhitelist={COLLECT_WHITELIST}")
+
+
+def test_streams_start_in_one_substrate():
+    for pattern, helper in ((_READ_STREAM, "file_stream"),
+                            (_AVAILABLE_NOW, "run_available_now")):
+        got = _counts(pattern)
+        assert got == STREAM_SUBSTRATE, (
+            f"{pattern.pattern} outside the streaming substrate — read "
+            f"and launch through streaming/events.{helper}.\n"
+            f"found={got}\nwhitelist={STREAM_SUBSTRATE}")

@@ -101,7 +101,7 @@ def test_knn_topk_uses_single_window_per_round(spark):
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Co-located bucketed tables join WITHOUT a shuffle on either side
     (the write-once-join-many layout for 100 TB fact tables)."""
-    from osm2geojson_spark.plans.bucketing import bucketed_join, write_bucketed
+    from osm2geojson_spark.plans.bucketing import write_bucketed
 
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -112,7 +112,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         # the test tables are broadcast-small; disable broadcast to
         # exercise the large-large path bucketing exists for
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "b_lineitem", "b_orders", "k")
+        joined = spark.table("b_lineitem").join(spark.table("b_orders"), "k")
         plan = plan_of(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan          # co-located: zero shuffle

@@ -11,14 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.operators.images import validate_images
-from osm2geojson_spark.streaming.events import run_stream_to_memory
+from osm2geojson_spark.streaming.events import file_stream, run_stream_to_memory
 from osm2geojson_spark.streaming.images import (
     phash_dedup_stream,
-    stream_images_from_parquet,
-    validate_stream,
     with_ingest_ts,
 )
-from osm2geojson_spark.synth.images import FMTS_JPEG, images_table
+from osm2geojson_spark.synth.images import FMTS_JPEG, IMG_SCHEMA, images_table
 
 
 @pytest.fixture(scope="module")
@@ -32,7 +30,7 @@ def img_dir(spark, tmp_path_factory):
 
 
 def test_validate_stream_equals_batch(spark, img_dir):
-    stream = validate_stream(stream_images_from_parquet(spark, img_dir))
+    stream = validate_images(file_stream(spark, img_dir, IMG_SCHEMA, 2))
     run_stream_to_memory(stream, "val_stream", output_mode="append")
     got = {r["image_id"]: r for r in spark.table("val_stream").collect()}
     want = {r["image_id"]: r
@@ -55,7 +53,7 @@ def test_phash_dedup_stream_equals_batch_first_seen(spark, img_dir):
     d2 = img_dir + "_withdupes"
     base.unionAll(dupes).repartition(5).write.parquet(d2)
 
-    stream = phash_dedup_stream(stream_images_from_parquet(spark, d2))
+    stream = phash_dedup_stream(file_stream(spark, d2, IMG_SCHEMA, 2))
     run_stream_to_memory(stream, "dedup_stream", output_mode="append")
     got = spark.table("dedup_stream")
 
@@ -98,7 +96,7 @@ def _run_mosaic_stream(spark, img_dir, state):
     from osm2geojson_spark.streaming.images import mosaic_stream
 
     mosaic_stream(
-        spark, stream_images_from_parquet(spark, img_dir), state,
+        spark, file_stream(spark, img_dir, IMG_SCHEMA, 2), state,
         world_px=1024, tile=128, thumb=16)
 
 
@@ -137,7 +135,7 @@ def test_mosaic_state_dir_must_be_local(spark, img_dir):
 
     remote = "s3a://bucket/mosaic_state"
     with pytest.raises(ValueError, match="local path"):
-        mosaic_stream(spark, stream_images_from_parquet(spark, img_dir),
+        mosaic_stream(spark, file_stream(spark, img_dir, IMG_SCHEMA, 2),
                       remote, queryName="mosaic_remote")
     assert all(q.name != "mosaic_remote" for q in spark.streams.active)
     with pytest.raises(ValueError, match="local path"):
@@ -145,9 +143,9 @@ def test_mosaic_state_dir_must_be_local(spark, img_dir):
 
 
 def test_mosaic_state_versions_read_file_uri(tmp_path):
-    from osm2geojson_spark.streaming.images import _state_versions
+    from osm2geojson_spark.streaming.events import state_versions
 
     for v in (0, 3):
         (tmp_path / f"v={v}").mkdir()
-    assert sorted(_state_versions(str(tmp_path))) == [0, 3]
-    assert sorted(_state_versions(tmp_path.as_uri())) == [0, 3]
+    assert sorted(state_versions(str(tmp_path))) == [0, 3]
+    assert sorted(state_versions(tmp_path.as_uri())) == [0, 3]

@@ -12,9 +12,10 @@ from osm2geojson_spark.spatial.focal import (
     focal_op,
     synth_dem_tiles,
 )
+from osm2geojson_spark.streaming.events import file_stream
 from osm2geojson_spark.streaming.raster import (
+    TILE_UPDATES_SCHEMA,
     focal_stream_to_memory,
-    tile_updates_stream,
 )
 
 T, TX, TY = 16, 4, 3
@@ -45,7 +46,7 @@ def test_stream_equals_cold_batch(spark, tmp_path, op):
 
     stats: dict = {}
     focal_stream_to_memory(
-        spark, tile_updates_stream(spark, path), base,
+        spark, file_stream(spark, path, TILE_UPDATES_SCHEMA, 1), base,
         name=f"focal_{op}", op=op, tile_size=T, stats=stats)
 
     got = {(r["tx"], r["ty"]): tuple(r["data"]) for r in
@@ -80,7 +81,7 @@ def test_new_tile_extends_the_grid(spark, tmp_path):
     _write_batch(spark, path, 1, [(2, 0, ramp)])  # extends 2x1 -> 3x1
 
     focal_stream_to_memory(
-        spark, tile_updates_stream(spark, path), base,
+        spark, file_stream(spark, path, TILE_UPDATES_SCHEMA, 1), base,
         name="focal_grow", op="sum3", tile_size=T)
     got = {(r["tx"], r["ty"]): tuple(r["data"]) for r in
            spark.table("global_temp.focal_grow").collect()}

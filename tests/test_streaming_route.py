@@ -17,8 +17,9 @@ from osm2geojson_spark.spatial.route import (
     shortest_paths,
     sssp_update,
 )
+from osm2geojson_spark.streaming.events import file_stream
 from osm2geojson_spark.streaming.route import (
-    edge_updates_stream,
+    EDGE_UPDATES_SCHEMA,
     sssp_stream_to_memory,
 )
 
@@ -71,7 +72,7 @@ def test_sssp_stream_incremental_batch(spark, tmp_path):
     _write_batch(d, "b0.parquet", B1, 1_700_000_000)
     stats = {}
     sssp_stream_to_memory(
-        edge_updates_stream(spark, d), grid_edges(spark, N), 0,
+        file_stream(spark, d, EDGE_UPDATES_SCHEMA, 1), grid_edges(spark, N), 0,
         "sssp_inc", stats=stats)
     assert stats == {"batches": 1, "incremental": 1, "cold": 0}
     got = sorted(
@@ -97,7 +98,7 @@ def test_sssp_stream_cold_fallback_on_increase(spark, tmp_path):
     _write_batch(d, "b1.parquet", B2, 1_700_000_100)
     stats = {}
     sssp_stream_to_memory(
-        edge_updates_stream(spark, d), grid_edges(spark, N), 0,
+        file_stream(spark, d, EDGE_UPDATES_SCHEMA, 1), grid_edges(spark, N), 0,
         "sssp_cold", stats=stats)
     assert stats == {"batches": 2, "incremental": 1, "cold": 1}
     got = sorted(
@@ -115,7 +116,7 @@ def test_sssp_stream_rejects_negative_weight(spark, tmp_path):
 
     with pytest.raises((ValueError, StreamingQueryException)):
         sssp_stream_to_memory(
-            edge_updates_stream(spark, d), grid_edges(spark, N), 0,
+            file_stream(spark, d, EDGE_UPDATES_SCHEMA, 1), grid_edges(spark, N), 0,
             "sssp_neg")
 
 
@@ -129,7 +130,7 @@ def test_catchment_stream_matches_batch(spark, tmp_path):
     depots = [0, N * N - 1]
     stats = {}
     catchment_stream_to_memory(
-        edge_updates_stream(spark, d), grid_edges(spark, N), depots,
+        file_stream(spark, d, EDGE_UPDATES_SCHEMA, 1), grid_edges(spark, N), depots,
         "catch_inc", stats=stats)
     assert stats == {"batches": 1, "incremental": 1, "cold": 0}
     merged = _apply_upserts(pyref.grid_graph(N), B1)

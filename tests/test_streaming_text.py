@@ -7,11 +7,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from osm2geojson_spark.streaming.text import (
-    doc_postings,
-    postings_stream_to_memory,
-    stream_docs_from_parquet,
-)
+from osm2geojson_spark.streaming.events import file_stream, run_stream_to_memory
+from osm2geojson_spark.streaming.text import DOCS_SCHEMA, doc_postings
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,9 +39,8 @@ def test_doc_postings_matches_explode_groupby(spark, docs):
 def test_stream_equals_batch(spark, tmp_path, docs):
     # land the corpus as several file drops
     docs.repartition(4).write.parquet(str(tmp_path / "drops"))
-    stream = stream_docs_from_parquet(spark, str(tmp_path / "drops"),
-                                      max_files_per_trigger=1)
-    postings_stream_to_memory(stream, "postings_sink")
+    stream = file_stream(spark, str(tmp_path / "drops"), DOCS_SCHEMA, 1)
+    run_stream_to_memory(doc_postings(stream), "postings_sink", "append")
     got = spark.table("postings_sink").collect()
     assert _norm(got) == _norm(doc_postings(docs).collect())
 
