@@ -26,9 +26,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm2geojson_spark.session import persist
-
 __all__ = ["distance_transform", "distance_transform_update"]
+
+
+def _grid4_edges(cells: DataFrame, w_px: int, h_px: int, k: int,
+                 name: str) -> DataFrame:
+    """4-neighbour edges ``(src, dst, w = k)`` out of ``cells`` ``(cell,
+    x, y)`` through the route edge prologue (errors named for ``name``):
+    one step costs ``k`` in the encoded label."""
+    from osm2geojson_spark.spatial.route import _edges
+
+    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+                     for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))])
+    return _edges(
+        cells.select("cell", "x", "y", F.explode(offs).alias("o"))
+        .withColumn("nx", F.col("x") + F.col("o.dx"))
+        .withColumn("ny", F.col("y") + F.col("o.dy"))
+        .where((F.col("nx") >= 0) & (F.col("nx") < w_px)
+               & (F.col("ny") >= 0) & (F.col("ny") < h_px))
+        .select(F.col("cell").alias("src"),
+                (F.col("ny") * w_px + F.col("nx")).alias("dst"),
+                F.lit(k).cast("long").alias("w")), name)
+
+
+def _decode(enc: DataFrame, w_px: int, k: int) -> DataFrame:
+    """Encoded labels ``(id, dist·K + src)`` → ``(x, y, dist, nearest)``."""
+    return enc.select(
+        (F.col("id") % w_px).alias("x"),
+        F.expr(f"id div {w_px}").alias("y"),
+        F.expr(f"dist div {k}").alias("dist"),
+        (F.col("dist") % k).alias("nearest"))
 
 
 def distance_transform(mask_tiles: DataFrame, tile_size: int,
@@ -52,39 +79,17 @@ def distance_transform(mask_tiles: DataFrame, tile_size: int,
             F.col("fg").cast("long").alias("fg"))
         .withColumn("cell", F.col("y") * w_px + F.col("x")))
 
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))])
-    e = persist(
-        cells.select("cell", "x", "y", F.explode(offs).alias("o"))
-        .withColumn("nx", F.col("x") + F.col("o.dx"))
-        .withColumn("ny", F.col("y") + F.col("o.dy"))
-        .where((F.col("nx") >= 0) & (F.col("nx") < w_px)
-               & (F.col("ny") >= 0) & (F.col("ny") < h_px))
-        .select(F.col("cell").alias("src"),
-                (F.col("ny") * w_px + F.col("nx")).alias("dst"),
-                F.lit(k).cast("long").alias("w"))
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src"))
-
     seeds = (cells.where(F.col("fg") == 1)
              .select(F.col("cell").alias("id"),
                      F.col("cell").alias("dist"))
              .localCheckpoint(eager=True))
     if seeds.limit(1).count() == 0:
-        e.unpersist()
         raise ValueError("distance_transform needs >= 1 foreground cell")
 
-    enc, rounds, changed = _frontier_relax(e, seeds, seeds, max_iters)
-    e.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"distance_transform did not converge in {max_iters} rounds;"
-            " raise max_iters (rounds needed = max L1 distance)")
-    return enc.select(
-        (F.col("id") % w_px).alias("x"),
-        F.expr(f"id div {w_px}").alias("y"),
-        F.expr(f"dist div {k}").alias("dist"),
-        (F.col("dist") % k).alias("nearest"))
+    e = _grid4_edges(cells, w_px, h_px, k, "distance_transform")
+    return _decode(_frontier_relax(
+        e, seeds, ("id",), max_iters, "distance_transform",
+        hint=" (rounds needed = max L1 distance)"), w_px, k)
 
 
 def distance_transform_update(dist: DataFrame, new_cells: DataFrame,
@@ -105,7 +110,6 @@ def distance_transform_update(dist: DataFrame, new_cells: DataFrame,
 
     w_px, h_px = int(width), int(height)
     k = w_px * h_px
-    spark = dist.sparkSession
 
     enc0 = dist.select(
         (F.col("y") * w_px + F.col("x")).alias("id"),
@@ -113,44 +117,10 @@ def distance_transform_update(dist: DataFrame, new_cells: DataFrame,
     seeds = new_cells.select(
         (F.col("y") * w_px + F.col("x")).alias("id"),
         (F.col("y") * w_px + F.col("x")).alias("nd"))
-    merged = (
-        enc0.join(seeds, "id", "full")
-        .select(
-            "id",
-            F.least(F.coalesce("dist", "nd"),
-                    F.coalesce("nd", "dist")).alias("dist"),
-            (F.col("dist").isNull()
-             | (F.col("nd") < F.col("dist"))).alias("_imp"))
-        .localCheckpoint(eager=True))
-    frontier = merged.where("_imp").select("id", "dist")
-
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"),
-                              F.lit(dy).alias("dy"))
-                     for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))])
-    e = persist(
-        spark.range(w_px * h_px)
-        .select(F.col("id").alias("cell"),
-                (F.col("id") % w_px).alias("x"),
-                F.expr(f"id div {w_px}").alias("y"),
-                F.explode(offs).alias("o"))
-        .withColumn("nx", F.col("x") + F.col("o.dx"))
-        .withColumn("ny", F.col("y") + F.col("o.dy"))
-        .where((F.col("nx") >= 0) & (F.col("nx") < w_px)
-               & (F.col("ny") >= 0) & (F.col("ny") < h_px))
-        .select(F.col("cell").alias("src"),
-                (F.col("ny") * w_px + F.col("nx")).alias("dst"),
-                F.lit(k).cast("long").alias("w"))
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src"))
-    enc, rounds, changed = _frontier_relax(
-        e, merged.select("id", "dist"), frontier, max_iters)
-    e.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"distance_transform_update did not converge in "
-            f"{max_iters} rounds; raise max_iters")
-    return enc.select(
-        (F.col("id") % w_px).alias("x"),
-        F.expr(f"id div {w_px}").alias("y"),
-        F.expr(f"dist div {k}").alias("dist"),
-        (F.col("dist") % k).alias("nearest"))
+    cells = dist.sparkSession.range(k).select(
+        F.col("id").alias("cell"), (F.col("id") % w_px).alias("x"),
+        F.expr(f"id div {w_px}").alias("y"))
+    e = _grid4_edges(cells, w_px, h_px, k, "distance_transform_update")
+    return _decode(_frontier_relax(
+        e, enc0, ("id",), max_iters, "distance_transform_update",
+        reseed=seeds), w_px, k)

@@ -12,6 +12,22 @@ per round, ``localCheckpoint`` plan truncation so round N's analysis
 cost stays O(1), and the driver seeing ONE count per round — never row
 data.
 
+Every entry point (and ``spatial/dt.py``) runs the same label-correcting
+relax through one set of private helpers:
+
+* ``_edges`` — the edge prologue: ``(e_src, e_dst, w)`` cast to long,
+  partitioned and sorted once (on ``e_src``, or on the block id ``p``
+  plus the block-crossing flag ``x`` for Δ-stepping), persisted,
+  negative weights rejected.
+* ``_candidates`` / ``_merge`` — one relaxation step and the min-merge,
+  keyed on ``("id",)`` (single source) or ``("src", "id")`` (matrix).
+* ``_frontier_relax`` — the frontier Bellman-Ford loop; cold runs and
+  reseeded updates differ only in their seed and key.
+* ``_delta_rounds`` — the Δ-stepping round loop over ``(src, id,
+  dist)`` with one block kernel pair (``_block_kernel``); the matrix
+  entry's full-relax branch runs before it.
+* ``_np_relax`` — the numpy worklist under every Python kernel.
+
 Scale notes (100 TB / planet-graph):
 
 * ``shortest_paths`` is frontier Bellman-Ford (label-correcting): each
@@ -35,6 +51,8 @@ Scale notes (100 TB / planet-graph):
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,6 +125,110 @@ def grid_edges(spark: SparkSession, n: int) -> DataFrame:
     )
 
 
+def _cast_edges(edges: DataFrame) -> DataFrame:
+    """``(src, dst, w)`` → ``(e_src, e_dst, w)`` as long."""
+    return edges.select(
+        F.col("src").cast("long").alias("e_src"),
+        F.col("dst").cast("long").alias("e_dst"),
+        F.col("w").cast("long").alias("w"),
+    )
+
+
+def _edges(edges: DataFrame, name: str, part=None) -> DataFrame:
+    """The edge prologue of every routing entry point: ``(e_src, e_dst,
+    w)`` as long, hash-partitioned AND sorted on the join key ONCE, then
+    persisted. The cached InMemoryRelation keeps its
+    outputPartitioning/ordering, so every round's join reuses it instead
+    of re-exchanging and re-sorting the (big) edge side per round (−26%
+    wall-clock on the 16M-edge expander bench, BENCH.md). With a block
+    partitioner ``part`` the key is the block id ``p = part(e_src)`` and
+    ``x`` flags block-crossing edges. Negative weights are rejected
+    (named for ``name``): the label-correcting contract — settled
+    distances never regress past convergence — doesn't hold for them."""
+    e = _cast_edges(edges)
+    key = "e_src"
+    if part is not None:
+        e = (e.withColumn("p", part("e_src"))
+             .withColumn("x", part("e_dst") != F.col("p")))
+        key = "p"
+    e = persist(e.repartition(F.col(key)).sortWithinPartitions(key))
+    if e.where(F.col("w") < 0).limit(1).count() > 0:
+        e.unpersist()
+        raise ValueError(f"{name} requires non-negative weights")
+    return e
+
+
+def _seed(spark: SparkSession, sources, key) -> DataFrame:
+    """Zero labels ``(*key, dist)`` for ``sources``, checkpointed."""
+    cols = (*key, "dist")
+    return spark.createDataFrame(
+        [(int(s), int(s), 0)[-len(cols):] for s in sources],
+        ", ".join(f"{c} long" for c in cols),
+    ).localCheckpoint(eager=True)
+
+
+def _candidates(frontier: DataFrame, e: DataFrame, key) -> DataFrame:
+    """One relaxation step: every frontier label ``(*key, dist)`` pushed
+    along its out-edges as ``(*key, nd)``; min() partial-aggregates
+    map-side, so the one shuffle carries per-target minima."""
+    return (
+        frontier.join(e, frontier.id == e.e_src)
+        .groupBy(*key[:-1], F.col("e_dst").alias("id"))
+        .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
+    )
+
+
+def _merge(dist: DataFrame, cand: DataFrame, key) -> DataFrame:
+    """The label-correcting min-merge: full-join the labels ``(*key,
+    dist)`` with candidates ``(*key, nd)``, keep the smaller, and flag
+    ``_imp`` where a candidate improved or newly reached a key. Eagerly
+    checkpointed, so the next round plans against O(1) lineage."""
+    return (
+        dist.join(cand, list(key), "full")
+        .select(
+            *key,
+            F.least(F.coalesce("dist", "nd"), F.coalesce("nd", "dist"))
+            .alias("dist"),
+            (F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
+            .alias("_imp"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _frontier_relax(e, dist, key, max_iters, name, *, reseed=None,
+                    stats=None, hint=""):
+    """The frontier Bellman-Ford loop behind every cold run and every
+    incremental update: each round relaxes only the labels that
+    improved last round. Cold start: the frontier is ``dist`` itself
+    (the seeds). Reseed: ``reseed`` candidates ``(*key, nd)`` are merged
+    into a converged ``dist`` first and the improved keys form the
+    frontier — label-correcting is restartable from any over-estimate.
+    ``e`` comes from :func:`_edges` (without a partitioner) and is
+    released here. Returns ``(*key, dist)``, a projection that reads
+    only the loop's final checkpoint; raises "``name`` did not converge
+    in N rounds; raise max_iters``hint``" if still improving."""
+    cols = (*key, "dist")
+    frontier = dist
+    if reseed is not None:
+        merged = _merge(dist, reseed, key)
+        dist, frontier = merged.select(*cols), merged.where("_imp").select(*cols)
+    changed, rounds = 1, 0
+    while changed and rounds < max_iters:
+        rounds += 1
+        merged = _merge(dist, _candidates(frontier, e, key), key)
+        dist, frontier = merged.select(*cols), merged.where("_imp").select(*cols)
+        changed = frontier.count()
+    e.unpersist()
+    if stats is not None:
+        stats["rounds"] = rounds
+    if changed:
+        raise RuntimeError(
+            f"{name} did not converge in {max_iters} rounds "
+            f"({changed} still improving); raise max_iters{hint}")
+    return dist
+
+
 def shortest_paths(
     edges: DataFrame,
     source: int,
@@ -124,78 +246,12 @@ def shortest_paths(
     negative weights are rejected because the frontier contract
     (settled distances never regress past convergence) doesn't hold.
     """
-    spark = edges.sparkSession
-    # hash-partition AND sort the edge table on the join key ONCE: the
-    # cached InMemoryRelation keeps its outputPartitioning/ordering, so
-    # every round's sort-merge join reuses it instead of re-exchanging
-    # and re-sorting the (big) edges side per round (−26% wall-clock on
-    # the 16M-edge expander bench, BENCH.md)
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError("shortest_paths requires non-negative weights")
-
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "id long, dist long"
-    ).localCheckpoint(eager=True)
-    dist, rounds, changed = _frontier_relax(e, dist, dist, max_iters)
-    e.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    if changed != 0:
-        raise RuntimeError(
-            f"shortest_paths did not converge in {max_iters} rounds "
-            f"({changed} distances still improving); raise max_iters "
-            f"(rounds needed = max hop count of an optimal path)"
-        )
+    e = _edges(edges, "shortest_paths")
+    dist = _frontier_relax(
+        e, _seed(edges.sparkSession, [source], ("id",)), ("id",),
+        max_iters, "shortest_paths", stats=stats,
+        hint=" (rounds needed = max hop count of an optimal path)")
     return dist.select(F.col("id").alias("node_id"), "dist")
-
-
-def _frontier_relax(e, dist, frontier, max_iters):
-    """Label-correcting frontier loop shared by :func:`shortest_paths`
-    (cold start: frontier = the source row) and :func:`sssp_update`
-    (incremental reseed: frontier = nodes improved by an edge-update
-    batch). ``e`` must be (src, dst, w) pre-partitioned on src.
-    Returns (dist, rounds, still_changing)."""
-    changed = 1
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # candidate improvements from the frontier only; min() partial-
-        # aggregates map-side, so the one shuffle carries per-dst minima
-        cand = (
-            frontier.join(e, frontier.id == e.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-        )
-        merged = (
-            dist.join(cand, "id", "full")
-            .select(
-                "id",
-                F.least(
-                    F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("nd") < F.col("dist"))
-                ).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.where("_imp").select("id", "dist")
-        changed = frontier.count()
-        dist = merged.select("id", "dist")
-        if changed == 0:
-            break
-    return dist, rounds, changed
 
 
 def sssp_update(
@@ -217,53 +273,12 @@ def sssp_update(
     revoke a distance); the streaming wrapper detects them and falls
     back to a cold :func:`shortest_paths` run for that batch.
     """
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError("sssp_update requires non-negative weights")
+    e = _edges(edges, "sssp_update")
     d0 = dist.select(F.col("node_id").alias("id"),
                      F.col("dist").cast("long").alias("dist"))
-    seed = (
-        improving_edges.select(
-            F.col("src").cast("long").alias("u"),
-            F.col("dst").cast("long").alias("v"),
-            F.col("w").cast("long").alias("uw"),
-        )
-        .join(d0, F.col("u") == F.col("id"))
-        .groupBy(F.col("v").alias("id"))
-        .agg(F.min(F.col("dist") + F.col("uw")).alias("nd"))
-    )
-    merged = (
-        d0.join(seed, "id", "full")
-        .select(
-            "id",
-            F.least(
-                F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-            ).alias("dist"),
-            (
-                F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
-            ).alias("_imp"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = merged.where("_imp").select("id", "dist")
-    new_dist, rounds, changed = _frontier_relax(
-        e, merged.select("id", "dist"), frontier, max_iters)
-    e.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    if changed != 0:
-        raise RuntimeError(
-            f"sssp_update did not converge in {max_iters} rounds; "
-            f"raise max_iters")
+    new_dist = _frontier_relax(
+        e, d0, ("id",), max_iters, "sssp_update", stats=stats,
+        reseed=_candidates(d0, _cast_edges(improving_edges), ("id",)))
     return new_dist.select(F.col("id").alias("node_id"), "dist")
 
 
@@ -289,13 +304,21 @@ def grid_block_part(n: int, block: int):
     return part
 
 
+def _hash_part(n_parts: int):
+    """Default block partitioner: hash-mod ``n_parts`` (correct for any
+    graph; round reduction needs a locality-aware one)."""
+    def part(name: str):
+        return F.pmod(F.col(name), F.lit(int(n_parts))).cast("long")
 
-def _build_csr(e_src, e_dst, e_w):
-    """Driver-side CSR over dense node indices for the full-relax
-    kernels: (node_ids_sorted, starts, ends, dst_idx, w)."""
+    return part
+
+
+def _build_csr(e_src, e_dst, e_w, *extra_ids):
+    """CSR over dense node indices (edge endpoints plus ``extra_ids``):
+    (node_ids_sorted, starts, ends, dst_idx, w)."""
     import numpy as np
 
-    node_ids = np.unique(np.concatenate([e_src, e_dst]))
+    node_ids = np.unique(np.concatenate([e_src, e_dst, *extra_ids]))
     n = int(node_ids.size)
     ls = np.searchsorted(node_ids, e_src)
     ld = np.searchsorted(node_ids, e_dst)
@@ -305,17 +328,15 @@ def _build_csr(e_src, e_dst, e_w):
     return node_ids, bounds[:-1], bounds[1:], ld, lw
 
 
-def _np_sssp_csr(fr_src, fr_id, fr_dist, csr):
-    """EXACT multi-source SSSP over a prebuilt whole-graph CSR — the
-    full-relax kernel: the same converged worklist relaxation as
-    :func:`_np_block_relax` (Bellman-Ford worklist over dense
-    (source × node) int64 distances, ragged repeat expansion +
-    minimum.at scatter), but with the CSR handed in (no per-call
-    unique/argsort) and the OUTPUT being the distances themselves:
-    with the whole edge set local, the fixpoint IS the exact SSSP
-    answer, so callers need no label-correcting merge loop at all.
-    Returns (src, id, dist) for every reached (source, node) pair,
-    sources' zero rows included; unreachable nodes absent."""
+def _np_relax(fr_src, fr_id, fr_dist, csr, cap=None):
+    """The numpy worklist under every Python kernel: Bellman-Ford over
+    dense ``(n_sources × n_nodes)`` int64 labels keyed ``s*n + u``, so
+    all sources relax in the SAME vector ops. Per iteration, expand
+    every active pair's CSR edge range by ragged ``np.repeat`` indexing
+    and scatter-min with ``np.minimum.at``; pairs that improved stay
+    active (with ``cap``: only those below it). Returns ``(srcs, seed,
+    dist)`` — the sorted sources and the flat labels before and at the
+    fixpoint (int64 max = unreached)."""
     import numpy as np
 
     node_ids, starts, ends, ld, lw = csr
@@ -326,8 +347,11 @@ def _np_sssp_csr(fr_src, fr_id, fr_dist, csr):
     fkey = (np.searchsorted(srcs, fr_src) * n
             + np.searchsorted(node_ids, fr_id))
     np.minimum.at(dist, fkey, fr_dist)
+    seed = dist.copy()
     act = np.unique(fkey)
     while act.size:
+        if cap is not None:
+            act = act[dist[act] < cap]
         uu = act % n
         cnt = ends[uu] - starts[uu]
         keep = cnt > 0
@@ -344,80 +368,36 @@ def _np_sssp_csr(fr_src, fr_id, fr_dist, csr):
         cu = np.full(ut.size, inf, np.int64)
         np.minimum.at(cu, inv, nd)
         impm = cu < dist[ut]
-        iu = ut[impm]
-        dist[iu] = cu[impm]
-        act = iu
-    fin = np.nonzero(dist < inf)[0]
-    return srcs[fin // n], node_ids[fin % n], dist[fin]
+        act = ut[impm]
+        dist[act] = cu[impm]
+    return srcs, seed, dist
 
 
 def _np_block_relax(fr_src, fr_id, fr_dist, e_src, e_dst, e_w, e_cross,
                     cap):
     """Vectorized exact per-block relaxation — the Δ-stepping
-    per-barrier kernel shared by :func:`shortest_paths_delta` and
-    :func:`travel_time_matrix_delta`.
+    per-barrier kernel of :func:`_delta_rounds`.
 
     Replaces the round-4 scalar heap Dijkstra (the bottleneck named by
     BENCH.md's 16-source cost-matrix table once rounds were collapsed):
-    a worklist Bellman-Ford over the block's LOCAL edges in numpy
-    batches — per iteration, expand every active (source, node) pair's
-    CSR edge range via ragged ``np.repeat`` indexing and scatter-min
-    with ``np.minimum.at``. Within a block both algorithms reach the
-    same unique fixpoint from the same seeds, so the emitted candidate
-    set is IDENTICAL to the heap kernel's min-merged output: cross-block
-    candidates at settled distances (< cap when capped) plus local nodes
-    improved past their seed. Iterations = local hop diameter of the
-    improved region, each a few fused array ops — the per-barrier
-    compute the scalar heap serialized.
-
-    Multi-source is handled densely: distances live in one flat
-    ``(n_sources × n_local_nodes)`` int64 array keyed ``s*n + u``, so
-    all sources relax in the SAME vector ops. Returns
-    ``(src, id, nd)`` int64 arrays, min-merged per key.
+    :func:`_np_relax` over the block's LOCAL edges. Within a block both
+    algorithms reach the same unique fixpoint from the same seeds, so
+    the emitted candidate set is IDENTICAL to the heap kernel's
+    min-merged output: cross-block candidates at settled distances
+    (< cap when capped) plus local nodes improved past their seed.
+    Iterations = local hop diameter of the improved region, each a few
+    fused array ops — the per-barrier compute the scalar heap
+    serialized. Returns ``(src, id, nd)`` int64 arrays, min-merged per
+    key.
     """
     import numpy as np
 
     inf = np.iinfo(np.int64).max
     lmask = ~e_cross
-    local_ids = np.unique(np.concatenate([e_src, e_dst[lmask], fr_id]))
+    csr = _build_csr(e_src[lmask], e_dst[lmask], e_w[lmask], e_src, fr_id)
+    local_ids = csr[0]
     n = int(local_ids.size)
-    srcs = np.unique(fr_src)
-    # local-edge CSR over dense node indices
-    ls = np.searchsorted(local_ids, e_src[lmask])
-    ld = np.searchsorted(local_ids, e_dst[lmask])
-    lw = e_w[lmask]
-    order = np.argsort(ls, kind="stable")
-    ls, ld, lw = ls[order], ld[order], lw[order]
-    bounds = np.searchsorted(ls, np.arange(n + 1))
-    starts, ends = bounds[:-1], bounds[1:]
-    dist = np.full(int(srcs.size) * n, inf, np.int64)
-    fkey = (np.searchsorted(srcs, fr_src) * n
-            + np.searchsorted(local_ids, fr_id))
-    np.minimum.at(dist, fkey, fr_dist)
-    seeds = dist.copy()
-    act = np.unique(fkey)
-    if cap is not None:
-        act = act[dist[act] < cap]
-    while act.size:
-        uu = act % n
-        cnt = ends[uu] - starts[uu]
-        keep = cnt > 0
-        act_k, uu, cnt = act[keep], uu[keep], cnt[keep]
-        tot = int(cnt.sum())
-        if tot == 0:
-            break
-        rep = np.repeat(act_k, cnt)
-        off = (np.repeat(starts[uu], cnt)
-               + np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt, cnt))
-        nd = dist[rep] + lw[off]
-        tgt = (rep // n) * n + ld[off]
-        ut, inv = np.unique(tgt, return_inverse=True)
-        cu = np.full(ut.size, inf, np.int64)
-        np.minimum.at(cu, inv, nd)
-        impm = cu < dist[ut]
-        iu = ut[impm]
-        dist[iu] = cu[impm]
-        act = iu if cap is None else iu[dist[iu] < cap]
+    srcs, seeds, dist = _np_relax(fr_src, fr_id, fr_dist, csr, cap)
     li = np.nonzero(dist < seeds)[0]
     out_s = [srcs[li // n]]
     out_i = [local_ids[li % n]]
@@ -448,7 +428,7 @@ def _np_block_relax(fr_src, fr_id, fr_dist, e_src, e_dst, e_w, e_cross,
     return os_[first], oi[first], od[first]
 
 
-# Per-PROCESS cache of broadcast edge blocks: PySpark's Broadcast.value
+# Per-PROCESS cache of broadcast edge payloads: PySpark's Broadcast.value
 # caches on the handle INSTANCE, and every task deserializes a fresh
 # handle — so without this, each task re-reads and re-unpickles the
 # whole edge payload (measured: +2.3 s/round on the 16-source probe,
@@ -471,51 +451,173 @@ def _blk_cache_get(bc, token):
     return blocks
 
 
-def _block_edge_broadcast(e, src_col: str, dst_col: str, cap: int,
-                          with_csr: bool = False):
-    """Guarded driver materialization of the per-block edge arrays —
-    the ``spatial/pip.py`` broadcast-contract pattern applied to
-    Δ-stepping: when the edge table fits the cap, ship it to every
-    Python worker ONCE (pickled numpy arrays keyed by block id) instead
-    of re-cogrouping ~|E| rows through Arrow on EVERY barrier. The
-    instrumented 16-source cost-matrix probe showed 87% of wall inside
-    the per-round materialization job, dominated by that edge transfer
-    (39 rounds × 2M edge rows); with the broadcast, each round ships
-    only the frontier. Returns ``(broadcast | None, n_edges)`` —
-    ``None`` when over cap, and callers fall back to the cogroup path
-    (the 100 TB shape, where edges exceed any single worker)."""
+def _edge_broadcast(e, cap: int, payload):
+    """Guarded driver materialization of the edge table — the
+    ``spatial/pip.py`` broadcast-contract pattern applied to routing:
+    when the edge table fits the cap, ship ``payload(pandas edges)`` to
+    every Python worker ONCE instead of re-cogrouping ~|E| rows through
+    Arrow on EVERY barrier. The instrumented 16-source cost-matrix probe
+    showed 87% of wall inside the per-round materialization job,
+    dominated by that edge transfer (39 rounds × 2M edge rows); with
+    the broadcast, each round ships only the frontier. Returns
+    ``(broadcast, token)`` and releases ``e`` (the broadcast replaces
+    the cached relation), or ``None`` when over cap: callers keep the
+    cogroup path (the 100 TB shape, where edges exceed any single
+    worker)."""
+    if e.count() > cap:
+        return None
+    pdf = e.toPandas()  # guarded: |E| <= cap by contract (pip discipline)
+    bc = e.sparkSession.sparkContext.broadcast(payload(pdf))
+    e.unpersist()
+    _BLK_TOKEN[0] += 1
+    return bc, _BLK_TOKEN[0]
+
+
+def _edge_blocks(pdf) -> dict:
+    """Per-block ``(e_src, e_dst, w, x)`` numpy arrays keyed by block id."""
     import numpy as np
 
-    n_e = e.count()
-    if n_e > cap:
-        return None, n_e
-    pdf = e.toPandas()  # guarded: n_e <= cap by contract (pip discipline)
     pdf = pdf.sort_values("p", kind="stable")
     ps = pdf["p"].to_numpy(np.int64)
-    arrs = (pdf[src_col].to_numpy(np.int64),
-            pdf[dst_col].to_numpy(np.int64),
+    arrs = (pdf["e_src"].to_numpy(np.int64),
+            pdf["e_dst"].to_numpy(np.int64),
             pdf["w"].to_numpy(np.int64),
             pdf["x"].to_numpy(bool))
     cuts = np.nonzero(ps[1:] != ps[:-1])[0] + 1
     starts = np.concatenate([[0], cuts])
     ends = np.concatenate([cuts, [ps.size]])
-    blocks = {
+    return {
         int(ps[s]): tuple(a[s:t].copy() for a in arrs)
         for s, t in zip(starts, ends)
     }
-    if with_csr:
-        # one driver-side CSR build shared by every full-relax task —
-        # kernels skip the per-call unique/argsort entirely
-        blocks["__csr__"] = _build_csr(
-            pdf[src_col].to_numpy(np.int64),
-            pdf[dst_col].to_numpy(np.int64),
-            pdf["w"].to_numpy(np.int64))
-    _BLK_TOKEN[0] += 1
-    return (e.sparkSession.sparkContext.broadcast(blocks),
-            _BLK_TOKEN[0]), n_e
+
+
+def _edge_csr(pdf):
+    """One driver-side whole-graph CSR shared by every full-relax task —
+    kernels skip the per-call unique/argsort entirely."""
+    import numpy as np
+
+    return _build_csr(*(pdf[c].to_numpy(np.int64)
+                        for c in ("e_src", "e_dst", "w")))
 
 
 BROADCAST_EDGE_CAP = 8_000_000
+
+
+def _block_kernel(cap, bct):
+    """The Δ-stepping per-barrier kernel over one block's frontier
+    ``(src, id, dist)`` → candidates ``(src, id, nd)``: the cogroup form
+    ``(key, frontier, edges)`` when ``bct`` is None, else the broadcast
+    form ``(key, frontier)`` reading the block's edges from the
+    per-process cache."""
+    import numpy as np
+    import pandas as pd
+
+    def relax(fr, blk):
+        if blk is None or len(fr) == 0:
+            return pd.DataFrame({c: pd.Series(dtype="int64")
+                                 for c in ("src", "id", "nd")})
+        os_, oi, od = _np_block_relax(
+            *(fr[c].to_numpy(np.int64) for c in ("src", "id", "dist")),
+            *blk, cap)
+        return pd.DataFrame({"src": os_, "id": oi, "nd": od})
+
+    if bct is None:
+        def kernel(_key, fr, eg):
+            return relax(fr, None if len(eg) == 0 else (
+                eg["e_src"].to_numpy(np.int64),
+                eg["e_dst"].to_numpy(np.int64),
+                eg["w"].to_numpy(np.int64),
+                eg["x"].to_numpy(bool)))
+    else:
+        bc, tok = bct
+
+        def kernel(key, fr):
+            return relax(fr, _blk_cache_get(bc, tok).get(int(key[0])))
+
+    return kernel
+
+
+def _delta_rounds(e, bct, dist, part, delta, max_rounds, name, hint=""):
+    """The Δ-stepping round loop shared by :func:`shortest_paths_delta`
+    and :func:`travel_time_matrix_delta`: labels ``(src, id, dist)``,
+    one block kernel call per active block per barrier, candidates
+    min-merged on ``(src, id)``. ``e`` comes from :func:`_edges` with
+    ``part``; ``bct`` is its broadcast (or None: cogroup the active
+    blocks' edges each round). ``delta`` caps each round's expansion at
+    (min frontier dist) + delta; the rest stays pending. AQE is off for
+    the loop (restored after). Releases ``e`` and the broadcast.
+    Returns ``(dist, info)`` with ``rounds``, ``buckets``, ``t_agg`` and
+    ``t_ckpt``; raises "``name`` did not converge in N rounds; raise
+    max_rounds``hint``"."""
+    spark = dist.sparkSession
+    frontier = dist.withColumn("p", part("id"))
+    rounds = buckets = 0
+    t_agg = t_ckpt = 0.0
+    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        while True:
+            # ONE scalar job per round: frontier size, bucket floor, and
+            # the set of active blocks (bounded by the number of blocks —
+            # block ids, never row data)
+            t0 = time.perf_counter()
+            agg = frontier.agg(
+                F.count("*").alias("c"), F.min("dist").alias("lo"),
+                F.collect_set("p").alias("ps"),
+            ).collect()[0]
+            t_agg += time.perf_counter() - t0
+            if agg["c"] == 0:
+                break
+            rounds += 1
+            if rounds > max_rounds:
+                raise RuntimeError(
+                    f"{name} did not converge in {max_rounds} rounds; "
+                    f"raise max_rounds{hint}")
+            if delta is not None:
+                cap = int(agg["lo"]) + int(delta)
+                active = frontier.where(F.col("dist") < cap)
+                pending = frontier.where(F.col("dist") >= cap)
+                buckets += 1
+            else:
+                cap, active, pending = None, frontier, None
+            if bct is not None:
+                cand = active.groupBy("p").applyInPandas(
+                    _block_kernel(cap, bct), "src long, id long, nd long")
+            else:
+                # only ACTIVE blocks' edges enter the cogroup: a Filter
+                # over the cached relation keeps its hash partitioning
+                # (no new exchange), and quiet blocks stop paying Arrow
+                # transfer every round. With very many blocks the
+                # In-list would bloat the plan — ship all edges instead
+                # (the kernel returns instantly on an empty frontier).
+                parts = agg["ps"]
+                e_act = (e.where(F.col("p").isin([int(x) for x in parts]))
+                         if len(parts) <= 2048 else e)
+                cand = (active.groupBy("p").cogroup(e_act.groupBy("p"))
+                        .applyInPandas(_block_kernel(cap, None),
+                                       "src long, id long, nd long"))
+            cand = cand.groupBy("src", "id").agg(F.min("nd").alias("nd"))
+            t0 = time.perf_counter()
+            merged = _merge(dist, cand, ("src", "id"))
+            t_ckpt += time.perf_counter() - t0
+            improved = merged.where("_imp").select("src", "id", "dist")
+            dist = merged.select("src", "id", "dist")
+            # frontier stays a cheap filter over the checkpointed merge
+            # (no second materialization job per round); only the delta
+            # path's pending anti-join warrants its own checkpoint
+            frontier = improved.withColumn("p", part("id"))
+            if pending is not None:
+                frontier = frontier.unionByName(
+                    pending.join(improved, ["src", "id"], "left_anti")
+                ).localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+        e.unpersist()
+        if bct is not None:
+            bct[0].unpersist()
+    return dist, {"rounds": rounds, "buckets": buckets,
+                  "t_agg": t_agg, "t_ckpt": t_ckpt}
 
 
 def shortest_paths_delta(
@@ -546,7 +648,8 @@ def shortest_paths_delta(
     barrier; only block-crossing relaxations travel through the shuffle.
     Rounds collapse from O(diameter in hops) to O(diameter in blocks) —
     measured 1300× fewer rounds on a 1M-node grid
-    (``bench.py --sweep grid_route``).
+    (``bench.py --sweep grid_route``). It runs as a one-source matrix
+    through :func:`_delta_rounds`.
 
     Correctness does not depend on the partitioner or ``delta``: block
     Dijkstra may start from not-yet-final seed distances, but every
@@ -566,161 +669,20 @@ def shortest_paths_delta(
     ``None`` = one unbounded bucket (max fusion, best for near-monotone
     graphs like road grids).
     """
-    spark = edges.sparkSession
     if delta is not None and int(delta) < 1:
         raise ValueError("delta must be a positive bucket width (or None)")
     if part is None:
-        def part(name: str):
-            return F.pmod(F.col(name), F.lit(int(n_parts))).cast("long")
-
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .withColumn("p", part("src"))
-        .withColumn("x", part("dst") != F.col("p"))
-        .repartition(F.col("p"))
-        .sortWithinPartitions("p")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError("shortest_paths_delta requires non-negative weights")
-
-    import numpy as np
-    import pandas as pd
-
-    def make_kernel(cap):
-        def kernel(_key, fr: pd.DataFrame, eg: pd.DataFrame) -> pd.DataFrame:
-            if len(fr) == 0 or len(eg) == 0:
-                return pd.DataFrame({"id": pd.Series(dtype="int64"),
-                                     "nd": pd.Series(dtype="int64")})
-            _, oi, od = _np_block_relax(
-                np.zeros(len(fr), np.int64),
-                fr["id"].to_numpy(np.int64),
-                fr["dist"].to_numpy(np.int64),
-                eg["src"].to_numpy(np.int64),
-                eg["dst"].to_numpy(np.int64),
-                eg["w"].to_numpy(np.int64),
-                eg["x"].to_numpy(bool),
-                cap,
-            )
-            return pd.DataFrame({"id": oi, "nd": od})
-
-        return kernel
-
-    _bct, _n_e = _block_edge_broadcast(e, "src", "dst", broadcast_cap)
-    bc, tok = _bct if _bct is not None else (None, None)
-    if bc is not None:
-        e.unpersist()  # the broadcast replaces the cached relation
-
-    def make_bkernel(cap):
-        def kernel(key, fr: pd.DataFrame) -> pd.DataFrame:
-            blk = _blk_cache_get(bc, tok).get(int(key[0]))
-            if blk is None or len(fr) == 0:
-                return pd.DataFrame({"id": pd.Series(dtype="int64"),
-                                     "nd": pd.Series(dtype="int64")})
-            _, oi, od = _np_block_relax(
-                np.zeros(len(fr), np.int64),
-                fr["id"].to_numpy(np.int64),
-                fr["dist"].to_numpy(np.int64),
-                blk[0], blk[1], blk[2], blk[3],
-                cap,
-            )
-            return pd.DataFrame({"id": oi, "nd": od})
-
-        return kernel
-
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "id long, dist long"
-    ).localCheckpoint(eager=True)
-    frontier = dist.withColumn("p", part("id"))
-    rounds = 0
-    buckets = 0
-    _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        while True:
-            # ONE scalar job per round: frontier size, bucket floor, and the
-            # set of active blocks (bounded by the number of blocks — block
-            # ids, never row data)
-            agg = frontier.agg(
-                F.count("*").alias("c"), F.min("dist").alias("lo"),
-                F.collect_set("p").alias("ps"),
-            ).collect()[0]
-            if agg["c"] == 0:
-                break
-            rounds += 1
-            if rounds > max_rounds:
-                e.unpersist()
-                raise RuntimeError(
-                    f"shortest_paths_delta did not converge in {max_rounds} "
-                    f"rounds; raise max_rounds (rounds ≈ graph diameter in "
-                    f"blocks × buckets)")
-            if delta is not None:
-                cap = int(agg["lo"]) + int(delta)
-                active = frontier.where(F.col("dist") < cap)
-                pending = frontier.where(F.col("dist") >= cap)
-                buckets += 1
-            else:
-                cap, active, pending = None, frontier, None
-            # only ACTIVE blocks' edges enter the cogroup: a Filter over the
-            # cached relation keeps its hash partitioning (no new exchange),
-            # and quiet blocks stop paying Arrow transfer every round. With
-            # very many blocks the In-list would bloat the plan — ship all
-            # edges instead (the kernel returns instantly on empty frontier).
-            if bc is not None:
-                cand = (
-                    active.groupBy("p")
-                    .applyInPandas(make_bkernel(cap), "id long, nd long")
-                    .groupBy("id")
-                    .agg(F.min("nd").alias("nd"))
-                )
-            else:
-                parts = agg["ps"]
-                e_act = (e.where(F.col("p").isin([int(x) for x in parts]))
-                         if len(parts) <= 2048 else e)
-                cand = (
-                    active.groupBy("p")
-                    .cogroup(e_act.groupBy("p"))
-                    .applyInPandas(make_kernel(cap), "id long, nd long")
-                    .groupBy("id")
-                    .agg(F.min("nd").alias("nd"))
-                )
-            merged = (
-                dist.join(cand, "id", "full")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                    ).alias("dist"),
-                    (
-                        F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
-                    ).alias("_imp"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            improved = merged.where("_imp").select("id", "dist")
-            dist = merged.select("id", "dist")
-            # frontier stays a cheap filter over the checkpointed merge (no
-            # second materialization job per round); only the delta path's
-            # pending anti-join warrants its own checkpoint
-            frontier = improved.withColumn("p", part("id"))
-            if pending is not None:
-                frontier = frontier.unionByName(
-                    pending.join(improved, "id", "left_anti")
-                ).localCheckpoint(eager=True)
-
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
-    e.unpersist()
-    if bc is not None:
-        bc.unpersist()
+        part = _hash_part(n_parts)
+    e = _edges(edges, "shortest_paths_delta", part)
+    bct = _edge_broadcast(e, broadcast_cap, _edge_blocks)
+    dist, info = _delta_rounds(
+        e, bct, _seed(edges.sparkSession, [source], ("src", "id")), part,
+        delta, max_rounds, "shortest_paths_delta",
+        " (rounds ≈ graph diameter in blocks × buckets)")
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["buckets"] = buckets
-        stats["edge_broadcast"] = bc is not None
+        stats["rounds"] = info["rounds"]
+        stats["buckets"] = info["buckets"]
+        stats["edge_broadcast"] = bct is not None
     return dist.select(F.col("id").alias("node_id"), "dist")
 
 
@@ -818,231 +780,95 @@ def travel_time_matrix_delta(
     stats: dict | None = None,
     broadcast_cap: int = BROADCAST_EDGE_CAP,
     src_groups: int = 16,
-    full_relax: bool | None = None,
 ) -> DataFrame:
     """Batched multi-source SSSP → ``(src, node_id, dist)`` with the
-    same converged output as :func:`travel_time_matrix`, using the
-    :func:`shortest_paths_delta` block-fusion machinery in the product
-    space: one vectorized block relaxation per barrier over entries
-    keyed ``(source, node)`` (:func:`_np_block_relax` relaxes every
-    source in the same numpy ops), so ALL sources ride the SAME rounds AND the
-    rounds themselves collapse from O(diameter in hops) to O(diameter
-    in blocks) — the scale fix for catchment/isochrone products on
-    high-diameter road graphs. Label-correcting merge keyed
-    ``(src, id)``; correctness is partitioner-independent.
+    same converged output as :func:`travel_time_matrix`.
 
-    ``src_groups``: in the broadcast-edges mode the per-barrier task
-    key is ``(block, src mod src_groups)`` instead of block alone —
-    sources are INDEPENDENT shortest-path problems, so splitting them
-    across tasks changes nothing semantically while multiplying the
-    per-barrier parallelism by up to ``src_groups`` (a 16-depot run on
-    a 16-block grid would otherwise cap at 16 concurrent tasks no
-    matter the core count). The cogroup fallback keeps block-only keys
-    (the edge side must align).
+    Full relax (whenever the edge broadcast fits ``broadcast_cap``):
+    the matrix workload under the cap is EMBARRASSINGLY PARALLEL over
+    sources — every task holds the whole graph, so restricting
+    relaxation to one block per barrier would only multiply barriers.
+    Sources split into ``src_groups`` groups by enumeration order, and
+    each group's task runs its sources to the FULL vectorized fixpoint
+    in ONE kernel call (:func:`_np_relax` over a driver-built CSR):
+    rounds collapse from O(diameter in blocks) × correction-cascade (39
+    measured on the 262k-px cost raster) to 1. This is the standard
+    production split: graph fits a worker → parallelize over sources.
 
-    ``full_relax`` (auto when the edge broadcast fits): the matrix
-    workload under the broadcast cap is EMBARRASSINGLY PARALLEL over
-    sources — every task already holds the whole graph, so restricting
-    relaxation to one block per barrier only multiplies barriers. Each
-    ``src mod src_groups`` task instead runs its sources to the FULL
-    vectorized fixpoint in ONE kernel call: total rounds collapse from
-    O(diameter in blocks) × correction-cascade (39 measured on the
-    262k-px cost raster) to 2 (relax + empty-frontier confirmation).
-    This is the standard production split: graph fits a worker →
-    parallelize over sources; graph doesn't → the per-block Δ-stepping
-    cogroup path (which stays, unchanged, as the over-cap branch and
-    the 100 TB story)."""
-    spark = edges.sparkSession
+    Over the cap: the :func:`shortest_paths_delta` block-fusion loop
+    (:func:`_delta_rounds`) in the product space, cogrouping each
+    barrier's frontier with its blocks' edges — one vectorized block
+    relaxation over entries keyed ``(source, node)`` relaxes every
+    source in the same numpy ops, so ALL sources ride the SAME rounds
+    AND the rounds collapse from O(diameter in hops) to O(diameter in
+    blocks) — the 100 TB story, where edges exceed any single worker.
+    Label-correcting merge keyed ``(src, id)``; correctness is
+    partitioner-independent."""
     if part is None:
-        def part(name: str):
-            return F.pmod(F.col(name), F.lit(int(n_parts))).cast("long")
-
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("e_src"),
-            F.col("dst").cast("long").alias("e_dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .withColumn("p", part("e_src"))
-        .withColumn("x", part("e_dst") != F.col("p"))
-        .repartition(F.col("p"))
-        .sortWithinPartitions("p")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError(
-            "travel_time_matrix_delta requires non-negative weights")
-
-    import numpy as np
-    import pandas as pd
-
-    def kernel(_key, fr: pd.DataFrame, eg: pd.DataFrame) -> pd.DataFrame:
-        if len(fr) == 0 or len(eg) == 0:
-            return pd.DataFrame({"src": pd.Series(dtype="int64"),
-                                 "id": pd.Series(dtype="int64"),
-                                 "nd": pd.Series(dtype="int64")})
-        os_, oi, od = _np_block_relax(
-            fr["src"].to_numpy(np.int64),
-            fr["id"].to_numpy(np.int64),
-            fr["dist"].to_numpy(np.int64),
-            eg["e_src"].to_numpy(np.int64),
-            eg["e_dst"].to_numpy(np.int64),
-            eg["w"].to_numpy(np.int64),
-            eg["x"].to_numpy(bool),
-            None,
-        )
-        return pd.DataFrame({"src": os_, "id": oi, "nd": od})
-
-    import time as _t0mod
-    _tb = _t0mod.perf_counter()
-    _bct, _n_e = _block_edge_broadcast(e, "e_src", "e_dst", broadcast_cap,
-                                       with_csr=full_relax is not False)
-    _t_bcast = _t0mod.perf_counter() - _tb
-    bc, tok = _bct if _bct is not None else (None, None)
-    if bc is not None:
-        e.unpersist()  # the broadcast replaces the cached relation
-
-    def bkernel(key, fr: pd.DataFrame) -> pd.DataFrame:
-        blk = _blk_cache_get(bc, tok).get(int(key[0]))
-        if blk is None or len(fr) == 0:
-            return pd.DataFrame({"src": pd.Series(dtype="int64"),
-                                 "id": pd.Series(dtype="int64"),
-                                 "nd": pd.Series(dtype="int64")})
-        os_, oi, od = _np_block_relax(
-            fr["src"].to_numpy(np.int64),
-            fr["id"].to_numpy(np.int64),
-            fr["dist"].to_numpy(np.int64),
-            blk[0], blk[1], blk[2], blk[3],
-            None,
-        )
-        return pd.DataFrame({"src": os_, "id": oi, "nd": od})
-
-    def fkernel(_key, fr: pd.DataFrame) -> pd.DataFrame:
-        # exact full-graph multi-source SSSP for this source group over
-        # the driver-prebuilt CSR: the output IS the final distances
-        if len(fr) == 0:
-            return pd.DataFrame({"src": pd.Series(dtype="int64"),
-                                 "id": pd.Series(dtype="int64"),
-                                 "dist": pd.Series(dtype="int64")})
-        csr = _blk_cache_get(bc, tok)["__csr__"]
-        os_, oi, od = _np_sssp_csr(
-            fr["src"].to_numpy(np.int64),
-            fr["id"].to_numpy(np.int64),
-            fr["dist"].to_numpy(np.int64),
-            csr,
-        )
-        return pd.DataFrame({"src": os_, "id": oi, "dist": od})
-
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in sources], "src long, id long, dist long"
-    ).localCheckpoint(eager=True)
-    _full = full_relax if full_relax is not None else (bc is not None)
-    if bc is not None and _full:
-        # replicated-graph mode: every task holds the whole (capped)
-        # edge set, so each source group solves its sources EXACTLY in
-        # one kernel call — no label-correcting loop, no merge joins,
-        # ONE barrier. The distributed block loop below remains the
-        # over-cap path. Groups are assigned by ENUMERATION order, not
-        # src mod G: structured depot ids share factors (the 16 grid-
-        # spread probe sources collapsed into 4 pmod groups — 4 fat
-        # tasks instead of 16), while i % G is perfectly balanced.
-        sg_map = {int(s): i % int(src_groups)
-                  for i, s in enumerate(sources)}
-        sg_expr = F.create_map(
-            *[F.lit(v) for kv in sg_map.items() for v in kv])
-        n_groups = min(int(src_groups), len(sg_map))
-        # explicit range repartition: the seed frame is 16 ROWS but 16
-        # CPU-HEAVY groups — AQE's coalescer sees "tiny shuffle" and
-        # folds every group into ONE task (measured: 16 × 2.6 s kernels
-        # serialized into a 44 s wall). An explicit numbered
-        # repartitionByRange is exempt from AQE coalescing and ranges
-        # over 0..G-1 split one group per partition (hash would
-        # collide).
-        out = (
-            dist.withColumn("sg", sg_expr[F.col("src")])
-            .repartitionByRange(n_groups, "sg")
-            .groupBy("sg")
-            .applyInPandas(fkernel, "src long, id long, dist long")
-        )
+        part = _hash_part(n_parts)
+    e = _edges(edges, "travel_time_matrix_delta", part)
+    t0 = time.perf_counter()
+    bct = _edge_broadcast(e, broadcast_cap, _edge_csr)
+    t_bcast = time.perf_counter() - t0
+    dist = _seed(edges.sparkSession, sources, ("src", "id"))
+    if bct is not None:
+        out = _full_relax(dist, bct, sources, src_groups)
         if stats is not None:
             stats["rounds"] = 1
             stats["edge_broadcast"] = True
             stats["full_relax"] = True
-            stats["t_bcast"] = round(_t_bcast, 2)
+            stats["t_bcast"] = round(t_bcast, 2)
         return out.select("src", F.col("id").alias("node_id"), "dist")
-    frontier = dist.withColumn("p", part("id"))
-    rounds = 0
-    import time as _time
-    t_agg = t_ckpt = 0.0
-    _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        while True:
-            t0 = _time.perf_counter()
-            agg = frontier.agg(
-                F.count("*").alias("c"), F.collect_set("p").alias("ps")
-            ).collect()[0]
-            t_agg += _time.perf_counter() - t0
-            if agg["c"] == 0:
-                break
-            rounds += 1
-            if rounds > max_rounds:
-                e.unpersist()
-                raise RuntimeError(
-                    f"travel_time_matrix_delta did not converge in "
-                    f"{max_rounds} rounds; raise max_rounds")
-            if bc is not None:
-                cand = (
-                    frontier.groupBy(
-                        "p", F.pmod(F.col("src"),
-                                    F.lit(int(src_groups))).alias("sg"))
-                    .applyInPandas(bkernel, "src long, id long, nd long")
-                    .groupBy("src", "id")
-                    .agg(F.min("nd").alias("nd"))
-                )
-            else:
-                parts = agg["ps"]
-                e_act = (e.where(F.col("p").isin([int(x) for x in parts]))
-                         if len(parts) <= 2048 else e)
-                cand = (
-                    frontier.groupBy("p")
-                    .cogroup(e_act.groupBy("p"))
-                    .applyInPandas(kernel, "src long, id long, nd long")
-                    .groupBy("src", "id")
-                    .agg(F.min("nd").alias("nd"))
-                )
-            t0 = _time.perf_counter()
-            merged = (
-                dist.join(cand, ["src", "id"], "full")
-                .select(
-                    "src",
-                    "id",
-                    F.least(
-                        F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                    ).alias("dist"),
-                    (
-                        F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
-                    ).alias("_imp"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            t_ckpt += _time.perf_counter() - t0
-            dist = merged.select("src", "id", "dist")
-            frontier = merged.where("_imp").select(
-                "src", "id", "dist").withColumn("p", part("id"))
-
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
-    e.unpersist()
-    if bc is not None:
-        bc.unpersist()
+    dist, info = _delta_rounds(e, None, dist, part, None, max_rounds,
+                               "travel_time_matrix_delta")
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["t_agg"] = round(t_agg, 3)
-        stats["t_ckpt"] = round(t_ckpt, 3)
-        stats["edge_broadcast"] = bc is not None
-        stats["full_relax"] = bool(bc is not None and _full)
+        stats["rounds"] = info["rounds"]
+        stats["t_agg"] = round(info["t_agg"], 3)
+        stats["t_ckpt"] = round(info["t_ckpt"], 3)
+        stats["edge_broadcast"] = False
+        stats["full_relax"] = False
     return dist.select("src", F.col("id").alias("node_id"), "dist")
+
+
+def _full_relax(dist, bct, sources, src_groups):
+    """Replicated-graph mode of :func:`travel_time_matrix_delta`: every
+    task holds the whole (capped) edge set as a CSR, so each source
+    group solves its sources EXACTLY in one kernel call — no
+    label-correcting loop, no merge joins, ONE barrier. The output IS
+    the final ``(src, id, dist)`` labels (sources' zero rows included).
+    Groups are assigned by ENUMERATION order, not src mod G: structured
+    depot ids share factors (the 16 grid-spread probe sources collapsed
+    into 4 pmod groups — 4 fat tasks instead of 16), while i % G is
+    perfectly balanced."""
+    import numpy as np
+    import pandas as pd
+
+    bc, tok = bct
+
+    def kernel(_key, fr):
+        csr = _blk_cache_get(bc, tok)
+        node_ids = csr[0]
+        n = int(node_ids.size)
+        srcs, _, d = _np_relax(
+            *(fr[c].to_numpy(np.int64) for c in ("src", "id", "dist")), csr)
+        fin = np.nonzero(d < np.iinfo(np.int64).max)[0]
+        return pd.DataFrame({"src": srcs[fin // n], "id": node_ids[fin % n],
+                             "dist": d[fin]})
+
+    sg_map = {int(s): i % int(src_groups) for i, s in enumerate(sources)}
+    sg_expr = F.create_map(*[F.lit(v) for kv in sg_map.items() for v in kv])
+    # explicit range repartition: the seed frame is 16 ROWS but 16
+    # CPU-HEAVY groups — AQE's coalescer sees "tiny shuffle" and folds
+    # every group into ONE task (measured: 16 × 2.6 s kernels serialized
+    # into a 44 s wall). An explicit numbered repartitionByRange is
+    # exempt from AQE coalescing and ranges over 0..G-1 split one group
+    # per partition (hash would collide).
+    return (
+        dist.withColumn("sg", sg_expr[F.col("src")])
+        .repartitionByRange(min(int(src_groups), len(sg_map)), "sg")
+        .groupBy("sg")
+        .applyInPandas(kernel, "src long, id long, dist long")
+    )
 
 
 def matrix_update(
@@ -1060,78 +886,15 @@ def matrix_update(
     road re-settles its neighborhood once per affected depot without
     re-traversing any graph. Weight increases are out of contract
     (caller falls back to a cold :func:`travel_time_matrix` run)."""
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("e_src"),
-            F.col("dst").cast("long").alias("e_dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .repartition(F.col("e_src"))
-        .sortWithinPartitions("e_src")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError("matrix_update requires non-negative weights")
+    e = _edges(edges, "matrix_update")
+    key = ("src", "id")
     d0 = matrix.select(
         F.col("src").cast("long").alias("src"),
         F.col("node_id").cast("long").alias("id"),
         F.col("dist").cast("long").alias("dist"))
-    seed = (
-        improving_edges.select(
-            F.col("src").cast("long").alias("u"),
-            F.col("dst").cast("long").alias("v"),
-            F.col("w").cast("long").alias("uw"),
-        )
-        .join(d0, F.col("u") == F.col("id"))
-        .groupBy("src", F.col("v").alias("id"))
-        .agg(F.min(F.col("dist") + F.col("uw")).alias("nd"))
-    )
-    dist = d0
-    frontier = (
-        dist.join(seed, ["src", "id"], "full")
-        .select(
-            "src", "id",
-            F.least(F.coalesce("dist", "nd"),
-                    F.coalesce("nd", "dist")).alias("dist"),
-            (F.col("dist").isNull()
-             | (F.col("nd") < F.col("dist"))).alias("_imp"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    dist = frontier.select("src", "id", "dist")
-    frontier = frontier.where("_imp").select("src", "id", "dist")
-    changed = 1
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        cand = (
-            frontier.join(e, frontier.id == e.e_src)
-            .groupBy("src", F.col("e_dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-        )
-        merged = (
-            dist.join(cand, ["src", "id"], "full")
-            .select(
-                "src", "id",
-                F.least(F.coalesce("dist", "nd"),
-                        F.coalesce("nd", "dist")).alias("dist"),
-                (F.col("dist").isNull()
-                 | (F.col("nd") < F.col("dist"))).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.where("_imp").select("src", "id", "dist")
-        changed = frontier.count()
-        dist = merged.select("src", "id", "dist")
-        if changed == 0:
-            break
-    e.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    if changed != 0:
-        raise RuntimeError(
-            f"matrix_update did not converge in {max_iters} rounds; "
-            f"raise max_iters")
+    dist = _frontier_relax(
+        e, d0, key, max_iters, "matrix_update", stats=stats,
+        reseed=_candidates(d0, _cast_edges(improving_edges), key))
     return dist.select("src", F.col("id").alias("node_id"), "dist")
 
 
@@ -1149,56 +912,10 @@ def travel_time_matrix(
     the SAME shuffles, so k sources cost one traversal with k× frontier
     rows, not k traversals — the standard batched-SSSP trick.
     """
-    spark = edges.sparkSession
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("e_src"),
-            F.col("dst").cast("long").alias("e_dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .repartition(F.col("e_src"))
-        .sortWithinPartitions("e_src")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError("travel_time_matrix requires non-negative weights")
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in sources], "src long, id long, dist long"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    changed = 1
-    for _ in range(max_iters):
-        cand = (
-            frontier.join(e, frontier.id == e.e_src)
-            .groupBy("src", F.col("e_dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-        )
-        merged = (
-            dist.join(cand, ["src", "id"], "full")
-            .select(
-                "src",
-                "id",
-                F.least(
-                    F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("nd") < F.col("dist"))
-                ).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.where("_imp").select("src", "id", "dist")
-        changed = frontier.count()
-        dist = merged.select("src", "id", "dist")
-        if changed == 0:
-            break
-    e.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"travel_time_matrix did not converge in {max_iters} rounds "
-            f"({changed} entries still improving); raise max_iters"
-        )
+    e = _edges(edges, "travel_time_matrix")
+    key = ("src", "id")
+    dist = _frontier_relax(e, _seed(edges.sparkSession, sources, key), key,
+                           max_iters, "travel_time_matrix")
     return dist.select("src", F.col("id").alias("node_id"), "dist")
 
 
@@ -1261,8 +978,6 @@ def landmark_dist_table(edges: DataFrame, landmarks: list[int],
     return pairs.select("id", arr.alias("ldists"))
 
 
-
-
 def astar_route(
     edges: DataFrame,
     source: int,
@@ -1302,19 +1017,7 @@ def astar_route(
     shuffle per round, plus an id-keyed join against the (cached,
     node-keyed) landmark table.
     """
-    spark = edges.sparkSession
-    e = persist(
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-            F.col("w").cast("long").alias("w"),
-        )
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-    )
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
-        e.unpersist()
-        raise ValueError("astar_route requires non-negative weights")
+    e = _edges(edges, "astar_route")
     if slack is None:
         wmax = e.agg(F.max("w")).collect()[0][0] or 1
         slack = int(wmax)
@@ -1338,9 +1041,7 @@ def astar_route(
 
     inf = 1 << 62
     best = inf
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "id long, dist long"
-    ).localCheckpoint(eager=True)
+    dist = _seed(edges.sparkSession, [source], ("id",))
     front = dist.select("id").localCheckpoint(eager=True)
     rounds, expanded = 0, 0
     converged = False
@@ -1361,25 +1062,7 @@ def astar_route(
             .select("id", "dist")
         defer = fr.where((F.col("f") > thr) & (F.col("f") < best)) \
             .select("id")
-        cand = (
-            expand.join(e, expand.id == e.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-        )
-        merged = (
-            dist.join(cand, "id", "full")
-            .select(
-                "id",
-                F.least(
-                    F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("nd") < F.col("dist"))
-                ).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        merged = _merge(dist, _candidates(expand, e, ("id",)), ("id",))
         # ONE agg: improvement count + incumbent (dangling-fold style)
         row = merged.agg(
             F.sum(F.col("_imp").cast("long")).alias("chg"),

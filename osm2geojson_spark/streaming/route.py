@@ -69,7 +69,9 @@ def _run_route_stream(
         "incremental": 0,
         "cold": 0,
     }
-    state["dist"] = cold_fn(state["edges"]).localCheckpoint(eager=True)
+    # routing entry points return a projection over their final
+    # checkpoint, so the state needs no checkpoint of its own
+    state["dist"] = cold_fn(state["edges"])
     publish_fn(state["dist"])
 
     def handle(bdf: DataFrame, batch_id: int) -> None:
@@ -102,7 +104,6 @@ def _run_route_stream(
                 F.col("o_w").isNull() | (F.col("w") < F.col("o_w"))
             ).select("src", "dst", "w")
             state["dist"] = incr_fn(new_edges, state["dist"], improving)
-        state["dist"] = state["dist"].localCheckpoint(eager=True)
         publish_fn(state["dist"])
 
     run_available_now(updates.writeStream.foreachBatch(handle))

@@ -53,7 +53,7 @@ COLLECT_WHITELIST = {
     "sources/osm_xml.py": 1,      # byte-budgeted split fragments
     "spatial/dissolve.py": 1,     # strip boundary table (O(#strips))
     "spatial/pip.py": 2,          # guarded broadcast polygon contract
-    "spatial/route.py": 7,        # per-round frontier scalars/block ids
+    "spatial/route.py": 6,        # per-round frontier scalars/block ids
     "spatial/viewshed.py": 1,     # observer row (O(1))
     "spatial/zonal.py": 1,        # guarded broadcast zone contract
 }
@@ -67,6 +67,14 @@ _COLLECT = re.compile(r"\.\s*collect\s*\(\s*\)")
 STREAM_SUBSTRATE = {"streaming/events.py": 1}
 _READ_STREAM = re.compile(r"\.\s*readStream\b")
 _AVAILABLE_NOW = re.compile(r"trigger\s*\(\s*availableNow\s*=\s*True\s*\)")
+# The routing substrate: every routing entry point (and spatial/dt.py)
+# merges labels through route._merge and checks weights in the edge
+# prologue route._edges, so each text appears exactly once. Matched on
+# the raw source, strings included.
+ROUTE_SUBSTRATE = (
+    ('F.coalesce("dist", "nd")', "", "_merge"),
+    ("requires non-negative weights", "spatial/", "_edges"),
+)
 
 
 def _py_files():
@@ -149,3 +157,17 @@ def test_streams_start_in_one_substrate():
             f"{pattern.pattern} outside the streaming substrate — read "
             f"and launch through streaming/events.{helper}.\n"
             f"found={got}\nwhitelist={STREAM_SUBSTRATE}")
+
+
+def test_routes_relax_in_one_substrate():
+    for needle, under, helper in ROUTE_SUBSTRATE:
+        got = {}
+        for rel, path in _py_files():
+            if rel.startswith(under):
+                with open(path, encoding="utf-8") as fh:
+                    n = fh.read().count(needle)
+                if n:
+                    got[rel] = n
+        assert got == {"spatial/route.py": 1}, (
+            f"{needle!r} outside the routing substrate — relax through "
+            f"spatial/route.{helper}.\nfound={got}")

@@ -55,9 +55,22 @@ def test_negative_weight_rejected(spark):
 
 
 def test_nonconvergence_raises(spark):
+    from osm2geojson_spark.spatial.route import (
+        matrix_update,
+        travel_time_matrix,
+    )
+
     e = _edges_df(spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1)])
     with pytest.raises(RuntimeError, match="did not converge"):
         shortest_paths(e, 0, max_iters=2)
+    # the same loop keyed (src, id): cold matrix, and a reseed whose
+    # improvement needs two more hops than max_iters allows
+    with pytest.raises(RuntimeError, match="did not converge"):
+        travel_time_matrix(e, [0], max_iters=2)
+    faster = _edges_df(spark, [(0, 1, 0), (1, 2, 1), (2, 3, 1)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        matrix_update(faster, travel_time_matrix(e, [0]),
+                      _edges_df(spark, [(0, 1, 0)]), max_iters=1)
 
 
 def test_grid_equals_dijkstra(spark):

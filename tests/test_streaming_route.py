@@ -161,16 +161,29 @@ def test_matrix_update_direct(spark):
 
     merged = _apply_upserts(pyref.grid_graph(N), B1)
     e_new = spark.createDataFrame(merged, "src long, dst long, w long")
+    improving = spark.createDataFrame(
+        [(u, v, w) for u, v, w, _ in B1], "src long, dst long, w long")
     depots = [0, 77]
     m0 = travel_time_matrix(grid_edges(spark, N), depots)
     got = sorted(
         (r.src, r.node_id, r.dist)
-        for r in matrix_update(
-            e_new, m0,
-            spark.createDataFrame(
-                [(u, v, w) for u, v, w, _ in B1],
-                "src long, dst long, w long")).collect())
+        for r in matrix_update(e_new, m0, improving).collect())
     want = sorted(
         (s, node, dv)
         for s in depots for node, dv in pyref.dijkstra(merged, s).items())
     assert got == want
+    # one depot: the (src, id)-keyed update equals the id-keyed
+    # sssp_update on the same improving edges, round for round
+    st_m, st_s = {}, {}
+    one = sorted(
+        (r.node_id, r.dist)
+        for r in matrix_update(
+            e_new, travel_time_matrix(grid_edges(spark, N), [0]), improving,
+            stats=st_m).collect())
+    single = sorted(
+        (r.node_id, r.dist)
+        for r in sssp_update(
+            e_new, shortest_paths(grid_edges(spark, N), 0), improving,
+            stats=st_s).collect())
+    assert one == single == sorted(pyref.dijkstra(merged, 0).items())
+    assert st_m["rounds"] == st_s["rounds"]
